@@ -209,7 +209,7 @@ object Cli {
     * (codes bucketed by the probe key + the full-vector rerank table
     * bucketed by corpus_id) and answer the query vectors' top-k from
     * it — probe, code-only approximate scoring, k·refine shortlist,
-    * exact rerank. Everything rides the laddered pqServingExprs
+    * exact rerank. Everything rides the laddered Similarity.pqServing
     * kernels, so the answers equal Similarity.ivfPqTopKSized
     * bit-for-bit (the single-window shortlist is the stream twin's
     * equality-preserving form of the two-phase rerank — same total
@@ -219,21 +219,22 @@ object Cli {
                            table: String, print: String => Unit): Int = {
     import graft.operators.Similarity
     import org.apache.spark.sql.expressions.Window
+    import Similarity.PqIndex
+    import graft.functions.Codebooks.PqBook
     val n = emb.count()
-    // -f swaps in the FITTED serving quartet (laddered coarse k-means +
-    // residual book fitted against it — the r16/r17 recall answer); -r
-    // dials the probed fraction (probesForRecall). Both builders are the
-    // ones the registered rows ride, so command answers stay bit-equal
-    // to the library operators (CliSpec).
+    // -f swaps in the FITTED index (laddered coarse k-means + narrow
+    // residual book fitted against it — the r16/r17 recall answer), -q
+    // the 16x64 book; -r dials the probed fraction (probesForRecall).
+    // The builder is the one the registered rows ride, so command
+    // answers stay bit-equal to the library operators (CliSpec).
     val baseProbes = Similarity.probesForRecall(o.recall)
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      if (o.quality) Similarity.pqFittedServingExprs(
-        emb, Similarity.sizedProbes(baseProbes, n), Similarity.sizedNlist(n),
-        pqK = 64, pqSeedRowBase = 41000, pqM = 16, pqFitSample = 8192)
-      else if (o.fitted) Similarity.pqFittedServingExprs(
-        emb, Similarity.sizedProbes(baseProbes, n), Similarity.sizedNlist(n))
-      else Similarity.pqServingExprs(
-        emb, Similarity.sizedProbes(baseProbes, n), Similarity.sizedNlist(n))
+    val index =
+      if (o.quality) PqIndex.Fitted(PqBook.M16)
+      else if (o.fitted) PqIndex.Fitted(PqBook.Narrow)
+      else PqIndex.Formula
+    val (bucketCol, probesCol, codeCol, scoreCol) = Similarity.pqServing(emb, index,
+      Similarity.sizedProbes(baseProbes, n), Similarity.sizedNlist(n),
+      Similarity.sizedKmFitModulus(n))
     val refine = Similarity.sizedRefine(n) * (if (o.quality) 4 else 1)
     val isQuery = col("vec_id") < 8
     val v = Similarity.vectors(emb)
@@ -399,7 +400,7 @@ object Cli {
           // cosine neighbors for the query vectors FROM a compact
           // (bucket, codes) index table built here — the gated
           // sim_topk_ivf_pq serving row's plan, kernels from the shared
-          // pqServingExprs quartet, so command output == the library
+          // Similarity.pqServing quartet, so command output == the library
           // operator bit-for-bit (CliSpec)
           case "query" =>
             val Seq(srcName, table) = o.positional.toSeq

@@ -32,6 +32,10 @@ object RecallSweep {
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val isQuery = col("vec_id") < 8
     val S = graft.operators.Similarity
+    import S.PqIndex
+    import graft.functions.Codebooks.PqBook
+    val fittedNarrow = PqIndex.Fitted(PqBook.Narrow)
+    val fittedWide = PqIndex.Fitted(PqBook.Wide)
     val exactCos = S.bruteForceTopK(emb, isQuery, k = 10)
       .select("query_id", "corpus_id").cache()
     val exactMips = S.mipsTopK(emb, isQuery, k = 10)
@@ -78,7 +82,7 @@ object RecallSweep {
     // the FITTED residual book on the same ladder (r16, r15 VERDICT #1):
     // same coarse books / probes / shortlist — the delta vs the line
     // above is pure residual-book quality
-    val rResFit = S.ivfPqTopKResFitted(emb, isQuery, k = 10)
+    val rResFit = S.ivfPqTopKSized(emb, isQuery, k = 10, index = PqIndex.ResFit)
       .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
     println(f"[recall-sweep] cosine-IVF-PQ(sized, FITTED residual book) recall=$rResFit%.3f")
     // the FULLY-fitted ladder (r16): laddered coarse k-means + residual
@@ -106,22 +110,22 @@ object RecallSweep {
     val rFitHr = S.ivfPqTopKFittedSized(emb, isQuery, k = 10, probes = hi)
       .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
     println(f"[recall-sweep] cosine-IVF-PQ(sized, FITTED x HIGH probes — fitted_hr) recall=$rFitHr%.3f")
-    val rFitR2 = S.ivfPqTopKFittedSizedRefine(emb, isQuery, k = 10, refineMul = 2)
+    val rFitR2 = S.ivfPqTopKSized(emb, isQuery, k = 10, index = fittedNarrow, refineMul = 2)
       .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    val rFitR4 = S.ivfPqTopKFittedSizedRefine(emb, isQuery, k = 10, refineMul = 4)
+    val rFitR4 = S.ivfPqTopKSized(emb, isQuery, k = 10, index = fittedNarrow, refineMul = 4)
       .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
     println(f"[recall-sweep] fitted refine-boost: x2=$rFitR2%.3f x4=$rFitR4%.3f (vs x1 $rFitSized%.3f)")
-    val rFitW = S.ivfPqTopKFittedSizedWide(emb, isQuery, k = 10)
+    val rFitW = S.ivfPqTopKSized(emb, isQuery, k = 10, index = fittedWide)
       .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    val rFitWHr = S.ivfPqTopKFittedSizedWide(emb, isQuery, k = 10, probes = hi)
+    val rFitWHr = S.ivfPqTopKSized(emb, isQuery, k = 10, probes = hi, index = fittedWide)
       .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
     println(f"[recall-sweep] fitted WIDE book (K=64): standard=$rFitW%.3f high=$rFitWHr%.3f")
     // the two WINNING levers composed (sf1 showed probes non-binding on
     // the PQ rows but refine and code width both binding)
-    val rFitWR4 = S.ivfPqTopKFittedSizedWide(emb, isQuery, k = 10, refineMul = 4)
+    val rFitWR4 = S.ivfPqTopKSized(emb, isQuery, k = 10, index = fittedWide, refineMul = 4)
       .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    val rFitWR4Hr = S.ivfPqTopKFittedSizedWide(emb, isQuery, k = 10, probes = hi,
-      refineMul = 4)
+    val rFitWR4Hr = S.ivfPqTopKSized(emb, isQuery, k = 10, probes = hi,
+      index = fittedWide, refineMul = 4)
       .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
     println(f"[recall-sweep] fitted WIDE x refine4: standard=$rFitWR4%.3f high=$rFitWR4Hr%.3f")
     exactCos.unpersist(); exactMips.unpersist()

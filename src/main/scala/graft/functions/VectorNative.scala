@@ -162,9 +162,44 @@ object Codebooks {
   val PqM = 8
   val PqSub: Int = Dim / PqM
   val PqK = 16
-  val pqCents: Array[Array[Array[Double]]] =
+  // lazy: PqBook's cases read PqM/PqK/Dim during their own init, so the
+  // object init must not reach back into PqBook
+  lazy val pqCents: Array[Array[Array[Double]]] =
     Array.tabulate(PqM, PqK, PqSub)((m, k, d) =>
-      (((1103515245L * ((400 + m * PqK + k) * Dim + d) + 12345L) % 2001L) - 1000L) / 4000.0)
+      (((1103515245L * PqBook.Narrow.seedPosition(m, k, d) + 12345L) % 2001L) - 1000L) / 4000.0)
+
+  /** The residual-PQ book shapes — the single source of each book's
+    * subspace count `m`, codes per subspace `k`, fit sample (first
+    * `fitSample` vec_ids) and LCG seed region (rows `seedRowBase`..,
+    * stride Dim). A closed set: a new shape is a new case here plus a
+    * fresh, ledger-disjoint region (SimilaritySpec pins the raw
+    * positions). The fit sample keeps rows-per-cell density at the
+    * narrow book's 128 for the 16-subspace book (sample = 2048·k/16);
+    * the 8×64 book keeps the 2048-row sample it was measured on.
+    *
+    *   - Narrow: 8×16, 2048 rows, rows 400..527 — the serving default
+    *     and the [[pqCents]] formula book's own region;
+    *   - Wide: 8×64, 2048 rows, rows 30000..30511 (the hq arm);
+    *   - M16: 16×64, 8192 rows, rows 41000..42023 (the m16 arm).
+    *
+    * Rows 40000..40255 (a 16×16 book) stay RESERVED: that shape was
+    * measured and has no caller, and its region must not be reused.
+    */
+  sealed abstract class PqBook(val label: String, val m: Int, val k: Int,
+                               val fitSample: Int, val seedRowBase: Int) {
+    val sub: Int = Dim / m
+
+    /** Raw LCG generator position of seed component d of code k in
+      * subspace m — (base + m·K + k)·Dim + d, d < sub ≤ Dim. */
+    def seedPosition(mi: Int, ki: Int, d: Int): Long =
+      (seedRowBase + mi * k + ki).toLong * Dim + d
+  }
+
+  object PqBook {
+    case object Narrow extends PqBook("narrow", PqM, PqK, 2048, 400)
+    case object Wide extends PqBook("wide", 8, 64, 2048, 30000)
+    case object M16 extends PqBook("m16", 16, 64, 8192, 41000)
+  }
 
   private[functions] val planesArr: Array[Array[Double]] = planes.map(_.toArray).toArray
   private[graft] val centroidsArr: Array[Array[Double]] = centroids.map(_.toArray).toArray

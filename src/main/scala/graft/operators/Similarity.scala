@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Codebooks
+import graft.functions.Codebooks.PqBook
 import graft.functions.VectorFunctions._
 
 /** Embedding similarity operators (SURVEY.md §2c): exact cosine top-k as
@@ -62,6 +63,14 @@ object Similarity {
       .createOrReplaceTempFunction(name, builder, "built-in")
     name
   }
+
+  /** Codebook row norms, summed in index order (the fold the oracle
+    * literals are computed with), and the unit rows ĉ = c/‖c‖. */
+  private def rowNorms(cents: Array[Array[Double]]): Array[Double] =
+    cents.map(c => math.sqrt(c.map(x => x * x).sum))
+
+  private def unitRows(cents: Array[Array[Double]], cnorms: Array[Double]): Array[Array[Double]] =
+    cents.zip(cnorms).map { case (c, nn) => c.map(_ / nn) }
 
   /** (vec_id, e: array<double>, nrm) — shared normalized-view projection. */
   def vectors(emb: DataFrame): DataFrame = {
@@ -360,7 +369,7 @@ object Similarity {
     val n = emb.count()
     val nlist = sizedNlist(n)
     val cents = fitCentroidsWithModulus(emb, nlist, iters, sizedKmFitModulus(n))
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+    val cnorms = rowNorms(cents)
     val pb = sizedProbes(probes, n)
     val bucketName = registerFitFunction(emb, "graft_knn_bucket_fitted")(
       exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
@@ -425,8 +434,7 @@ object Similarity {
     if (nlist == NCentroids)
       (expr("graft_ivf_bucket(e)"), expr(s"graft_ivf_probes(e, $probes)"))
     else {
-      val cents = Codebooks.centroidsFor(nlist).map(_.toArray).toArray
-      val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+      val (cents, cnorms) = formulaCoarse(nlist)
       registerOnce(emb, s"graft_ivf_bucket_$nlist")(
         exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
       registerOnce(emb, s"graft_ivf_probes_${nlist}_$probes")(
@@ -501,7 +509,9 @@ object Similarity {
                    iters: Int = 3): Array[Array[Double]] =
     fitCentroidsWithModulus(emb, k, iters, sizedKmFitModulus(emb.count()))
 
-  /** [[fitCentroids]] with an EXPLICIT fit modulus — the spec hook: at
+  /** [[fitCentroids]] with an EXPLICIT fit modulus. The laddered
+    * serving paths pass [[sizedKmFitModulus]] of the count they already
+    * took, so a call counts the corpus once. It is also the spec hook: at
     * driver scales the ladder is identity, so the sampled arm is pinned
     * by forcing m > 1 and asserting equality with a pre-filtered fit.
     */
@@ -517,9 +527,9 @@ object Similarity {
     require(m >= 1L, s"fit modulus must be >= 1, got $m")
     // NOTE (r18, measured): spreading/repartitioning this fit frame was
     // tried and REJECTED — the per-round cost is ~0.3 s of JOB overhead
-    // at any partition count (1/2/4/8/32 all ~0.3 s/round warm,
-    // ProfFit2), not assign compute, so a width repair buys nothing and
-    // the raw-row exchange adds cost. The fix that works is below:
+    // at any partition count (1/2/4/8/32 all ~0.3 s/round warm in a
+    // partition-count sweep), not assign compute, so a width repair buys
+    // nothing and the raw-row exchange adds cost. The fix that works is below:
     // the sample is ≤ KmFitCap rows BY DESIGN, so the recurrence runs
     // DRIVER-LOCAL on one collected sample (the tokenizer_fit
     // fitLocal / fitPqCodebooks precedent) — 1 job instead of 1+iters.
@@ -540,7 +550,7 @@ object Similarity {
     * corpus scale, so the recurrence collects it ONCE (~32 MB ceiling:
     * KmFitCap × 65 fp doubles) and iterates locally — 1 Spark job
     * instead of 1 + iters (measured: each distributed round cost ~0.3 s
-    * of pure job overhead at ANY partition count, ProfFit2; the whole
+    * of pure job overhead at ANY partition count; the whole
     * local fit runs in the time one round took). The tokenizer_fit
     * fitLocal / fitPqCodebooks precedent: fit OFFLINE on the bounded
     * sample, keep corpus-wide ENCODING distributed.
@@ -557,8 +567,13 @@ object Similarity {
                                   dim: Int, iters: Int): Array[Array[Double]] = {
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     val rows: Array[org.apache.spark.sql.catalyst.util.ArrayData] =
-      v.collect().map(r =>
-        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](0).toArray))
+      v.collect().map { r =>
+        val a = r.getSeq[Double](0).toArray
+        // fail on the driver, naming the width, before any worker runs
+        require(a.length == dim,
+          s"fitLoopLocal: a fit row has ${a.length} components, expected $dim")
+        UnsafeArrayData.fromPrimitiveArray(a)
+      }
     var cents = seeds
     val k = seeds.length
     val ones = Array.fill(k)(1.0)
@@ -568,8 +583,11 @@ object Similarity {
       val cur = cents
       val partCnt = Array.ofDim[Long](nThreads, k)
       val partSum = Array.ofDim[Long](nThreads, k, dim)
+      // a worker's throw must fail the fit (as the distributed twin's job
+      // would), never merge its partial sums into silently wrong centroids
+      val failed = new Array[Throwable](nThreads)
       val threads = (0 until nThreads).map { t =>
-        val th = new Thread(() => {
+        val th = new Thread(() => try {
           val cnt = partCnt(t); val sm = partSum(t)
           var i = t // strided split — balanced, no chunk arithmetic
           while (i < rows.length) {
@@ -585,10 +603,15 @@ object Similarity {
             }
             i += nThreads
           }
-        })
+        } catch { case e: Throwable => failed(t) = e })
         th.setDaemon(true); th.start(); th
       }
       threads.foreach(_.join())
+      // join() orders each worker's write of failed(t) before this read
+      failed.find(_ != null).foreach { e =>
+        failed.filter(f => f != null && (f ne e)).foreach(e.addSuppressed)
+        throw e
+      }
       val next = cur.map(_.clone())
       var b = 0
       while (b < k) {
@@ -664,26 +687,26 @@ object Similarity {
     * the geometry the index serves), seeded from the rows-600 MIPS LCG
     * integers (the seed == formula-book pattern [[Codebooks.seedCentroidsFp]]
     * sets). Engine-exact end to end: the augmented components are fixed
-    * IEEE shapes over the exact corpus max norm, the rest is the integer
-    * recurrence — so the fitted book unrolls as DuckDB CTEs and the
-    * serving row full-hash-gates, like the cosine kmeans rows.
+    * IEEE shapes over the exact corpus max norm `maxNorm`, the rest is
+    * the integer recurrence — so the fitted book unrolls as DuckDB CTEs
+    * and the serving row full-hash-gates, like the cosine kmeans rows.
+    *
+    * The fit passes scan the deterministic minstd sample of
+    * `fitModulus` (exactly as in [[fitCentroids]], r17), while the
+    * caller's max-norm scan and bucket ASSIGNMENT cover every vector —
+    * identity at every gated scale through sf1, SQL-replayable via the
+    * oracle's kfsizing/vfit CTEs beyond. The serving caller derives
+    * both inputs once and shares them with its plan.
     */
-  private[graft] def fitMipsCentroids(emb: DataFrame, isQuery: Column,
-                                      k: Int = NCentroids,
-                                      iters: Int = 3): Array[Array[Double]] = {
+  private[graft] def fitMipsCentroids(emb: DataFrame, isQuery: Column, k: Int,
+                                      iters: Int, fitModulus: Long,
+                                      maxNorm: Double): Array[Array[Double]] = {
     val v0 = vectors(emb)
-    val m = v0.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
-    // the deterministic minstd fit sample, exactly as in
-    // [[fitCentroids]] (r17): centroid quality needs O(k·10³) vectors,
-    // not all N, while the max-norm scan and bucket ASSIGNMENT still
-    // cover every vector — identity at every gated scale through sf1,
-    // SQL-replayable via the oracle's kfsizing/vfit CTEs beyond
-    val fm = sizedKmFitModulus(emb.count())
-    val base = if (fm > 1L) v0.filter(kmFitFilter(fm)) else v0
+    val base = if (fitModulus > 1L) v0.filter(kmFitFilter(fitModulus)) else v0
     val va = base.withColumn("ea",
         when(isQuery, concat(col("e"), array(lit(0.0))))
           .otherwise(concat(col("e"),
-            array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm"))))))
+            array(sqrt(lit(maxNorm) * lit(maxNorm) - col("nrm") * col("nrm"))))))
       .withColumn("xh", expr("graft_fp_unit(ea)"))
       .filter(col("xh").isNotNull)
       .select(col("xh"))
@@ -692,6 +715,11 @@ object Similarity {
     // region beyond — laddered fits without touching gated small fits
     fitLoopLocal(va, Codebooks.fpMipsCentroidsFor(k), Dim + 1, iters)
   }
+
+  /** The corpus max norm M of the Bachrach augmentation — a one-row
+    * driver maximum (the sanctioned one-row-collect category). */
+  private def corpusMaxNorm(v: DataFrame, isQuery: Column): Double =
+    v.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
 
   /** MIPS-IVF over the DATA-FITTED augmented codebook — the
     * sim_topk_ivf_kmeans parity for the MIPS family (r15 VERDICT #6:
@@ -704,49 +732,36 @@ object Similarity {
     */
   def mipsIvfTopKFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
                         probes: Int = 8, iters: Int = 3): DataFrame =
-    mipsIvfTopKFittedNlist(emb, isQuery, k, probes, NCentroids, iters)
+    mipsIvfFitted(emb, isQuery, k, probes, NCentroids, iters, emb.count())
 
   /** [[mipsIvfTopKFitted]] on the CORPUS LADDERS (r16 — the MIPS face
     * of the fitted serving ladder): the augmented-space k-means fits
     * [[sizedNlist]] books (seeds from the laddered MIPS LCG regions)
     * and probes ride [[sizedProbes]] — identity at every driver-gate
     * scale, so the gated small-fit oracles hold unchanged; the
-    * registered `sim_topk_mips_ivf_fitted` path since r16.
+    * registered `sim_topk_mips_ivf_fitted` path since r16. One count
+    * sizes the ladders and the fit sample.
     */
   def mipsIvfTopKFittedSized(emb: DataFrame, isQuery: Column, k: Int = 10,
                              probes: Int = 8, iters: Int = 3): DataFrame = {
     val n = emb.count()
-    mipsIvfTopKFittedNlist(emb, isQuery, k, sizedProbes(probes, n),
-      sizedNlist(n), iters)
+    mipsIvfFitted(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n), iters, n)
   }
 
-  def mipsIvfTopKFittedNlist(emb: DataFrame, isQuery: Column, k: Int = 10,
-                             probes: Int = 8, nlist: Int = NCentroids,
-                             iters: Int = 3): DataFrame = {
-    val cents = fitMipsCentroids(emb, isQuery, nlist, iters)
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+  /** The fitted MIPS index for a corpus of `n` vectors: one max-norm job
+    * feeds both the fit's augmentation and the serving plan's. */
+  private def mipsIvfFitted(emb: DataFrame, isQuery: Column, k: Int, probes: Int,
+                            nlist: Int, iters: Int, n: Long): DataFrame = {
+    val v = vectors(emb)
+    val m = corpusMaxNorm(v, isQuery)
+    val cents = fitMipsCentroids(emb, isQuery, nlist, iters, sizedKmFitModulus(n), m)
+    val cnorms = rowNorms(cents)
     val bucketName = registerFitFunction(emb, "graft_mips_bucket_fitted")(
       exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
     val probesName = registerFitFunction(emb, "graft_mips_probes_fitted")(
       exprs => graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
-    val v = vectors(emb)
-    val m = v.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
-    val corpus = v.filter(!isQuery)
-      .withColumn("ea",
-        concat(col("e"), array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm")))))
-      .select(col("vec_id").as("corpus_id"),
-        call_function(bucketName, col("ea")).as("bucket"),
-        col("e").as("ec"))
-    val queries = v.filter(isQuery)
-      .withColumn("ea", concat(col("e"), array(lit(0.0))))
-      .select(col("vec_id").as("query_id"),
-        explode(call_function(probesName, col("ea"))).as("bucket"),
-        col("e").as("eq"))
-    val scored = corpus.join(broadcast(queries), "bucket")
-      .select(col("query_id"), col("corpus_id"),
-        expr("graft_dot(eq, ec)").as("cos"))
-      .distinct()
-    rerankTopKTwoPhase(scored, k).withColumnRenamed("cos", "ip")
+    mipsIvfPlan(v, isQuery, k, call_function(bucketName, col("ea")),
+      call_function(probesName, col("ea")), m)
   }
 
   /** IVF ANN over a DATA-DERIVED codebook: fit spherical k-means on the
@@ -761,7 +776,7 @@ object Similarity {
   def ivfTopKFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
                     probes: Int = 8, iters: Int = 3): DataFrame = {
     val cents = fitCentroids(emb, NCentroids, iters)
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+    val cnorms = rowNorms(cents)
     // per-fit names; the builders close over THIS fit's immutable arrays
     val bucketName = registerFitFunction(emb, "graft_ivf_bucket_fitted")(
       exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
@@ -773,19 +788,6 @@ object Similarity {
       call_function(probesName, col("e")))
   }
 
-  /** IVF-PQ ANN — the compact-index 100-TB refinement of [[ivfTopK]]:
-    * corpus vectors live in the index as (coarse bucket, 8 PQ residual
-    * codes) — ~12 bytes instead of 64 doubles — so candidate generation
-    * AND approximate scoring never touch full vectors. Per query:
-    * (1) probe the top-`probes` coarse buckets; (2) score every candidate
-    * by the PQ approximation q̂·(ĉ_b + Σ_m pq_m[code_m]) from the codes
-    * alone; (3) keep the top k·`refine` by approximate score (two-phase —
-    * probed population grows with the corpus); (4) fetch full vectors for
-    * ONLY that shortlist and rerank exactly. At 100 TB step 4 is the only
-    * stage that reads the fat vector table, k·refine rows per query.
-    * Recall vs plain IVF is characterized in SimilaritySpec; `refine`
-    * trades recall against full-vector reads.
-    */
   /** The PQ shortlist's N-ADAPTIVE width (r14 — measured, not assumed:
     * the RecallSweep evidence shows recall at a FIXED k·4 shortlist
     * falls ever further below the probe ceiling as bucket population
@@ -802,122 +804,190 @@ object Similarity {
     if (n <= 4096) 4 else if (n <= 65536) 8
     else if (n <= 1048576) 16 else 32
 
-  /** [[ivfPqTopK]] with the shortlist width AND the coarse books on the
-    * corpus-derived ladders — the registered `sim_topk_ivf_pq` path.
-    * Late r15 (completing the serving-ladder family): nlist + probes
-    * ride sizedNlist/sizedProbes exactly like the full-vector rows —
-    * identity books at every driver-gated scale — and refine keeps its
-    * r14 rsizing ladder. The residual PQ book is nlist-INDEPENDENT
-    * (the same 8×16×8 LCG sub-codebooks quantize residuals against
-    * whichever coarse centroid the vector landed on), so a bigger
-    * coarse book needs no new LCG region: only the coarse cents /
-    * norms / hats swap, which the pluggable PqCode/PqScore kernels
-    * take as constructor references. (The sizing count() is
-    * per-invocation by design — see [[ivfTopKSized]]'s note.)
+  /** IVF-PQ ANN — the compact-index 100-TB refinement of [[ivfTopK]]:
+    * corpus vectors live in the index as (coarse bucket, M PQ residual
+    * codes) — ~12 bytes instead of 64 doubles — so candidate generation
+    * AND approximate scoring never touch full vectors. Per query:
+    * (1) probe the top-`probes` coarse buckets; (2) score every candidate
+    * by the PQ approximation q̂·(ĉ_b + Σ_m pq_m[code_m]) from the codes
+    * alone; (3) keep the top k·`refine` by approximate score (two-phase —
+    * probed population grows with the corpus); (4) fetch full vectors for
+    * ONLY that shortlist and rerank exactly. At 100 TB step 4 is the only
+    * stage that reads the fat vector table, k·refine rows per query.
+    *
+    * WHICH codebooks an index serves from is a value, not an entry point
+    * (the adaptive-index view: parameters picked per workload over ONE
+    * plan and ONE kernel builder, [[pqServing]]). The three indexes:
+    *
+    *   - [[PqIndex.Formula]] — the LCG coarse book at the requested nlist
+    *     plus the LCG narrow residual book ([[Codebooks.pqCents]]);
+    *     name-keyed kernels, nothing fitted (`sim_topk_ivf_pq`);
+    *   - [[PqIndex.ResFit]] — the same LCG coarse book plus a narrow
+    *     residual book fitted against it (`sim_topk_ivf_pq_resfit`). An
+    *     honest negative kept for its evidence: against the RANDOM coarse
+    *     ladder, residuals keep ~76% of the vector energy and the
+    *     MSE-optimal book SHRINKS the tail scores that discriminate true
+    *     matches (sf10 recall 0.100 → 0.050 while MSE halved);
+    *   - [[PqIndex.Fitted]]`(book)` — laddered fixed-point coarse k-means
+    *     ([[fitCentroids]]) plus a residual book of shape `book` fitted
+    *     against THOSE centroids (`sim_topk_ivf_pq_fitted*`): fitting the
+    *     coarse book first compacts clusters, so the residual fit has
+    *     structure to exploit (sf10 0.175 / sf1 0.263).
+    *
+    * The three residual book shapes ([[Codebooks.PqBook]], the single
+    * source of (M, K, fit sample, seed region)): Narrow 8×16 (2048-row
+    * sample, seeds 400..) — the Formula/ResFit shape and the
+    * `fitted`/`fitted_sized`/`fitted_hr` rows; Wide 8×64 (2048, 30000..)
+    * — the `hq` row, NEGATIVE standalone at sf10 (overfits its sample)
+    * but a winner composed with refine ×4; M16 16×64 (8192, 41000..) —
+    * the `m16` row, recall@10 0.963 sf1 / 0.875 sf10 with refine ×4
+    * (subspace count is the dominant dial). K never enters the
+    * per-candidate scoring cost (M table lookups + one Dim-dot).
     */
-  def ivfPqTopKSized(emb: DataFrame, isQuery: Column, k: Int = 10,
-                     probes: Int = 8): DataFrame = {
-    val n = emb.count()
-    ivfPqTopKNlist(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n),
-      sizedRefine(n))
+  sealed trait PqIndex
+  object PqIndex {
+    case object Formula extends PqIndex
+    case object ResFit extends PqIndex
+    final case class Fitted(book: PqBook) extends PqIndex
   }
 
-  /** [[ivfPqTopK]] with an explicit coarse codebook size (the ladder
-    * calls this with [[sizedNlist]]; specs pin small-vs-big shape). */
+  /** The LCG coarse book at `nlist` with its norms — the frozen serving
+    * arrays at the default size, the laddered rows beyond. */
+  private def formulaCoarse(nlist: Int): (Array[Array[Double]], Array[Double]) =
+    if (nlist == NCentroids) (Codebooks.centroidsArr, Codebooks.centroidNorms)
+    else {
+      val cs = Codebooks.centroidsFor(nlist).map(_.toArray).toArray
+      (cs, rowNorms(cs))
+    }
+
+  /** The IVF-PQ serving kernel quartet (bucket, probes, code, score) for
+    * `index` at an explicit nlist — the ONE place the compact index's
+    * kernels are built, shared by batch ([[ivfPqTopKSized]]), the
+    * streaming twin (SimilarityStream.ivfPqTopKStream) and the CLI query
+    * verb, so every face encodes AND scores identically.
+    *
+    * Formula: the fixed fused kernels at the serving default (every gated
+    * plan shape), once-per-session name-keyed kernels per nlist beyond —
+    * the residual book is nlist-INDEPENDENT (it quantizes residuals
+    * against whichever ĉ the vector landed on), so only the coarse
+    * references swap. ResFit: the shared [[ivfServingExprs]] coarse
+    * kernels (byte-identical buckets to the formula row) plus code/score
+    * kernels over a residual book fitted on x̂ − ĉfp
+    * ([[Codebooks.fpCentroidsFor]], the fp twin of the value book).
+    * Fitted: every kernel over the laddered coarse k-means (3 rounds on
+    * the `fitModulus` sample — the caller's one count sizes it) and the
+    * `book` residual fit. Both fits are DETERMINISTIC (integer
+    * arithmetic over a first-rows sample), so every face calling this
+    * builder derives bit-identical books — the guarantee the fixed-book
+    * rows get from registerOnce. Fitted books register under fresh
+    * per-fit names (their builders close over this fit's arrays).
+    */
+  private[graft] def pqServing(emb: DataFrame, index: PqIndex, probes: Int,
+                               nlist: Int, fitModulus: Long): (Column, Column, Column, Column) = {
+    def fittedCodeScore(codeBase: String, scoreBase: String, cents: Array[Array[Double]],
+                        cnorms: Array[Double], pq: Array[Array[Array[Double]]]): (Column, Column) = {
+      val hat = unitRows(cents, cnorms)
+      val codeName = registerFitFunction(emb, codeBase)(
+        exprs => graft.functions.PqCode(exprs.head, cents, cnorms, hat, pq))
+      val scoreName = registerFitFunction(emb, scoreBase)(
+        exprs => graft.functions.PqScore(exprs(0), exprs(1), exprs(2), hat, pq))
+      (call_function(codeName, col("e")),
+        call_function(scoreName, col("eq"), col("bucket"), col("codes")))
+    }
+    index match {
+      case PqIndex.Formula =>
+        val (bucketCol, probesCol) = ivfServingExprs(emb, probes, nlist)
+        if (nlist == NCentroids)
+          (bucketCol, probesCol, expr("graft_pq_code(e)"),
+            expr("graft_pq_score(eq, bucket, codes)"))
+        else {
+          val (cents, cnorms) = formulaCoarse(nlist)
+          val centsHat = unitRows(cents, cnorms)
+          registerOnce(emb, s"graft_pq_code_$nlist")(exprs =>
+            graft.functions.PqCode(exprs.head, cents, cnorms, centsHat,
+              Codebooks.pqCents))
+          registerOnce(emb, s"graft_pq_score_$nlist")(exprs =>
+            graft.functions.PqScore(exprs(0), exprs(1), exprs(2), centsHat,
+              Codebooks.pqCents))
+          (bucketCol, probesCol,
+            call_function(s"graft_pq_code_$nlist", col("e")),
+            call_function(s"graft_pq_score_$nlist",
+              col("eq"), col("bucket"), col("codes")))
+        }
+      case PqIndex.ResFit =>
+        val (bucketCol, probesCol) = ivfServingExprs(emb, probes, nlist)
+        val (cents, cnorms) = formulaCoarse(nlist)
+        val pq = fitPqCodebooks(emb, cents, cnorms,
+          fpRef = Codebooks.fpCentroidsFor(nlist))
+        val (codeCol, scoreCol) = fittedCodeScore(s"graft_pq_code_resfit_$nlist",
+          s"graft_pq_score_resfit_$nlist", cents, cnorms, pq)
+        (bucketCol, probesCol, codeCol, scoreCol)
+      case PqIndex.Fitted(book) =>
+        val cents = fitCentroidsWithModulus(emb, nlist, 3, fitModulus)
+        val cnorms = rowNorms(cents)
+        val pq = fitPqCodebooks(emb, cents, cnorms, book = book)
+        val bucketName = registerFitFunction(emb, "graft_ivf_bucket_pqfit")(
+          exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
+        val probesName = registerFitFunction(emb, "graft_ivf_probes_pqfit")(
+          exprs => graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
+        val (codeCol, scoreCol) = fittedCodeScore("graft_pq_code_fitted",
+          "graft_pq_score_fitted", cents, cnorms, pq)
+        (call_function(bucketName, col("e")), call_function(probesName, col("e")),
+          codeCol, scoreCol)
+    }
+  }
+
+  /** The laddered IVF-PQ serving path — every registered PQ serving row
+    * rides it: coarse nlist + probes on [[sizedNlist]]/[[sizedProbes]]
+    * (identity books at every driver-gated scale), the shortlist on
+    * [[sizedRefine]] × `refineMul`, and the codebooks from `index`. ONE
+    * corpus count sizes all of it, the fitted index's k-means sample
+    * modulus included (the count is per-invocation by design — see
+    * [[ivfTopKSized]]'s note).
+    *
+    * `refineMul` is the shortlist-boost dial: k·refine·mul full-vector
+    * reads per query against the PQ approximation's rank noise — with
+    * residual-code width, the binding recall lever (the probe dial does
+    * NOT move compact-index recall: fitted × high probes == fitted at
+    * sf1 and sf10).
+    */
+  def ivfPqTopKSized(emb: DataFrame, isQuery: Column, k: Int = 10,
+                     probes: Int = 8, index: PqIndex = PqIndex.Formula,
+                     refineMul: Int = 1): DataFrame = {
+    val n = emb.count()
+    val (bucketCol, probesCol, codeCol, scoreCol) =
+      pqServing(emb, index, sizedProbes(probes, n), sizedNlist(n), sizedKmFitModulus(n))
+    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n) * refineMul,
+      bucketCol, probesCol, codeCol, scoreCol)
+  }
+
+  /** The fully-fitted narrow-book index on the corpus ladders — the
+    * registered `sim_topk_ivf_pq_fitted_sized` row and the call the
+    * `ann_serve` benchmark workload times. */
+  def ivfPqTopKFittedSized(emb: DataFrame, isQuery: Column, k: Int = 10,
+                           probes: Int = 8): DataFrame =
+    ivfPqTopKSized(emb, isQuery, k, probes, PqIndex.Fitted(PqBook.Narrow))
+
+  /** The formula index at an explicit coarse codebook size (specs pin
+    * small-vs-big shape; the formula index fits nothing, so no count). */
   def ivfPqTopKNlist(emb: DataFrame, isQuery: Column, k: Int = 10,
                      probes: Int = 8, nlist: Int = NCentroids,
                      refine: Int = 4): DataFrame = {
     val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqServingExprs(emb, probes, nlist)
+      pqServing(emb, PqIndex.Formula, probes, nlist, fitModulus = 1L)
     ivfPqPlan(vectors(emb), isQuery, k, refine, bucketCol, probesCol,
       codeCol, scoreCol)
   }
 
-  /** The PQ serving kernel quartet (bucket, probes, code, score) for an
-    * explicit nlist — the [[ivfServingExprs]] pattern extended to the
-    * compact index: batch and the streaming twin must encode AND score
-    * identically, so the pluggable-codebook kernels are constructed in
-    * exactly one place. The residual PQ book is shared across every
-    * coarse size (it quantizes residuals against whichever ĉ the vector
-    * landed on); only the coarse references swap per nlist.
-    */
-  private[graft] def pqServingExprs(emb: DataFrame, probes: Int,
-                                    nlist: Int): (Column, Column, Column, Column) = {
-    val (bucketCol, probesCol) = ivfServingExprs(emb, probes, nlist)
-    if (nlist == NCentroids)
-      (bucketCol, probesCol, expr("graft_pq_code(e)"),
-        expr("graft_pq_score(eq, bucket, codes)"))
-    else {
-      val cents = Codebooks.centroidsFor(nlist).map(_.toArray).toArray
-      val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-      val centsHat = cents.zip(cnorms).map { case (c, nn) => c.map(_ / nn) }
-      registerOnce(emb, s"graft_pq_code_$nlist")(exprs =>
-        graft.functions.PqCode(exprs.head, cents, cnorms, centsHat,
-          Codebooks.pqCents))
-      registerOnce(emb, s"graft_pq_score_$nlist")(exprs =>
-        graft.functions.PqScore(exprs(0), exprs(1), exprs(2), centsHat,
-          Codebooks.pqCents))
-      (bucketCol, probesCol,
-        call_function(s"graft_pq_code_$nlist", col("e")),
-        call_function(s"graft_pq_score_$nlist",
-          col("eq"), col("bucket"), col("codes")))
-    }
-  }
-
-  /** The FITTED-residual-book serving quartet (r16, r15 VERDICT #1):
-    * the [[pqServingExprs]] shape with the formula residual book
-    * replaced by a per-subspace residual k-means fit against the SAME
-    * laddered coarse book — coarse bucket/probes stay the shared
-    * [[ivfServingExprs]] kernels (value-book assignment, byte-identical
-    * to the formula row's buckets), only the code/score kernels carry
-    * the fitted book. The fit is [[fitPqCodebooks]] over the fp
-    * residuals x̂ − ĉfp (ĉfp = [[Codebooks.fpCentroidsFor]], the
-    * fp-normalized twin of the laddered value book) — engine-exact, so
-    * the oracle unrolls it as CTEs and the row full-hash-gates at every
-    * scale. The fit is DETERMINISTIC (first-maxSample sample, integer
-    * arithmetic), so batch and the streaming twin each calling this
-    * builder produce bit-identical books — the kernel-sharing
-    * guarantee the fixed-book rows get from registerOnce.
-    *
-    * Why this beats the formula book at scale (measured, RecallSweep):
-    * the sized serving row's recall fell to 0.100 at sf10 because the
-    * /4000-scale LCG residual book is blind to the residual
-    * distribution the √N coarse books actually produce — finer coarse
-    * books shrink residual norms, and a fixed-scale random book wastes
-    * its cells. The fitted book adapts per subspace to exactly those
-    * residuals.
-    */
-  private[graft] def pqResFitServingExprs(emb: DataFrame, probes: Int,
-                                          nlist: Int): (Column, Column, Column, Column) = {
-    val (bucketCol, probesCol) = ivfServingExprs(emb, probes, nlist)
-    val (cents, cnorms) =
-      if (nlist == NCentroids) (Codebooks.centroidsArr, Codebooks.centroidNorms)
-      else {
-        val cs = Codebooks.centroidsFor(nlist).map(_.toArray).toArray
-        (cs, cs.map(c => math.sqrt(c.map(x => x * x).sum)))
-      }
-    val centsHat = cents.zip(cnorms).map { case (c, n) => c.map(_ / n) }
-    val pq = fitPqCodebooks(emb, cents, cnorms,
-      fpRef = Codebooks.fpCentroidsFor(nlist))
-    val codeName = registerFitFunction(emb, s"graft_pq_code_resfit_$nlist")(
-      exprs => graft.functions.PqCode(exprs.head, cents, cnorms, centsHat, pq))
-    val scoreName = registerFitFunction(emb, s"graft_pq_score_resfit_$nlist")(
-      exprs => graft.functions.PqScore(exprs(0), exprs(1), exprs(2), centsHat, pq))
-    (bucketCol, probesCol,
-      call_function(codeName, col("e")),
-      call_function(scoreName, col("eq"), col("bucket"), col("codes")))
-  }
-
-  /** [[ivfPqTopKSized]] with the FITTED residual book — the registered
-    * `sim_topk_ivf_pq_resfit` path: coarse books, probes and the
-    * shortlist width all on the corpus-derived ladders, residual codes
-    * from the data-fitted sub-codebooks. */
-  def ivfPqTopKResFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
-                         probes: Int = 8): DataFrame = {
-    val n = emb.count()
+  /** The fully-fitted narrow-book index at the fixed serving-default
+    * nlist and an explicit shortlist width (`sim_topk_ivf_pq_fitted`).
+    * Recall-vs-LCG is characterized in SimilaritySpec. */
+  def ivfPqTopKFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
+                      probes: Int = 8, refine: Int = 4): DataFrame = {
     val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqResFitServingExprs(emb, sizedProbes(probes, n), sizedNlist(n))
-    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n), bucketCol, probesCol,
+      pqServing(emb, PqIndex.Fitted(PqBook.Narrow), probes, NCentroids,
+        sizedKmFitModulus(emb.count()))
+    ivfPqPlan(vectors(emb), isQuery, k, refine, bucketCol, probesCol,
       codeCol, scoreCol)
   }
 
@@ -952,22 +1022,23 @@ object Similarity {
   /** Offline PQ residual sub-codebook fit — the data-derived twin of the
     * LCG [[graft.functions.Codebooks.pqCents]] (round-4 VERDICT #6), in
     * FIXED POINT (round-11 VERDICT #1): per subspace m, plain L2
-    * k-means (PqK codes, first-min assignment, empty codes keep their
+    * k-means (K codes, first-min assignment, empty codes keep their
     * previous center) over the INTEGER residual subvectors x̂ − ĉfp_b
     * (both sides fixed-point at scale S = 10⁶, so residuals, distances,
     * sums and the truncating-division means are all exact integers —
     * order-free, engine-exact, and replayable as unrolled DuckDB CTEs).
     * The coarse bucket b is the SERVING assignment (IvfBucket over the
     * raw e with the fitted codebook — the same cluster structure the
-    * encoder uses). Seeds are the LCG integers at the PQ value scale
-    * (·S/4000 = ·250, exact). Returns value-space doubles (fp/S) so the
-    * serving kernels plug them in unchanged.
+    * encoder uses). Seeds are the LCG integers of the book's own region
+    * at the PQ value scale (·S/4000 = ·250, exact). Returns value-space
+    * doubles (fp/S) so the serving kernels plug them in unchanged.
     *
-    * The sample (first `maxSample` vec_ids, collected) is fitting a
-    * MODEL: codebook quality needs O(PqK·10²) residuals per subspace,
-    * not all N — a 100-TB deployment fits exactly like this, offline on
-    * a sample, while ENCODING (pqCode over the corpus) stays
-    * distributed.
+    * `book` fixes the shape ([[Codebooks.PqBook]]: subspace count, codes
+    * per subspace, seed region) and the sample — the first
+    * `book.fitSample` vec_ids, collected. The sample is fitting a MODEL:
+    * codebook quality needs O(K·10²) residuals per subspace, not all N —
+    * a 100-TB deployment fits exactly like this, offline on a sample,
+    * while ENCODING (pqCode over the corpus) stays distributed.
     *
     * `fpRef` (r16): the fp-scale residual reference when `cents` is NOT
     * already fp-valued — the laddered FORMULA books live at value scale
@@ -978,216 +1049,60 @@ object Similarity {
     */
   def fitPqCodebooks(emb: DataFrame, cents: Array[Array[Double]],
                      cnorms: Array[Double], iters: Int = 5,
-                     maxSample: Int = 2048,
                      fpRef: Array[Array[Double]] = null,
-                     pqK: Int = Codebooks.PqK,
-                     seedRowBase: Int = 400,
-                     pqM: Int = Codebooks.PqM): Array[Array[Array[Double]]] = {
-    // pqK/seedRowBase (r17): the residual-book WIDTH dial — the kernels
-    // derive (M, K, sub) from the codebook shape, so a wider book needs
-    // only more codes per subspace + a fresh LCG seed region (rows
-    // seedRowBase.., stride Dim — the 30000.. region for the K=64
-    // pricing arm; raw positions stay disjoint from every other region).
-    // pqM (r17b): the subspace-COUNT dial — more, narrower subspaces
-    // halve the per-subspace quantization error at 2× the code bytes
-    // and 2× the (still tiny) per-candidate lookup count. Seeds for a
-    // non-default M live in their own regions (40000.. for 16×16,
-    // 41000.. for 16×64; stride Dim, raw positions disjoint — §5
-    // ledger). The seed FORMULA is (base + m·pqK + k)·Dim + d with
-    // d < pqSub ≤ Dim, so rows never collide within a region either.
-    val PqSub = {
-      require(pqM >= 1 && Dim % pqM == 0, s"pqM=$pqM must divide Dim=$Dim")
-      Dim / pqM
-    }
-    require(pqK >= 1 &&
-      (pqK == Codebooks.PqK && pqM == Codebooks.PqM) == (seedRowBase == 400),
-      s"non-default pqK=$pqK/pqM=$pqM needs its own seed region (got base $seedRowBase)")
+                     book: PqBook = PqBook.Narrow): Array[Array[Array[Double]]] = {
     val S = graft.functions.VectorNativeImpl.FpScale
     val ref = if (fpRef == null) cents else fpRef
     val bucketName = registerFitFunction(emb, "graft_pqfit_assign")(
       exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
     // NOTE (r18, measured): a spread here was tried and REJECTED with
-    // the fitCentroids layout variants (ProfFit2: the sample stage is
-    // job-overhead-bound at these row counts — an exchange only adds)
+    // the fitCentroids layout variants (a partition-count sweep: the
+    // sample stage is job-overhead-bound at these row counts — an
+    // exchange only adds)
     val sample = vectors(emb)
       .withColumn("xh", expr("graft_fp_unit(e)"))
       .filter(col("xh").isNotNull)
       .select(col("vec_id"), col("xh"),
         call_function(bucketName, col("e")).as("b"))
-      .orderBy(col("vec_id")).limit(maxSample)
+      .orderBy(col("vec_id")).limit(book.fitSample)
       .collect()
       .map(r => (r.getSeq[Double](1).toArray, r.getInt(2) - 1))
     // integer residuals per sample vector: x̂ − ĉfp_b, componentwise
     val residuals = sample.map { case (xh, b) =>
       Array.tabulate(xh.length)(i => xh(i).toLong - ref(b)(i).toLong)
     }
-    Array.tabulate(pqM) { m =>
+    val (nk, ns) = (book.k, book.sub)
+    Array.tabulate(book.m) { m =>
       val sub = residuals.map(r =>
-        java.util.Arrays.copyOfRange(r, m * PqSub, (m + 1) * PqSub))
+        java.util.Arrays.copyOfRange(r, m * ns, (m + 1) * ns))
       // LCG seed at the PQ scale: value/4000 in unit space = raw·250 fp
-      var codes: Array[Array[Long]] = Array.tabulate(pqK, PqSub)((k, d) =>
-        ((1103515245L * ((seedRowBase + m * pqK + k).toLong * Dim + d) + 12345L) % 2001L - 1000L) * 250L)
+      var codes: Array[Array[Long]] = Array.tabulate(nk, ns)((k, d) =>
+        ((1103515245L * book.seedPosition(m, k, d) + 12345L) % 2001L - 1000L) * 250L)
       for (_ <- 0 until iters) {
-        val sums = Array.fill(pqK, PqSub)(0L)
-        val counts = new Array[Long](pqK)
+        val sums = Array.fill(nk, ns)(0L)
+        val counts = new Array[Long](nk)
         sub.foreach { r =>
           var best = 0
           var bestD = Long.MaxValue
           var kk = 0
-          while (kk < pqK) {
+          while (kk < nk) {
             var s = 0L
             var d = 0
-            while (d < PqSub) { val diff = r(d) - codes(kk)(d); s += diff * diff; d += 1 }
+            while (d < ns) { val diff = r(d) - codes(kk)(d); s += diff * diff; d += 1 }
             if (s < bestD) { bestD = s; best = kk } // strict < = first-min
             kk += 1
           }
           counts(best) += 1
           var d = 0
-          while (d < PqSub) { sums(best)(d) += r(d); d += 1 }
+          while (d < ns) { sums(best)(d) += r(d); d += 1 }
         }
-        codes = Array.tabulate(pqK)(kk =>
+        codes = Array.tabulate(nk)(kk =>
           if (counts(kk) == 0) codes(kk)
           // truncating long division — DuckDB's `//` semantics
-          else Array.tabulate(PqSub)(d => sums(kk)(d) / counts(kk)))
+          else Array.tabulate(ns)(d => sums(kk)(d) / counts(kk)))
       }
       codes.map(_.map(_.toDouble / S))
     }
-  }
-
-  /** IVF-PQ over DATA-DERIVED codebooks: spherical-k-means coarse
-    * centroids ([[fitCentroids]]) + per-subspace residual k-means
-    * ([[fitPqCodebooks]]), baked into the same fused PQ kernels under
-    * per-fit function names, then the identical
-    * probe/code-score/shortlist/rerank plan as [[ivfPqTopK]].
-    * Recall-vs-LCG is characterized in SimilaritySpec.
-    */
-  def ivfPqTopKFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
-                      probes: Int = 8, refine: Int = 4, iters: Int = 3): DataFrame =
-    ivfPqPlanFitted(emb, isQuery, k, probes, refine, iters, NCentroids)
-
-  /** The FULLY-FITTED serving quartet at an explicit nlist — the
-    * [[ivfPqTopKFitted]] construction factored so the LADDERED variant
-    * ([[ivfPqTopKFittedSized]]) and the streaming twin share it (the
-    * fit is deterministic, so every caller derives bit-identical
-    * books).
-    */
-  private[graft] def pqFittedServingExprs(emb: DataFrame, probes: Int,
-                                          nlist: Int, iters: Int = 3,
-                                          pqK: Int = graft.functions.Codebooks.PqK,
-                                          pqSeedRowBase: Int = 400,
-                                          pqM: Int = graft.functions.Codebooks.PqM,
-                                          pqFitSample: Int = 2048)
-      : (Column, Column, Column, Column) = {
-    val cents = fitCentroids(emb, nlist, iters)
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    val hat = cents.zip(cnorms).map { case (c, n) => c.map(_ / n) }
-    val pq = fitPqCodebooks(emb, cents, cnorms, pqK = pqK,
-      seedRowBase = pqSeedRowBase, pqM = pqM, maxSample = pqFitSample)
-    val bucketName = registerFitFunction(emb, "graft_ivf_bucket_pqfit")(
-      exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
-    val probesName = registerFitFunction(emb, "graft_ivf_probes_pqfit")(
-      exprs => graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
-    val codeName = registerFitFunction(emb, "graft_pq_code_fitted")(
-      exprs => graft.functions.PqCode(exprs.head, cents, cnorms, hat, pq))
-    val scoreName = registerFitFunction(emb, "graft_pq_score_fitted")(
-      exprs => graft.functions.PqScore(exprs.head, exprs(1), exprs(2), hat, pq))
-    (call_function(bucketName, col("e")),
-      call_function(probesName, col("e")),
-      call_function(codeName, col("e")),
-      call_function(scoreName, col("eq"), col("bucket"), col("codes")))
-  }
-
-  private def ivfPqPlanFitted(emb: DataFrame, isQuery: Column, k: Int,
-                              probes: Int, refine: Int, iters: Int,
-                              nlist: Int): DataFrame = {
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqFittedServingExprs(emb, probes, nlist, iters)
-    ivfPqPlan(vectors(emb), isQuery, k, refine, bucketCol, probesCol,
-      codeCol, scoreCol)
-  }
-
-  /** The fully-fitted compact index on the CORPUS LADDERS (r16 — the
-    * serving-recall answer the r15 frontier asked for): coarse k-means
-    * at [[sizedNlist]] (seeds from the laddered LCG regions), residual
-    * sub-codebooks fitted against THOSE fitted centroids, probes and
-    * shortlist on [[sizedProbes]]/[[sizedRefine]]. The r16 measurement
-    * that motivates it: against the RANDOM coarse ladder, residuals
-    * keep ~76% of the vector energy and an MSE-optimal residual book
-    * SHRINKS the tail scores that discriminate true matches (recall
-    * fell 0.100 → 0.050 at sf10 even as quantization MSE halved);
-    * fitting the coarse book first compacts clusters so the residual
-    * fit has structure to exploit.
-    */
-  def ivfPqTopKFittedSized(emb: DataFrame, isQuery: Column, k: Int = 10,
-                           probes: Int = 8, iters: Int = 3): DataFrame = {
-    val n = emb.count()
-    ivfPqPlanFitted(emb, isQuery, k, sizedProbes(probes, n), sizedRefine(n),
-      iters, sizedNlist(n))
-  }
-
-  /** Refine-boost pricing arm (r17, r16 VERDICT #1 "also price raising
-    * sizedRefine on the fitted book"): the fitted laddered index with
-    * the shortlist width multiplied — k·refine·mul full-vector reads
-    * per query, the PQ-approximation-noise dial. Measurement surface
-    * for RecallSweep.
-    */
-  def ivfPqTopKFittedSizedRefine(emb: DataFrame, isQuery: Column, k: Int = 10,
-                                 probes: Int = 8, iters: Int = 3,
-                                 refineMul: Int = 2): DataFrame = {
-    val n = emb.count()
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqFittedServingExprs(emb, sizedProbes(probes, n), sizedNlist(n), iters)
-    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n) * refineMul,
-      bucketCol, probesCol, codeCol, scoreCol)
-  }
-
-  /** The WIDE-residual-book pricing arm (r17, r16 VERDICT #7): the
-    * fully-fitted laddered index with `pqK` codes per subspace instead
-    * of the default 16 — encode cost scales with pqK (M·pqK·sub
-    * distances per vector) while SERVING score cost is unchanged (M
-    * table lookups + one Dim-length dot per candidate). Seeds come from
-    * the fresh 30000.. LCG region (stride Dim, raw positions disjoint
-    * from every other region). OPT-IN measurement surface — registered
-    * rows stay on the 8×16×8 book unless the RecallSweep numbers say
-    * otherwise (the resfit-style ship-or-reject discipline, §5/§7).
-    */
-  def ivfPqTopKFittedSizedWide(emb: DataFrame, isQuery: Column, k: Int = 10,
-                               probes: Int = 8, iters: Int = 3,
-                               pqK: Int = 64, refineMul: Int = 1): DataFrame = {
-    val n = emb.count()
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqFittedServingExprs(emb, sizedProbes(probes, n), sizedNlist(n), iters,
-        pqK = pqK, pqSeedRowBase = 30000)
-    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n) * refineMul,
-      bucketCol, probesCol, codeCol, scoreCol)
-  }
-
-  /** The SHAPED fitted-book measurement surface (r17b): every residual-
-    * book dial exposed at once — subspace count `pqM` (more, narrower
-    * subspaces: quantization error falls, code bytes and the tiny
-    * per-candidate lookup count double), code width `pqK`, and the fit
-    * sample size `pqFitSample` (the r17 sf10 finding: the K=64 book
-    * OVERFITS a 2048-row residual sample — 32 rows/cell vs the narrow
-    * book's 128; pinning rows-per-cell means sample = 2048·(pqK/16)).
-    * `pqSeedRowBase` must be the §5-ledger region matching (pqM, pqK):
-    * 400 = 8×16, 30000 = 8×64, 40000 = 16×16, 41000 = 16×64. OPT-IN
-    * measurement surface feeding RecallSweep — registration follows the
-    * ship-or-reject numbers.
-    */
-  def ivfPqTopKFittedSizedShaped(emb: DataFrame, isQuery: Column, k: Int = 10,
-                                 probes: Int = 8, iters: Int = 3,
-                                 pqM: Int = graft.functions.Codebooks.PqM,
-                                 pqK: Int = graft.functions.Codebooks.PqK,
-                                 pqFitSample: Int = 2048,
-                                 pqSeedRowBase: Int = 400,
-                                 refineMul: Int = 1): DataFrame = {
-    val n = emb.count()
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqFittedServingExprs(emb, sizedProbes(probes, n), sizedNlist(n), iters,
-        pqK = pqK, pqSeedRowBase = pqSeedRowBase, pqM = pqM,
-        pqFitSample = pqFitSample)
-    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n) * refineMul,
-      bucketCol, probesCol, codeCol, scoreCol)
   }
 
   /** PQ QUANTIZATION-ERROR decision card (r17b) — the number a
@@ -1212,12 +1127,12 @@ object Similarity {
     */
   def pqErrorCard(emb: DataFrame): DataFrame = {
     val n = emb.count()
-    val nlist = sizedNlist(n)
-    val cents = fitCentroids(emb, nlist, 3)
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    val hat = cents.zip(cnorms).map { case (c, nn) => c.map(_ / nn) }
-    def bookRow(label: String, pq: Array[Array[Array[Double]]]): DataFrame = {
-      val errName = registerFitFunction(emb, s"graft_pq_error_$label")(
+    val cents = fitCentroidsWithModulus(emb, sizedNlist(n), 3, sizedKmFitModulus(n))
+    val cnorms = rowNorms(cents)
+    val hat = unitRows(cents, cnorms)
+    def bookRow(book: PqBook): DataFrame = {
+      val pq = fitPqCodebooks(emb, cents, cnorms, book = book)
+      val errName = registerFitFunction(emb, s"graft_pq_error_${book.label}")(
         exprs => graft.functions.PqError(exprs.head, cents, cnorms, hat, pq))
       vectors(emb)
         .select(call_function(errName, col("e")).as("err_fp"))
@@ -1229,15 +1144,11 @@ object Similarity {
           sum(when(col("err_fp") >= 100000L && col("err_fp") < 500000L, 1L)
             .otherwise(0L)).as("n_err_mid"),
           sum(when(col("err_fp") >= 500000L, 1L).otherwise(0L)).as("n_err_hi"))
-        .select(lit(label).as("book"), col("n_vecs"), col("sum_err_fp"),
+        .select(lit(book.label).as("book"), col("n_vecs"), col("sum_err_fp"),
           col("max_err_fp"), col("n_err_lo"), col("n_err_mid"), col("n_err_hi"))
     }
-    val narrow = bookRow("narrow",
-      fitPqCodebooks(emb, cents, cnorms))
-    val m16 = bookRow("m16",
-      fitPqCodebooks(emb, cents, cnorms, maxSample = 8192, pqK = 64,
-        seedRowBase = 41000, pqM = 16))
-    narrow.unionAll(m16).orderBy(col("book"))
+    Seq(PqBook.Narrow, PqBook.M16).map(bookRow).reduce(_ unionAll _)
+      .orderBy(col("book"))
   }
 
   /** Cosine near-dup pairs: banded-LSH candidates, exact cosine verify.
@@ -1533,13 +1444,12 @@ object Similarity {
   def mipsIvfTopKNlist(emb: DataFrame, isQuery: Column, k: Int = 10,
                        probes: Int = 8, nlist: Int = NCentroids): DataFrame = {
     val v = vectors(emb)
-    val m = v.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
     val (cents, cnorms) =
       if (nlist == NCentroids)
         (Codebooks.mipsCentroidsArr, Codebooks.mipsCentroidNorms)
       else {
         val cs = Codebooks.mipsCentroidsFor(nlist)
-        (cs, cs.map(c => math.sqrt(c.map(x => x * x).sum)))
+        (cs, rowNorms(cs))
       }
     // name-keyed per nlist (the ivfTopK wiring): the codebook is a pure
     // function of nlist, so once-per-session registration cannot drift
@@ -1552,16 +1462,26 @@ object Similarity {
       graft.functions.IvfBucket(exprs.head, cents, cnorms))
     registerOnce(emb, probesName)(exprs =>
       graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
+    mipsIvfPlan(v, isQuery, k, call_function(bucketName, col("ea")),
+      call_function(probesName, col("ea")), corpusMaxNorm(v, isQuery))
+  }
+
+  /** The MIPS-IVF plan over explicit augmented-space bucket/probe
+    * expressions (the [[ivfPlan]] pattern, shared by the formula and
+    * fitted books): both kernels read `ea`, the corpus row with
+    * sqrt(M²−‖x‖²) appended or the query with a 0; candidates score the
+    * exact RAW inner product at generation, and only (query, corpus, ip)
+    * rows reach the distinct and the two-phase salted rerank.
+    */
+  private def mipsIvfPlan(v: DataFrame, isQuery: Column, k: Int, bucketCol: Column,
+                          probesCol: Column, maxNorm: Double): DataFrame = {
     val corpus = v.filter(!isQuery)
-      .withColumn("ea",
-        concat(col("e"), array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm")))))
-      .select(col("vec_id").as("corpus_id"),
-        call_function(bucketName, col("ea")).as("bucket"),
-        col("e").as("ec"))
+      .withColumn("ea", concat(col("e"),
+        array(sqrt(lit(maxNorm) * lit(maxNorm) - col("nrm") * col("nrm")))))
+      .select(col("vec_id").as("corpus_id"), bucketCol.as("bucket"), col("e").as("ec"))
     val queries = v.filter(isQuery)
       .withColumn("ea", concat(col("e"), array(lit(0.0))))
-      .select(col("vec_id").as("query_id"),
-        explode(call_function(probesName, col("ea"))).as("bucket"),
+      .select(col("vec_id").as("query_id"), explode(probesCol).as("bucket"),
         col("e").as("eq"))
     val scored = corpus.join(broadcast(queries), "bucket")
       .select(col("query_id"), col("corpus_id"),
@@ -1617,7 +1537,7 @@ object Similarity {
   def mipsIvfPqTopK(emb: DataFrame, isQuery: Column, k: Int = 10,
                     probes: Int = 8, refine: Int = 4): DataFrame = {
     val v = vectors(emb)
-    val m = v.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
+    val m = corpusMaxNorm(v, isQuery)
     registerMipsServing(emb, probes)
     // codes-resident corpus index: bucket + 5 ints per vector, no ec
     val corpusIdx = v.filter(!isQuery)

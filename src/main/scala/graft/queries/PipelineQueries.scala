@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.functions.Codebooks.PqBook
 import graft.operators.{Bpe, Dedup, Multimodal, Similarity, TextOps}
+import graft.operators.Similarity.PqIndex
 import graft.sources.Tables
 
 /** SURVEY.md §2c — the LLM-training-data pipeline ops over `documents` /
@@ -319,9 +321,10 @@ object PipelineQueries {
     // residual sub-codebooks come from the per-subspace fixed-point
     // k-means fit against the laddered book — the recall lift the sized
     // formula book left on the table (0.100 @ sf10); fit unrolled as
-    // oracle CTEs, batch and stream share pqResFitServingExprs.
+    // oracle CTEs, batch and stream share Similarity.pqServing.
     "sim_topk_ivf_pq_resfit" -> ((s, dir) =>
-      Similarity.ivfPqTopKResFitted(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfPqTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK,
+        index = PqIndex.ResFit)
         .orderBy(col("query_id"), col("rnk"))),
     // IVF over a k-means-fitted codebook (the offline fit a production
     // deployment broadcasts). r12: the fit is FIXED-POINT (integer dots,
@@ -366,8 +369,8 @@ object PipelineQueries {
     // Dim-dot), price = 4x offline encode + 4x shortlist vector reads
     // (40 rows/query).
     "sim_topk_ivf_pq_fitted_hq" -> ((s, dir) =>
-      Similarity.ivfPqTopKFittedSizedWide(Tables.load(s, dir, "embeddings"), queryPred, TopK,
-        refineMul = 4)
+      Similarity.ivfPqTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK,
+        index = PqIndex.Fitted(PqBook.Wide), refineMul = 4)
         .orderBy(col("query_id"), col("rnk"))),
     // the 16-SUBSPACE wide-book serving point (r17b — the measured new
     // frontier): quartering the per-subspace dim was the unswept dial,
@@ -379,9 +382,8 @@ object PipelineQueries {
     // price = 4× offline encode distances and the same 40
     // full-vector shortlist reads/query. Seeds: the 41000.. region.
     "sim_topk_ivf_pq_fitted_m16" -> ((s, dir) =>
-      Similarity.ivfPqTopKFittedSizedShaped(Tables.load(s, dir, "embeddings"), queryPred, TopK,
-        pqM = 16, pqK = 64, pqFitSample = 8192, pqSeedRowBase = 41000,
-        refineMul = 4)
+      Similarity.ivfPqTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK,
+        index = PqIndex.Fitted(PqBook.M16), refineMul = 4)
         .orderBy(col("query_id"), col("rnk"))),
     // the kNN GRAPH BUILD over the fitted laddered book (r17, r16
     // VERDICT #3): identical candidate/score/rerank plan to
@@ -1490,7 +1492,7 @@ object PipelineQueries {
 
   /** FIXED-POINT per-subspace PQ residual k-means, unrolled (r12) — the
     * data-fitted sub-codebooks over the INTEGER residuals x̂ − ĉfp_b of
-    * the first-`maxSample` sample, seeded by the LCG integers ·250 (the
+    * the first-`book.fitSample` sample, seeded by the LCG integers ·250 (the
     * /4000 value scale in fp). Requires vfu + ccs CTEs in scope (the
     * coarse bucket b is the SERVING assignment — exactly
     * Similarity.fitPqCodebooks) plus `coarseRef(c, cv)` — the fp-scale
@@ -1519,22 +1521,19 @@ object PipelineQueries {
        |  FROM orient x JOIN orient y ON y.lo = x.lo AND y.hi > x.hi
        |       JOIN und c ON c.src = x.hi AND c.dst = y.hi)""".stripMargin
 
-  private def pqFitCtes(coarseRef: String, iters: Int, maxSample: Int,
-                        pqK: Int = graft.functions.Codebooks.PqK,
-                        seedRowBase: Int = 400,
-                        pqM: Int = graft.functions.Codebooks.PqM,
+  private def pqFitCtes(coarseRef: String, iters: Int,
+                        book: PqBook = PqBook.Narrow,
                         prefix: String = ""): String = {
-    // pqK/seedRowBase (r17): the residual-book WIDTH dial, mirroring
-    // fitPqCodebooks — the K=64 pricing/serving arm seeds from the
-    // fresh 30000.. LCG region (stride Dim, raw positions disjoint).
-    // pqM (r17b): the subspace-COUNT dial — 40000.. region for 16×16,
-    // 41000.. for 16×64 (the §5 ledger); the CTE text below only ever
-    // references m/sub through these two parameters.
+    // `book` fixes the residual-book shape exactly as it does for
+    // Similarity.fitPqCodebooks — subspace count, codes per subspace,
+    // first-rows sample and LCG seed region (Codebooks.PqBook, the one
+    // ledger); the CTE text below references them only through it.
     // prefix (r17b): CTE-name prefix so TWO book fits can share one
     // statement (pq_error_card) — "" keeps the text byte-identical for
     // every existing gate.
-    val PqM = pqM
-    val PqSub = graft.functions.Codebooks.Dim / pqM
+    val (maxSample, pqK, seedRowBase) = (book.fitSample, book.k, book.seedRowBase)
+    val PqM = book.m
+    val PqSub = book.sub
     def p(name: String) = s"$prefix$name"
     val head =
       s""",
@@ -1589,9 +1588,8 @@ object PipelineQueries {
     * cast — 10⁹⁺ vectors cannot overflow).
     */
   private def pqErrorCardOracle: String = {
-    import graft.functions.Codebooks.PqM
-    def bookCtes(suffix: String, pqRef: String, pqM: Int): String = {
-      val sub = graft.functions.Codebooks.Dim / pqM
+    def bookCtes(suffix: String, pqRef: String, book: PqBook): String = {
+      val sub = book.sub
       s""",
          |pqv$suffix AS (SELECT m, k, [CAST(x AS DOUBLE)/1000000.0 for x in pv] AS pv FROM $pqRef),
          |dm$suffix AS (
@@ -1619,17 +1617,17 @@ object PipelineQueries {
          |, nlsizing AS (SELECT CASE WHEN COUNT(*) <= 4096 THEN $NCentroids
          |  WHEN COUNT(*) <= 65536 THEN 128
          |  WHEN COUNT(*) <= 1048576 THEN 512 ELSE 2048 END AS nl FROM embeddings),
-         |${kmeansFitCtes(3, sized = true)}${pqFitCtes("fc3", 5, 2048)}${
-           pqFitCtes("fc3", 5, 8192, 64, 41000, 16, prefix = "w")},
+         |${kmeansFitCtes(3, sized = true)}${pqFitCtes("fc3", 5)}${
+           pqFitCtes("fc3", 5, PqBook.M16, prefix = "w")},
          |chat AS (SELECT c, [cv[i]/cnrm for i in generate_series(1,$Dim)] AS ch FROM cn2),
          |vb AS (SELECT vec_id, list_position(cc, list_max(cc)) AS bucket FROM ccs),
          |vres AS MATERIALIZED (
          |  SELECT v.vec_id,
          |         [v.e[i]/v.nrm - chat.ch[i] for i in generate_series(1,$Dim)] AS r
          |  FROM vb JOIN v USING (vec_id) JOIN chat ON chat.c = vb.bucket - 1)${
-           bookCtes("n", "pq5", PqM)}${bookCtes("w", "wpq5", 16)}
-         |SELECT 'narrow' AS book, * FROM cardn
-         |UNION ALL SELECT 'm16' AS book, * FROM cardw
+           bookCtes("n", "pq5", PqBook.Narrow)}${bookCtes("w", "wpq5", PqBook.M16)}
+         |SELECT '${PqBook.Narrow.label}' AS book, * FROM cardn
+         |UNION ALL SELECT '${PqBook.M16.label}' AS book, * FROM cardw
          |ORDER BY book""".stripMargin
   }
 
@@ -1644,13 +1642,11 @@ object PipelineQueries {
     * the IDENTICAL books.
     */
   private def ivfPqFittedSizedOracle(baseProbes: Int,
-                                     pqK: Int = graft.functions.Codebooks.PqK,
-                                     pqSeedRowBase: Int = 400,
-                                     refineMul: Int = 1,
-                                     pqM: Int = graft.functions.Codebooks.PqM,
-                                     pqFitSample: Int = 2048): String = {
-    val PqM = pqM
-    val PqSub = graft.functions.Codebooks.Dim / pqM
+                                     book: PqBook = PqBook.Narrow,
+                                     refineMul: Int = 1): String = {
+    val PqM = book.m
+    val PqSub = book.sub
+    val pqK = book.k
     val coarse = s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
       s"[q.e[i]/q.nrm * ch.ch[i] for i in generate_series(1,$Dim)]), (s,x) -> s+x)"
     val terms = s"flatten([[q.e[m*$PqSub+d]/q.nrm * pqf.pq[m*$pqK + codes[m+1]][d] " +
@@ -1665,7 +1661,7 @@ object PipelineQueries {
          |rsizing AS (SELECT CASE WHEN COUNT(*) <= 4096 THEN 4
          |    WHEN COUNT(*) <= 65536 THEN 8
          |    WHEN COUNT(*) <= 1048576 THEN 16 ELSE 32 END AS rf FROM embeddings),
-         |${kmeansFitCtes(3, sized = true)}${pqFitCtes("fc3", 5, pqFitSample, pqK, pqSeedRowBase, pqM)},
+         |${kmeansFitCtes(3, sized = true)}${pqFitCtes("fc3", 5, book)},
          |chat AS (SELECT c, [cv[i]/cnrm for i in generate_series(1,$Dim)] AS ch FROM cn2),
          |pqv AS (SELECT m, k, [CAST(x AS DOUBLE)/1000000.0 for x in pv] AS pv FROM pq5),
          |pqf AS (SELECT list(pv ORDER BY m*$pqK + k) AS pq FROM pqv),
@@ -2933,7 +2929,7 @@ object PipelineQueries {
     // from the per-subspace fixed-point k-means fit (pqFitCtes) over
     // residuals against cfp — the fp-normalized LADDERED book generated
     // from the same raw LCG integers the value book scales /1000 —
-    // mirroring Similarity.pqResFitServingExprs term for term.
+    // mirroring Similarity.pqServing(PqIndex.ResFit) term for term.
     // `codes` is MATERIALIZED (unlike the formula row's): with the fit
     // CTEs resident, inlining the 25.6M-row dists aggregate into the
     // probe-join pipeline overruns check_one's 64GB cap at sf10;
@@ -2970,7 +2966,7 @@ object PipelineQueries {
            |  FROM generate_series(0, 2047) AS t(c), nlsizing WHERE c < nl),
            |cfp AS MATERIALIZED (
            |  SELECT c, ${fpn("g", "n2")} AS cv
-           |  FROM (SELECT c, g, ${sumSq("g")} AS n2 FROM crawg))${pqFitCtes("cfp", 5, 2048)},
+           |  FROM (SELECT c, g, ${sumSq("g")} AS n2 FROM crawg))${pqFitCtes("cfp", 5)},
            |pqv AS (SELECT m, k, [CAST(x AS DOUBLE)/1000000.0 for x in pv] AS pv FROM pq5),
            |pqf AS (SELECT list(pv ORDER BY m*$PqK + k) AS pq FROM pqv),
            |chat AS (SELECT c, [cv[i]/cnrm for i in generate_series(1,$Dim)] AS ch FROM cn),
@@ -3098,16 +3094,15 @@ object PipelineQueries {
     // shortlist boost at STANDARD probes — the dials that measured
     // binding; same laddered coarse fit CTEs, probe text unchanged
     "sim_topk_ivf_pq_fitted_hq" -> ivfPqFittedSizedOracle(Probes,
-      pqK = 64, pqSeedRowBase = 30000, refineMul = 4),
+      PqBook.Wide, refineMul = 4),
 
     // the 16-subspace wide-book point (r17b): the identical fitted
-    // replay with the residual-book shape dials swapped — M=16 (sub=4),
-    // K=64, 8192-row fit sample, 41000.. seed region, ×4 shortlist.
+    // replay with the residual book swapped to PqBook.M16 — M=16
+    // (sub=4), K=64, 8192-row fit sample, 41000.. seeds, ×4 shortlist.
     // The coarse fit CTEs are untouched (books shared with the whole
     // fitted family by construction).
     "sim_topk_ivf_pq_fitted_m16" -> ivfPqFittedSizedOracle(Probes,
-      pqK = 64, pqSeedRowBase = 41000, refineMul = 4, pqM = 16,
-      pqFitSample = 8192),
+      PqBook.M16, refineMul = 4),
 
     // the quantization-error decision card: both books, one statement
     "pq_error_card" -> pqErrorCardOracle,
@@ -3156,7 +3151,7 @@ object PipelineQueries {
         s"for d in generate_series(1,$PqSub)] for m in generate_series(0,${PqM - 1})])"
       NormCte +
         s"""
-           |, ${kmeansFitCtes(3)}${pqFitCtes("fc3", 5, 2048)},
+           |, ${kmeansFitCtes(3)}${pqFitCtes("fc3", 5)},
            |chat AS (SELECT c, [cv[i]/cnrm for i in generate_series(1,$Dim)] AS ch FROM cn2),
            |pqv AS (SELECT m, k, [CAST(x AS DOUBLE)/1000000.0 for x in pv] AS pv FROM pq5),
            |pqf AS (SELECT list(pv ORDER BY m*$PqK + k) AS pq FROM pqv),

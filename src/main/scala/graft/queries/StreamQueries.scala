@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Codebooks.PqBook
+import graft.operators.Similarity.PqIndex
 import graft.streaming.{AnomalyStream, AsOfStream, CorpusStream, DedupStream, ImportanceStream, RangeJoinStream, SimilarityStream, SpanStream, TopicStream}
 
 /** SURVEY.md §2a streaming rows — each runs a real Structured Streaming
@@ -145,15 +147,14 @@ object StreamQueries {
         .orderBy(col("query_id"), col("rnk"))
     }),
     // The FITTED-residual-book serving twin (r16): same compact-index
-    // stream plan, code/score kernels from the shared
-    // pqResFitServingExprs builder (deterministic fit — batch and
-    // stream books bit-identical). Replay reproduces
+    // stream plan, code/score kernels from the shared Similarity.pqServing
+    // builder (deterministic fit — batch and stream books bit-identical). Replay reproduces
     // sim_topk_ivf_pq_resfit (batch oracle verbatim).
     "stream_sim_ivf_pq_resfit" -> ((s, dir) => {
       val (out, ckpt) = TopicStream.scratchDirs("stream_sim_ivf_pq_resfit", dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       SimilarityStream.ivfPqTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
-        tablePrefix = "graft_pq_resfit_stream", book = "resfit")
+        tablePrefix = "graft_pq_resfit_stream", index = PqIndex.ResFit)
         .orderBy(col("query_id"), col("rnk"))
     }),
     // The FULLY-fitted serving ladder's twin (r16): laddered coarse
@@ -164,7 +165,7 @@ object StreamQueries {
       val (out, ckpt) = TopicStream.scratchDirs("stream_sim_ivf_pq_fitted", dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       SimilarityStream.ivfPqTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
-        tablePrefix = "graft_pq_fitted_stream", book = "fitted")
+        tablePrefix = "graft_pq_fitted_stream", index = PqIndex.Fitted(PqBook.Narrow))
         .orderBy(col("query_id"), col("rnk"))
     }),
     // The r17b high-recall serving point's twin: 16-subspace × 64-code
@@ -175,7 +176,8 @@ object StreamQueries {
       val (out, ckpt) = TopicStream.scratchDirs("stream_sim_ivf_pq_m16", dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       SimilarityStream.ivfPqTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
-        tablePrefix = "graft_pq_m16_stream", book = "m16", refineMul = 4)
+        tablePrefix = "graft_pq_m16_stream", index = PqIndex.Fitted(PqBook.M16),
+        refineMul = 4)
         .orderBy(col("query_id"), col("rnk"))
     }),
     // Streaming PQ-compact MIPS serving (r14): codes-resident

@@ -99,8 +99,8 @@ object SimilarityStream {
   }
 
   /** Streaming ANN serving over the COMPACT IVF-PQ index — the online
-    * face of [[Similarity.ivfPqTopK]]. The resident index per corpus
-    * vector is (bucket, 8 PQ codes) ≈ 12 bytes; incoming query batches
+    * face of [[Similarity.ivfPqTopKSized]] for any `index`. The resident
+    * index per corpus vector is (bucket, M PQ codes) ≈ 12 bytes; incoming query batches
     * probe buckets and score candidates from the codes alone, and only
     * each batch's k·refine shortlist touches the full vector table for
     * the exact rerank. Both static sides are materialized bucketed by
@@ -109,51 +109,35 @@ object SimilarityStream {
     * shortlist rerank join) — so neither is ever shuffled after the
     * one-time write. At scale the fat vectors live exactly like this:
     * a corpus_id-bucketed store fetched per-shortlist. Replay equals
-    * batch ivfPqTopK exactly (gate-checked with its oracle).
+    * batch ivfPqTopKSized with the same index exactly (gate-checked with
+    * its oracle).
     */
   def ivfPqTopKStream(spark: SparkSession, embPath: String,
                       outDir: String, checkpointDir: String, k: Int = 10,
                       maxFilesPerTrigger: Option[Int] = None,
                       probes: Int = 8, refine: Int = 0,
                       tablePrefix: String = "graft_pq_stream",
-                      book: String = "formula",
+                      index: Similarity.PqIndex = Similarity.PqIndex.Formula,
                       refineMul: Int = 1): DataFrame = {
     TopicStream.deleteRecursively(Paths.get(outDir))
     Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
     // refine <= 0 derives the N-adaptive shortlist width (r14) — the
-    // batch Sized row's ladder, so replay == batch at every scale;
-    // late r15 the coarse books + probes ride the same ladder through
-    // the SHARED pqServingExprs quartet (batch and stream encode and
-    // score with the identical kernel constructions). `book` (r16)
-    // picks the codebook pair through the SHARED builders — "resfit"
-    // (formula ladder coarse + fitted residual book,
-    // pqResFitServingExprs) or "fitted" (laddered coarse k-means +
-    // residual fit against it, pqFittedServingExprs); both fits are
-    // deterministic (integer arithmetic over the first-2048 sample),
-    // so this face's books are bit-identical to the batch operator's.
+    // batch Sized row's ladder, so replay == batch at every scale; the
+    // coarse books, probes and `index`'s codebooks come from the SHARED
+    // Similarity.pqServing builder (batch and stream encode and score
+    // with identical kernel constructions; every fit is deterministic, so
+    // this face's books are bit-identical to the batch operator's). One
+    // count sizes the ladders and the fitted index's sample.
     val n = corpus.count()
     // refineMul (r17b): the shortlist-boost dial the hq/m16 serving
     // points ride — multiplies the N-adaptive width, exactly as the
     // batch rows multiply sizedRefine
     val refineEff = (if (refine > 0) refine else Similarity.sizedRefine(n)) *
       refineMul
-    val (bucketCol, probesCol, codeCol, scoreCol) = book match {
-      case "resfit" => Similarity.pqResFitServingExprs(
-        corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n))
-      case "fitted" => Similarity.pqFittedServingExprs(
-        corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n))
-      // the r17b winning composition: 16×64 residual book (41000..
-      // seeds) fitted on the 8192-row sample — the SHARED builder
-      // guarantees bit-identity with sim_topk_ivf_pq_fitted_m16's books
-      case "m16" => Similarity.pqFittedServingExprs(
-        corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n),
-        pqK = 64, pqSeedRowBase = 41000, pqM = 16, pqFitSample = 8192)
-      case "formula" => Similarity.pqServingExprs(
-        corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n))
-      case other => throw new IllegalArgumentException(
-        s"ivfPqTopKStream: unknown book '$other' (formula | resfit | fitted | m16)")
-    }
+    val (bucketCol, probesCol, codeCol, scoreCol) = Similarity.pqServing(corpus, index,
+      Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n),
+      Similarity.sizedKmFitModulus(n))
     val isQuery = col("vec_id") < 8
 
     val vecsTable = s"${tablePrefix}_vecs"

@@ -368,10 +368,11 @@ class CliSpec extends SparkSpec {
       print = lines += _)
     assert(code == 0)
     val got = spark.read.parquet(s"$out/topk")
-    val lib = graft.operators.Similarity.ivfPqTopKFittedSizedShaped(
+    val lib = graft.operators.Similarity.ivfPqTopKSized(
       graft.sources.Tables.load(spark, sf, "embeddings"),
       col("vec_id") < 8, k = 10,
-      pqM = 16, pqK = 64, pqFitSample = 8192, pqSeedRowBase = 41000,
+      index = graft.operators.Similarity.PqIndex.Fitted(
+        graft.functions.Codebooks.PqBook.M16),
       refineMul = 4)
       .select(got.columns.map(col): _*)
     assert(got.exceptAll(lib).isEmpty && lib.exceptAll(got).isEmpty,

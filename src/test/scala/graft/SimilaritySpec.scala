@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.Codebooks.PqBook
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -161,8 +162,10 @@ class SimilaritySpec extends SparkSpec {
       "MIPS is measured against the formula book") {
     import graft.functions.Codebooks
     // the fit is the integer recurrence — bit-identical across runs
-    val fit1 = Similarity.fitMipsCentroids(emb, isQuery)
-    val fit2 = Similarity.fitMipsCentroids(emb, isQuery)
+    val mx = Similarity.vectors(emb).filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
+    val fm = Similarity.sizedKmFitModulus(emb.count())
+    val fit1 = Similarity.fitMipsCentroids(emb, isQuery, Codebooks.NCentroids, 3, fm, mx)
+    val fit2 = Similarity.fitMipsCentroids(emb, isQuery, Codebooks.NCentroids, 3, fm, mx)
     assert(fit1.map(_.toSeq).toSeq === fit2.map(_.toSeq).toSeq)
     assert(fit1.length === Codebooks.NCentroids &&
       fit1.forall(_.length === Codebooks.Dim + 1))
@@ -429,6 +432,72 @@ class SimilaritySpec extends SparkSpec {
     assert(localA.map(_.toSeq).toSeq === distA.map(_.toSeq).toSeq)
   }
 
+  test("driver-local fit loop fails loudly: a worker's kernel throw fails the fit, " +
+      "and a fit row of the wrong width is rejected before any worker runs") {
+    import graft.functions.Codebooks
+    graft.functions.NativeHash.register(spark)
+    val v = Similarity.vectors(emb)
+      .withColumn("xh", expr("graft_fp_unit(e)"))
+      .filter(col("xh").isNotNull)
+      .select(col("xh"))
+    // one seed row one component short: the assignment kernel throws on
+    // the first row inside a worker thread; the fit must rethrow it
+    // rather than merge the worker's partial sums
+    val seeds = Codebooks.fpCentroidsFor(16)
+    seeds(3) = seeds(3).init
+    val e = intercept[IllegalArgumentException] {
+      Similarity.fitLoopLocal(v, seeds, Similarity.Dim, 2)
+    }
+    assert(e.getMessage.contains("codebook expects"), e.getMessage)
+    // rows of the wrong width never reach a worker
+    val w = intercept[IllegalArgumentException] {
+      Similarity.fitLoopLocal(v, Codebooks.fpMipsCentroidsFor(16), Similarity.Dim + 1, 2)
+    }
+    assert(w.getMessage.contains(s"expected ${Similarity.Dim + 1}"), w.getMessage)
+  }
+
+  test("LCG seed-region ledger: every PQ book's raw generator positions are " +
+      "disjoint from the other books, the reserved 16x16 region, the planes, " +
+      "the coarse regions and the stride-65 MIPS regions") {
+    import graft.functions.Codebooks
+    val dim = Codebooks.Dim.toLong
+    // raw positions row*stride + d — the products both engines feed the
+    // LCG, never the row ids (regions of different strides can collide
+    // in position while their row ids look disjoint)
+    def rows(from: Long, until: Long, stride: Long, width: Long): Set[Long] =
+      (for (r <- from until until; d <- 0L until width) yield r * stride + d).toSet
+    def bookPositions(b: PqBook): Set[Long] =
+      (for (m <- 0 until b.m; k <- 0 until b.k; d <- 0 until b.sub)
+        yield b.seedPosition(m, k, d)).toSet
+    val fixed = Map(
+      "planes" -> rows(0, Codebooks.NPlanes, dim, dim),
+      "coarse" -> rows(200, 400, dim, dim),
+      "coarse-big" -> rows(10000, 12048, dim, dim),
+      "reserved-16x16" -> rows(40000, 40256, dim, dim),
+      "mips-coarse" -> rows(Codebooks.MipsRowBase, Codebooks.MipsRowBase + Codebooks.NCentroids,
+        dim + 1, dim + 1),
+      "mips-pq" -> rows(Codebooks.MipsPqRowBase,
+        Codebooks.MipsPqRowBase + Codebooks.MipsPqM * Codebooks.PqK, dim + 1, Codebooks.MipsPqSub),
+      "mips-coarse-big" -> rows(Codebooks.MipsBigRowBase, Codebooks.MipsBigRowBase + 2048,
+        dim + 1, dim + 1))
+    val all = Seq(PqBook.Narrow, PqBook.Wide, PqBook.M16)
+    val books = all.map(b => b.label -> bookPositions(b)).toMap
+    assert(books.size === all.size, "book labels must be distinct")
+    all.foreach { b =>
+      assert(b.m * b.sub === Codebooks.Dim, s"${b.label}: subspaces must tile Dim")
+      assert(books(b.label).size === b.m * b.k * b.sub,
+        s"${b.label}: seed positions must not collide within the book")
+    }
+    // the narrow book IS the formula residual book's region
+    assert(PqBook.Narrow.m === Codebooks.PqM && PqBook.Narrow.k === Codebooks.PqK)
+    val regions = books.toSeq ++ fixed.toSeq
+    for (i <- regions.indices; j <- regions.indices if i < j) {
+      val ((a, pa), (b, pb)) = (regions(i), regions(j))
+      if (books.contains(a) || books.contains(b))
+        assert(pa.intersect(pb).isEmpty, s"LCG region $a overlaps $b")
+    }
+  }
+
   test("k-means IVF hits score identically to brute force (candidates are exact-ranked)") {
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
@@ -492,20 +561,12 @@ class SimilaritySpec extends SparkSpec {
     bf10.unpersist(); fitted.unpersist()
   }
 
-  test("r17b shaped fitted serving: default dials reproduce the fitted_sized " +
-      "row bit-for-bit; the registered m16 point (16x64 book, 8192-row " +
-      "sample) exact-reranks and keeps the rows-gate shape") {
-    // the shaped surface with every dial at its default IS fitted_sized
-    // — one serving implementation, provably shared books
-    val sized = Similarity.ivfPqTopKFittedSized(emb, isQuery, k = 10)
-    val shaped = Similarity.ivfPqTopKFittedSizedShaped(emb, isQuery, k = 10)
-    assert(shaped.exceptAll(sized).isEmpty && sized.exceptAll(shaped).isEmpty,
-      "default dials must reproduce fitted_sized bit-for-bit")
+  test("r17b m16 fitted serving: the registered m16 point (16x64 book, " +
+      "8192-row sample) exact-reranks and keeps the rows-gate shape") {
     // the registered m16 composition: 16 subspaces x 64 codes, 8192-row
     // fit sample (41000.. seed region), x4 shortlist
-    val m16 = Similarity.ivfPqTopKFittedSizedShaped(emb, isQuery, k = 10,
-      pqM = 16, pqK = 64, pqFitSample = 8192, pqSeedRowBase = 41000,
-      refineMul = 4).cache()
+    val m16 = Similarity.ivfPqTopKSized(emb, isQuery, k = 10,
+      index = Similarity.PqIndex.Fitted(PqBook.M16), refineMul = 4).cache()
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
     assert(m16.select(col("query_id"), col("corpus_id"), col("cos"))
@@ -513,11 +574,6 @@ class SimilaritySpec extends SparkSpec {
     val perQuery = m16.groupBy("query_id").count()
     assert(perQuery.filter(col("count") =!= 10).count() === 0)
     assert(m16.filter(col("rnk") < 1 || col("rnk") > 10).count() === 0)
-    // a mismatched (pqM, pqK) -> seed-region pairing must fail loudly
-    intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKFittedSizedShaped(emb, isQuery, k = 10,
-        pqM = 16, pqK = 64, pqSeedRowBase = 400)
-    }
     m16.unpersist()
   }
 
@@ -570,13 +626,15 @@ class SimilaritySpec extends SparkSpec {
     // verbatim in exhaustive scoring
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
-    val r1 = Similarity.ivfPqTopKResFitted(emb, isQuery, k = 10).cache()
+    val r1 = Similarity.ivfPqTopKSized(emb, isQuery, k = 10,
+      index = Similarity.PqIndex.ResFit).cache()
     assert(r1.select(col("query_id"), col("corpus_id"), col("cos"))
       .except(bf).count() === 0)
     // determinism: an independent second fit+serve is bit-identical —
     // this is what lets batch and the streaming twin each call the
     // shared builder and still share books exactly
-    val r2 = Similarity.ivfPqTopKResFitted(emb, isQuery, k = 10)
+    val r2 = Similarity.ivfPqTopKSized(emb, isQuery, k = 10,
+      index = Similarity.PqIndex.ResFit)
     assert(r1.exceptAll(r2).isEmpty && r2.exceptAll(r1).isEmpty,
       "the residual fit must be deterministic")
     // and the fit is not a no-op: the fitted book differs from its

@@ -577,7 +577,8 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     val streamed = graft.streaming.SimilarityStream.ivfPqTopKStream(
       spark, embDir, out, ckpt, maxFilesPerTrigger = Some(1),
-      tablePrefix = "graft_pq_fitted_spec", book = "fitted")
+      tablePrefix = "graft_pq_fitted_spec",
+      index = graft.operators.Similarity.PqIndex.Fitted(graft.functions.Codebooks.PqBook.Narrow))
       .select("query_id", "corpus_id", "cos", "rnk")
     val batch = graft.operators.Similarity.ivfPqTopKFittedSized(
       Tables.load(spark, sf, "embeddings"), col("vec_id") < 8)
