@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run bench: headline batch queries on SPARK_GRAFT_SF_DIR, one
   * JSON line on stdout. Results are fully materialized through the noop
@@ -144,31 +143,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // dev override for A/B runs (e.g. r8-list vs r9-list in ONE session,
     // round-9 VERDICT #2): comma-separated names replace the contract
     // list. The driver never sets this — the contract stays `headliners`.
     val queryList = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(headliners)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // single-FILE test tables only split on row-group boundaries;
-      // 4 MB splits let a one-file corpus (ScaleGen writes 4 MB row
-      // groups) scan in parallel instead of one straggler task (r12)
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // untimed warmup: JVM/codegen/parquet-footer startup shouldn't be
     // billed to whichever query happens to run first
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.mode("overwrite").format("noop").save()
-    catch { case _: Throwable => }
+    catch { case e: Throwable => System.err.println(s"[bench] warm-up failed: $e") }
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     // rep-MAJOR loop (round-7 VERDICT #1): consecutive-per-query reps let
     // one transient noise window on the box poison ALL samples of the

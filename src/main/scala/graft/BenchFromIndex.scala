@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r14, round-13 VERDICT #5): time the kNN-graph CONSUMERS
   * against a PREBUILT edge index — the registered one-call rows
   * (knn_pagerank, knn_diversity_mis, knn_mis_assign, knn_semdedup)
@@ -20,16 +18,8 @@ object BenchFromIndex {
     // shared assert-loud preflight (r16 VERDICT #5): stale scratch wipe
     // + disk headroom for the sf10 candidate-sort spill + heap echo
     GatePreflight.run(minFreeGb = 60L, main = "BenchFromIndex")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
+    // quieter than WARN: Spark warnings would interleave with the printed table
     spark.sparkContext.setLogLevel("ERROR")
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val table = "graft_bench_knn_edges"

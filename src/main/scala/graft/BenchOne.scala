@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time a comma-separated subset of SparkEntry.queries on a
   * warm session (same harness shape as Bench, min of reps) without
@@ -8,23 +7,12 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val Array(names, sfDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // single-FILE test tables only split on row-group boundaries;
-      // 4 MB splits let a one-file corpus (ScaleGen writes 4 MB row
-      // groups) scan in parallel instead of one straggler task (r12)
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
+    // quieter than WARN: Spark warnings would interleave with the printed table
     spark.sparkContext.setLogLevel("ERROR")
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.mode("overwrite").format("noop").save()
-    catch { case _: Throwable => }
+    catch { case e: Throwable => System.err.println(s"[bench] warm-up failed: $e") }
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       val ts = (0 until reps).map { _ =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Dev tool: time BOTH arms of the N-adaptive pagerank broadcast switch
@@ -15,16 +14,8 @@ import org.apache.spark.sql.functions.col
 object BenchPrArms {
   def main(args: Array[String]): Unit = {
     val Array(sfDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
+    // quieter than WARN: Spark warnings would interleave with the printed table
     spark.sparkContext.setLogLevel("ERROR")
     val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)

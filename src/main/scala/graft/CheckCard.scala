@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1+/sf10 gate for `knn_consumer_card` (r16, r15 ADVICE #4): the
@@ -24,16 +23,8 @@ object CheckCard {
     // + disk headroom for the sf10 candidate-sort spill + heap echo
     GatePreflight.run(minFreeGb = 60L, main = "CheckCard")
     val tau = if (args.length > 1) args(1).toDouble else 0.4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val maxCollect = sys.env.getOrElse("GRAFT_CHECK_MAX_ROWS", "100000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val card = graft.operators.Graph.knnConsumerCard(emb, "graft_knn_card_check",
       tau = tau).head()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1+/sf10 gate for `knn_diversity_mis` AND `knn_mis_assign` (r13/r14 —
@@ -28,16 +27,8 @@ object CheckMis {
     // shared assert-loud preflight (r16 VERDICT #5): stale scratch wipe
     // + disk headroom for the sf10 candidate-sort spill + heap echo
     GatePreflight.run(minFreeGb = 60L, main = "CheckMis")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val maxCollect = sys.env.getOrElse("GRAFT_CHECK_MAX_ROWS", "100000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val out = graft.operators.Graph.knnDiversityMis(emb, "graft_knn_mis_check")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1+ gate for `knn_semdedup` (r12): the DuckDB oracle's recursive
@@ -26,15 +25,7 @@ object CheckSemDedup {
     // + disk headroom for the sf10 candidate-sort spill + heap echo
     GatePreflight.run(minFreeGb = 60L, main = "CheckSemDedup")
     val tau = if (args.length > 1) args(1).toDouble else 0.4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val outDf = graft.operators.Graph.knnSemDeDup(emb, "graft_knn_semdedup_check",
       tau = tau)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver gate (r15, the third CheckStream* twin — text side): runs the
   * streaming clean-corpus ingest (DedupStream.cleanIngestStream, the
   * documents replayed as 3 ordered splits through the file-stream
@@ -20,17 +18,7 @@ import org.apache.spark.sql.SparkSession
 object CheckStreamClean {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val docsPath = s"$sfDir/documents.parquet"
     val (out, ckpt) = streaming.TopicStream.scratchDirs("check_stream_clean", sfDir)
     // ascending-id splits: index-known hashes are order-independent
@@ -52,14 +40,9 @@ object CheckStreamClean {
     val nBatch = batch.count()
     val tBatch = (System.nanoTime() - t1) / 1e9
     println(f"[check-stream-clean] batch    $nBatch rows in $tBatch%.1f s (same corpus)")
-    // row-for-row: exceptAll both ways catches duplicates AND misses
-    val missing = batch.exceptAll(streamed).count()
-    val extra = streamed.exceptAll(batch).count()
-    streamed.unpersist(); batch.unpersist()
-    println(s"[check-stream-clean] rows=$nStream/$nBatch missing=$missing extra=$extra " +
-      (if (missing == 0 && extra == 0 && nStream == nBatch) "(stream union == batch)"
-       else "(MISMATCH)"))
+    val same = GraftSession.sameRows("[check-stream-clean]",
+      "stream union == batch", streamed, batch)
     spark.stop()
-    if (missing != 0 || extra != 0 || nStream != nBatch) sys.exit(1)
+    if (!same) sys.exit(1)
   }
 }

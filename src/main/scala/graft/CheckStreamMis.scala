@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Driver gate (r15 VERDICT #3): the first at-scale gate for a
@@ -21,17 +20,7 @@ import org.apache.spark.sql.functions.col
 object CheckStreamMis {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val embPath = s"$sfDir/embeddings.parquet"
     val (out, ckpt) = streaming.TopicStream.scratchDirs("check_stream_mis", sfDir)
     val t0 = System.nanoTime()
@@ -49,14 +38,9 @@ object CheckStreamMis {
     val nBatch = batch.count()
     val tBatch = (System.nanoTime() - t1) / 1e9
     println(f"[check-stream-mis] batch    $nBatch rows in $tBatch%.1f s (same index)")
-    // row-for-row: exceptAll both ways catches duplicates AND misses
-    val missing = batch.exceptAll(streamed).count()
-    val extra = streamed.exceptAll(batch).count()
-    streamed.unpersist(); batch.unpersist()
-    println(s"[check-stream-mis] rows=$nStream/$nBatch missing=$missing extra=$extra " +
-      (if (missing == 0 && extra == 0 && nStream == nBatch) "(stream union == batch)"
-       else "(MISMATCH)"))
+    val same = GraftSession.sameRows("[check-stream-mis]",
+      "stream union == batch", streamed, batch)
     spark.stop()
-    if (missing != 0 || extra != 0 || nStream != nBatch) sys.exit(1)
+    if (!same) sys.exit(1)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver gate (r16, r15 VERDICT #4 — the one r15 streaming row gated
   * only at driver scales): at-scale equality for the QUANTIZATION-
   * COLLISION dedup twin. Runs the multi-batch stream
@@ -17,17 +15,7 @@ import org.apache.spark.sql.SparkSession
 object CheckStreamPqDedup {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val cols = Seq("vec_id", "bucket", "codes_str", "n_same", "rep_id", "keep")
     val (out, ckpt) = streaming.TopicStream.scratchDirs("check_stream_pq_dedup", sfDir)
     val t0 = System.nanoTime()
@@ -47,13 +35,9 @@ object CheckStreamPqDedup {
     val nBatch = batch.count()
     val tBatch = (System.nanoTime() - t1) / 1e9
     println(f"[check-stream-pq-dedup] batch    $nBatch rows in $tBatch%.1f s")
-    val missing = batch.exceptAll(streamed).count()
-    val extra = streamed.exceptAll(batch).count()
-    streamed.unpersist(); batch.unpersist()
-    println(s"[check-stream-pq-dedup] rows=$nStream/$nBatch missing=$missing extra=$extra " +
-      (if (missing == 0 && extra == 0 && nStream == nBatch) "(stream union == batch)"
-       else "(MISMATCH)"))
+    val same = GraftSession.sameRows("[check-stream-pq-dedup]",
+      "stream union == batch", streamed, batch)
     spark.stop()
-    if (missing != 0 || extra != 0 || nStream != nBatch) sys.exit(1)
+    if (!same) sys.exit(1)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Driver gate (r16, r15 VERDICT #6 — the last ungated stateful twin
@@ -26,17 +25,7 @@ import org.apache.spark.sql.functions.col
 object CheckStreamScd2 {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     var failed = false
 
     // ---- SCD2: offset-ordered multi-batch replay vs batch closed versions
@@ -55,15 +44,9 @@ object CheckStreamScd2 {
       val batch = graft.operators.TopicOps.scd2(
         graft.sources.Topics.events(spark, sfDir))
         .filter(col("value").isNotNull && col("valid_to_offset").isNotNull)
-        .select(scdCols.head, scdCols.tail: _*).cache()
-      val nBatch = batch.count()
-      val missing = batch.exceptAll(streamed).count()
-      val extra = streamed.exceptAll(batch).count()
-      streamed.unpersist(); batch.unpersist()
-      println(s"[check-stream-scd2] scd2 rows=$nStream/$nBatch missing=$missing extra=$extra " +
-        (if (missing == 0 && extra == 0 && nStream == nBatch) "(stream union == batch closed versions)"
-         else "(MISMATCH)"))
-      failed ||= missing != 0 || extra != 0 || nStream != nBatch
+        .select(scdCols.head, scdCols.tail: _*)
+      failed |= !GraftSession.sameRows("[check-stream-scd2] scd2",
+        "stream union == batch closed versions", streamed, batch)
     }
 
     // ---- Funnel: multi-batch replay vs batch chained as-of joins
@@ -92,15 +75,9 @@ object CheckStreamScd2 {
           org.apache.spark.sql.functions.lit(1L) +
             col("click_id").isNotNull.cast("long") +
             col("view_id").isNotNull.cast("long"))
-        .select(fCols.head, fCols.tail: _*).cache()
-      val nBatch = batch.count()
-      val missing = batch.exceptAll(streamed).count()
-      val extra = streamed.exceptAll(batch).count()
-      streamed.unpersist(); batch.unpersist()
-      println(s"[check-stream-scd2] funnel rows=$nStream/$nBatch missing=$missing extra=$extra " +
-        (if (missing == 0 && extra == 0 && nStream == nBatch) "(stream union == batch)"
-         else "(MISMATCH)"))
-      failed ||= missing != 0 || extra != 0 || nStream != nBatch
+        .select(fCols.head, fCols.tail: _*)
+      failed |= !GraftSession.sameRows("[check-stream-scd2] funnel",
+        "stream union == batch", streamed, batch)
     }
 
     // ---- As-of: multi-batch replay vs the batch single-shuffle window
@@ -119,15 +96,9 @@ object CheckStreamScd2 {
       val (p, c) = graft.queries.AnalyticsQueries.asofSides(spark, sfDir)
       val batch = graft.operators.AsOf.joinAsOf(p, c, key = Seq("user_id"),
         leftTime = "ts", rightTime = "click_ts", tieBreak = Seq("click_id"))
-        .select(aCols.head, aCols.tail: _*).cache()
-      val nBatch = batch.count()
-      val missing = batch.exceptAll(streamed).count()
-      val extra = streamed.exceptAll(batch).count()
-      streamed.unpersist(); batch.unpersist()
-      println(s"[check-stream-scd2] asof rows=$nStream/$nBatch missing=$missing extra=$extra " +
-        (if (missing == 0 && extra == 0 && nStream == nBatch) "(stream union == batch)"
-         else "(MISMATCH)"))
-      failed ||= missing != 0 || extra != 0 || nStream != nBatch
+        .select(aCols.head, aCols.tail: _*)
+      failed |= !GraftSession.sameRows("[check-stream-scd2] asof",
+        "stream union == batch", streamed, batch)
     }
 
     spark.stop()

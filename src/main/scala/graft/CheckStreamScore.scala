@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Driver gate (late r15, the fourth CheckStream* twin): the two
@@ -21,32 +20,9 @@ import org.apache.spark.sql.functions.col
   * Usage: runMain graft.CheckStreamScore <sfDir>
   */
 object CheckStreamScore {
-  private def compare(name: String, streamed: DataFrame,
-                      batch: DataFrame): Boolean = {
-    val s = streamed.cache(); val b = batch.cache()
-    val nS = s.count(); val nB = b.count()
-    val missing = b.exceptAll(s).count()
-    val extra = s.exceptAll(b).count()
-    s.unpersist(); b.unpersist()
-    println(s"[check-stream-score] $name rows=$nS/$nB missing=$missing extra=$extra " +
-      (if (missing == 0 && extra == 0 && nS == nB) "(stream union == batch)"
-       else "(MISMATCH)"))
-    missing == 0 && extra == 0 && nS == nB
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val (outI, ckptI) = streaming.TopicStream.scratchDirs("check_stream_imp", sfDir)
     val docsSplit = streaming.TopicStream.orderedSplitInput(
@@ -58,7 +34,8 @@ object CheckStreamScore {
     val tImp = (System.nanoTime() - t0) / 1e9
     val batchImp = operators.TextOps.importanceWeights(
       sources.Tables.load(spark, sfDir, "documents"), col("doc_id") % 97 === 0)
-    val okImp = compare("importance", streamedImp, batchImp)
+    val okImp = GraftSession.sameRows("[check-stream-score] importance",
+      "stream union == batch", streamedImp, batchImp)
     println(f"[check-stream-score] importance stream wall $tImp%.1f s (3 batches, fit included)")
 
     val (outP, ckptP) = streaming.TopicStream.scratchDirs("check_stream_pca", sfDir)
@@ -71,7 +48,8 @@ object CheckStreamScore {
     val tPca = (System.nanoTime() - t1) / 1e9
     val batchPca = operators.Pca.project(
       sources.Tables.load(spark, sfDir, "embeddings"))
-    val okPca = compare("pca_score", streamedPca, batchPca)
+    val okPca = GraftSession.sameRows("[check-stream-score] pca_score",
+      "stream union == batch", streamedPca, batchPca)
     println(f"[check-stream-score] pca_score stream wall $tPca%.1f s (3 batches, fit included)")
 
     spark.stop()

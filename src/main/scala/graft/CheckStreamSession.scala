@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Driver gate (late r15, the FIFTH CheckStream* — the first STATEFUL
@@ -29,17 +28,7 @@ import org.apache.spark.sql.functions.col
 object CheckStreamSession {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val eventsPath = s"$sfDir/events.parquet"
     val cols = Seq("user_id", "session_start", "session_end", "n_events",
       "total_value").map(col)
@@ -64,13 +53,9 @@ object CheckStreamSession {
     val tS = (System.nanoTime() - t1) / 1e9
     println(f"[check-stream-session] single-batch $nS sessions in $tS%.1f s (the oracle-gated form)")
 
-    val missing = single.exceptAll(multi).count()
-    val extra = multi.exceptAll(single).count()
-    multi.unpersist(); single.unpersist()
-    println(s"[check-stream-session] rows=$nM/$nS missing=$missing extra=$extra " +
-      (if (missing == 0 && extra == 0 && nM == nS) "(multi-batch == single-batch)"
-       else "(MISMATCH)"))
+    val same = GraftSession.sameRows("[check-stream-session]",
+      "multi-batch == single-batch", multi, single)
     spark.stop()
-    if (missing != 0 || extra != 0 || nM != nS) sys.exit(1)
+    if (!same) sys.exit(1)
   }
 }

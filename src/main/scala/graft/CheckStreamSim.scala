@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver gate (r15, extending the CheckStreamMis direction): the
   * at-scale equality gate for the PQ-MIPS SERVING twin. Runs the
   * multi-batch streaming server (SimilarityStream.mipsIvfPqTopKStream
@@ -18,17 +16,7 @@ import org.apache.spark.sql.SparkSession
 object CheckStreamSim {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import org.apache.spark.sql.functions.col
     // a single-file sf table streams as ONE trigger; re-shard to 4
     // files so the replay is genuinely multi-batch (the StreamingSpec
@@ -52,13 +40,9 @@ object CheckStreamSim {
     val nBatch = batch.count()
     val tBatch = (System.nanoTime() - t1) / 1e9
     println(f"[check-stream-sim] batch    $nBatch rows in $tBatch%.1f s")
-    val missing = batch.exceptAll(streamed).count()
-    val extra = streamed.exceptAll(batch).count()
-    streamed.unpersist(); batch.unpersist()
-    println(s"[check-stream-sim] rows=$nStream/$nBatch missing=$missing extra=$extra " +
-      (if (missing == 0 && extra == 0 && nStream == nBatch) "(stream union == batch)"
-       else "(MISMATCH)"))
+    val same = GraftSession.sameRows("[check-stream-sim]",
+      "stream union == batch", streamed, batch)
     spark.stop()
-    if (missing != 0 || extra != 0 || nStream != nBatch) sys.exit(1)
+    if (!same) sys.exit(1)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Driver gate (late r15, the SIXTH CheckStream*): the windowed /
@@ -26,32 +26,9 @@ import org.apache.spark.sql.functions.col
   * Usage: runMain graft.CheckStreamWindowed <sfDir>
   */
 object CheckStreamWindowed {
-  private def compare(name: String, multi: DataFrame,
-                      single: DataFrame): Boolean = {
-    val m = multi.cache(); val s = single.cache()
-    val nM = m.count(); val nS = s.count()
-    val missing = s.exceptAll(m).count()
-    val extra = m.exceptAll(s).count()
-    m.unpersist(); s.unpersist()
-    println(s"[check-stream-windowed] $name rows=$nM/$nS missing=$missing extra=$extra " +
-      (if (missing == 0 && extra == 0 && nM == nS) "(multi-batch == single-batch)"
-       else "(MISMATCH)"))
-    missing == 0 && extra == 0 && nM == nS
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val eventsPath = s"$sfDir/events.parquet"
     val T = streaming.TopicStream
     val split = T.timeOrderedSplitInput(spark, eventsPath, 3,
@@ -64,7 +41,8 @@ object CheckStreamWindowed {
       val multi = run(split, Some(1), s"${name}_multi").select(cols.map(col): _*)
       val tM = (System.nanoTime() - t0) / 1e9
       val single = run(eventsPath, None, s"${name}_single").select(cols.map(col): _*)
-      ok &= compare(name, multi, single)
+      ok &= GraftSession.sameRows(s"[check-stream-windowed] $name",
+        "multi-batch == single-batch", multi, single)
       println(f"[check-stream-windowed] $name multi-batch wall $tM%.1f s")
     }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1+/sf10 gate for the triangle family (r17b): the triangle rows'
@@ -22,16 +21,8 @@ object CheckTriangle {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     GatePreflight.run(minFreeGb = 60L, main = "CheckTriangle")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val maxCollect = sys.env.getOrElse("GRAFT_CHECK_MAX_ROWS", "100000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     graft.operators.Graph.writeKnnEdgeIndex(emb, "graft_knn_tri_check")
     val card = graft.operators.Graph

@@ -1,14 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (r17 optimization round): dump `.explain("formatted")` for a
   * comma-separated list of declared queries to `<outDir>/<name>_<tag>.txt`.
   * Usage: PlanDump <names|all> <sfDir> <outDir> <tag>
-  * The session mirrors Bench's configuration so the captured plan is the
+  * The session is Bench's (GraftSession), so the captured plan is the
   * plan the bench actually times (same shuffle partitions, split size,
-  * nanos handling).
+  * nanos handling). A `stream_*` row dumps its last micro-batch's plan
+  * (TopicStream.lastBatchPlan), not the read-back of its output; a
+  * stream row that captures no batch plan fails. Exits nonzero if any
+  * row failed.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,35 +22,34 @@ object PlanDump {
     val outDir = Paths.get(args(2))
     val tag = args(3)
     Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_NOAQE=1: disable AQE so the static planner's
     // ReuseExchange markers show in the dump — a readable proxy for the
     // runtime stage reuse AQE performs but explain() hides.
-    val aqe = if (sys.env.get("SPARK_GRAFT_NOAQE").contains("1")) "false" else "true"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (sys.env.get("SPARK_GRAFT_NOAQE").contains("1"))
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    var failed = 0
     for (name <- names) {
       try {
+        val stream = name.startsWith("stream_")
+        streaming.TopicStream.lastBatchPlan = ""
         val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan =
+          if (!stream) df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          else if (streaming.TopicStream.lastBatchPlan.nonEmpty)
+            streaming.TopicStream.lastBatchPlan
+          else throw new IllegalStateException(
+            "stream row captured no micro-batch plan (TopicStream.awaitAndCapturePlan)")
         Files.write(outDir.resolve(s"${name}_$tag.txt"),
           plan.getBytes("UTF-8"),
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
         println(s"[plandump] $name ok (${plan.length} chars)")
       } catch {
-        case e: Throwable => println(s"[plandump] $name FAILED: $e")
+        case e: Throwable => failed += 1; println(s"[plandump] $name FAILED: $e")
       }
     }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev scratch (r17): price the shingle-kernel double-evaluation that
@@ -11,16 +10,7 @@ object ProfKernel {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     graft.functions.NativeHash.register(spark)
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
     def t(label: String)(f: => Unit): Unit = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev scratch (r18, VERDICT #6): piecewise timing INSIDE
@@ -15,17 +14,7 @@ object ProfPr {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[prof] $label%-30s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r14): recall-vs-refine evidence for the PQ shortlist knob.
@@ -18,16 +17,8 @@ import org.apache.spark.sql.functions._
 object RecallSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
+    // quieter than WARN: Spark warnings would interleave with the printed table
     spark.sparkContext.setLogLevel("ERROR")
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val isQuery = col("vec_id") < 8

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -33,18 +32,10 @@ object ScaleCurves {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val label = if (args.length > 1) args(1) else dir
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // single-FILE test tables only split on row-group boundaries;
-      // 4 MB splits let a one-file corpus (ScaleGen writes 4 MB row
-      // groups) scan in parallel instead of one straggler task (r12)
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors())
+    // 32 shuffle partitions on every box keeps new curves comparable
+    // with the recorded tools/scale_curves_r*.jsonl
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text").cache()
     val emb = Tables.load(spark, dir, "embeddings").cache()

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic sf1-scale generator for the dedup/ANN stress runs
   * (round-9 VERDICT #1): writes `documents.parquet` (10× the sf0.1 row
   * count) and `embeddings.parquet` into `outDir`, mirroring the driver
@@ -129,12 +127,7 @@ object ScaleGen {
     val copyFrom = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val nEvents = if (args.length > 4) args(4).toLong else 1000000L
     val nUsers = (nEvents / 66L).max(1L)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     import spark.implicits._
 
     // check.py/DuckDB read `<dir>/<t>.parquet` as ONE file, so the Spark

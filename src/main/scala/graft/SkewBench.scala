@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{RangeJoin, TopicOps}
@@ -34,15 +34,10 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors())
+    // 32 shuffle partitions on every box keeps skew numbers comparable
+    // across machines and with the SURVEY §5 table
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     // one key takes ~10% of the whole topic (every 10th record)
     val topic = Topics.events(spark, dir)

@@ -1,27 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: Verify <sfDir> <outDir> [name,name…] — the optional list
+  * re-dumps just those queries into an existing output dir (and
+  * refreshes oracle_sql.json), so a changed query can be re-checked
+  * with tools/check.py without paying the full Verify wall time.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // single-FILE test tables only split on row-group boundaries;
-      // 4 MB splits let a one-file corpus (ScaleGen writes 4 MB row
-      // groups) scan in parallel instead of one straggler task (r12)
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir, subset @ _*) = args
+    val queries = subset.headOption.fold(SparkEntry.queries.toSeq) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+      names.map(n => n -> SparkEntry.queries(n))
+    }
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -78,7 +78,9 @@ private[functions] object ImageIoPool {
     try {
       w.setOutput(ios)
       w.write(img)
-      ios.flush()
+      // close, not flush: also releases the stream's memory cache
+      // (the target ByteArrayOutputStream stays open)
+      ios.close()
     } catch {
       case e: Throwable =>
         // an aborted encode leaves plugin state unknown — recreate

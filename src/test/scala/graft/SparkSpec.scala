@@ -6,15 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs (one JVM, sequential suites). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .getOrCreate()
+    val s = GraftSession.local(4)
+    // quieter than WARN: expected-failure specs would flood the test log
     s.sparkContext.setLogLevel("ERROR")
     s
   }
