@@ -17,7 +17,7 @@ object BenchFromIndex {
     val sfDir = args(0)
     // shared assert-loud preflight (r16 VERDICT #5): stale scratch wipe
     // + disk headroom for the sf10 candidate-sort spill + heap echo
-    GatePreflight.run(minFreeGb = 60L, main = "BenchFromIndex")
+    GatePreflight.run(sfDir, main = "BenchFromIndex")
     val spark = GraftSession.local()
     // quieter than WARN: Spark warnings would interleave with the printed table
     spark.sparkContext.setLogLevel("ERROR")

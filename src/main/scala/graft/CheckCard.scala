@@ -21,7 +21,7 @@ object CheckCard {
     val sfDir = args(0)
     // shared assert-loud preflight (r16 VERDICT #5): stale scratch wipe
     // + disk headroom for the sf10 candidate-sort spill + heap echo
-    GatePreflight.run(minFreeGb = 60L, main = "CheckCard")
+    GatePreflight.run(sfDir, main = "CheckCard")
     val tau = if (args.length > 1) args(1).toDouble else 0.4
     val maxCollect = sys.env.getOrElse("GRAFT_CHECK_MAX_ROWS", "100000000").toLong
     val spark = GraftSession.local()

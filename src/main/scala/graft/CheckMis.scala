@@ -26,7 +26,7 @@ object CheckMis {
     val sfDir = args(0)
     // shared assert-loud preflight (r16 VERDICT #5): stale scratch wipe
     // + disk headroom for the sf10 candidate-sort spill + heap echo
-    GatePreflight.run(minFreeGb = 60L, main = "CheckMis")
+    GatePreflight.run(sfDir, main = "CheckMis")
     val maxCollect = sys.env.getOrElse("GRAFT_CHECK_MAX_ROWS", "100000000").toLong
     val spark = GraftSession.local()
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")

@@ -23,7 +23,7 @@ object CheckSemDedup {
     val sfDir = args(0)
     // shared assert-loud preflight (r16 VERDICT #5): stale scratch wipe
     // + disk headroom for the sf10 candidate-sort spill + heap echo
-    GatePreflight.run(minFreeGb = 60L, main = "CheckSemDedup")
+    GatePreflight.run(sfDir, main = "CheckSemDedup")
     val tau = if (args.length > 1) args(1).toDouble else 0.4
     val spark = GraftSession.local()
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object CheckTriangle {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    GatePreflight.run(minFreeGb = 60L, main = "CheckTriangle")
+    GatePreflight.run(sfDir, main = "CheckTriangle")
     val maxCollect = sys.env.getOrElse("GRAFT_CHECK_MAX_ROWS", "100000000").toLong
     val spark = GraftSession.local()
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")

@@ -221,7 +221,7 @@ object Cli {
     import org.apache.spark.sql.expressions.Window
     import Similarity.PqIndex
     import graft.functions.Codebooks.PqBook
-    val n = emb.count()
+    val n = graft.sources.Tables.rowCount(emb)
     // -f swaps in the FITTED index (laddered coarse k-means + narrow
     // residual book fitted against it — the r16/r17 recall answer), -q
     // the 16x64 book; -r dials the probed fraction (probesForRecall).
@@ -239,8 +239,7 @@ object Cli {
     val isQuery = col("vec_id") < 8
     val v = Similarity.vectors(emb)
     graft.sources.Bucketing.writeBucketed(
-      v.filter(!isQuery).select(col("vec_id").as("corpus_id"),
-        bucketCol.as("bucket"), codeCol.as("codes")),
+      Similarity.pqCorpusIndex(v.filter(!isQuery), bucketCol, codeCol),
       table, 8, "bucket")
     graft.sources.Bucketing.writeBucketed(
       v.filter(!isQuery).select(col("vec_id").as("corpus_id"),

@@ -7,7 +7,8 @@ package graft
   * "Java heap space" line buried far above a cascade of
   * SPILL_OUT_OF_MEMORY noise. This applies the check_one.py
   * assert-loud discipline to the Spark side: wipe stale scratch, ASSERT
-  * usable disk, and surface the driver heap that actually applied, all
+  * usable disk (scaled to the input, so a small sf gates on a small
+  * disk), and surface the driver heap that actually applied, all
   * BEFORE the expensive build starts.
   */
 object GatePreflight {
@@ -18,11 +19,39 @@ object GatePreflight {
     f.delete(); ()
   }
 
-  /** Wipe stale per-run scratch, assert `minFreeGb` usable space on the
-    * scratch filesystem, and print the JVM heap cap. Call before
+  /** The sf10 calibration point: 200,000 vectors needed ~60 GB free
+    * (~40 GB of transient kNN candidate-sort spill plus margin). */
+  val Sf10Vectors = 200000L
+  val Sf10FreeGb = 60L
+
+  /** Usable disk a gate over `nVectors` embeddings demands: the kNN
+    * candidate sort dominates the spill, and the candidate count grows as
+    * N^1.5 with the √N nlist ladder (sf10's kNN build measured 25× sf1's
+    * time at 10× the vectors), so the sf10 figure scales by
+    * (nVectors / Sf10Vectors)^1.5, rounded up, never below 1 GB.
+    */
+  def requiredFreeGb(nVectors: Long): Long =
+    math.max(1L,
+      math.ceil(Sf10FreeGb * math.pow(nVectors.toDouble / Sf10Vectors, 1.5)).toLong)
+
+  /** Rows of `sfDir`'s embeddings table, from its Parquet footers (no
+    * SparkSession needed). */
+  def embeddingRows(sfDir: String): Long = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val path = new org.apache.hadoop.fs.Path(s"$sfDir/embeddings.parquet")
+    val it = path.getFileSystem(conf).listFiles(path, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+      .toSeq
+    graft.sources.Tables.footerRowCount(files, conf)
+  }
+
+  /** Wipe stale per-run scratch, assert the usable space a gate over
+    * `sfDir` needs ([[requiredFreeGb]] of its embeddings row count) on
+    * the scratch filesystem, and print the JVM heap cap. Call before
     * building the SparkSession (nothing here needs one).
     */
-  def run(minFreeGb: Long, main: String): Unit = {
+  def run(sfDir: String, main: String): Unit = {
     val scratch = new java.io.File("target/stream-scratch")
     if (scratch.exists()) {
       val sz = java.nio.file.Files.walk(scratch.toPath)
@@ -30,13 +59,16 @@ object GatePreflight {
       println(s"[$main] preflight: wiping stale target/stream-scratch (~$sz GB)")
       deleteRecursively(scratch)
     }
+    val nVectors = embeddingRows(sfDir)
+    val minFreeGb = requiredFreeGb(nVectors)
     val freeGb = new java.io.File("target").getUsableSpace / (1024L * 1024 * 1024)
     require(freeGb >= minFreeGb,
       s"[$main] preflight: only $freeGb GB usable under target/ but the " +
-        s"gate needs >= $minFreeGb GB transient spill headroom (r16: the " +
-        "sf10 kNN candidate sort spills ~40 GB) — free disk before gating")
+        s"gate needs >= $minFreeGb GB transient spill headroom for $nVectors " +
+        s"vectors (r16: the sf10 kNN candidate sort spills ~40 GB) — free disk before gating")
     val heapGb = Runtime.getRuntime.maxMemory / (1024L * 1024 * 1024)
-    println(s"[$main] preflight: $freeGb GB disk free, driver heap cap " +
+    println(s"[$main] preflight: $freeGb GB disk free ($minFreeGb GB needed for " +
+      s"$nVectors vectors), driver heap cap " +
       s"~$heapGb GB (SPARK_DRIVER_MEM=${sys.env.getOrElse("SPARK_DRIVER_MEM", "unset — 8g default")})")
   }
 }

@@ -84,6 +84,8 @@ object NativeHash {
       exprs => IvfProbes(exprs.head, if (exprs.length > 1) foldableGram(exprs(1)) else 2)),
     ("graft_pq_code", "1-based IVF-PQ residual codes per subspace (corpus index encoding)",
       exprs => PqCode(exprs.head)),
+    ("graft_pq_code_at", "graft_pq_code for a vector whose coarse bucket is given: (e, bucket)",
+      exprs => PqCodeAt(exprs.head, exprs(1))),
     ("graft_pq_score", "approximate cosine from (query vec, coarse bucket, PQ codes)",
       exprs => PqScore(exprs.head, exprs(1), exprs(2))),
     ("graft_avro_encode", "encode (event_type, k, user_id) as an Avro GraftEvent binary datum",

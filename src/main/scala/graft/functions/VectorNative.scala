@@ -465,6 +465,39 @@ case class PqCode(child: Expression,
     copy(child = newChild)
 }
 
+/** (e, bucket) → [[PqCode]]'s codes for a vector whose 1-based coarse
+  * bucket is already a column — the corpus side of the IVF-PQ index
+  * computes the bucket once and feeds it here, instead of PqCode
+  * repeating the nlist-centroid argmax per row. Identical codes: the
+  * bucket IS the argmax PqCode would take (callers pass the IvfBucket
+  * column over the same e and codebook), and the residual arithmetic is
+  * shared. Only ĉ (the unit coarse rows) and the PQ book are needed.
+  */
+case class PqCodeAt(left: Expression, right: Expression,
+                    centsHat: Array[Array[Double]] = Codebooks.centroidsHat,
+                    pq: Array[Array[Array[Double]]] = Codebooks.pqCents)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  Codebooks.requirePqShape(pq, "graft_pq_code_at")
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "graft_pq_code_at"
+
+  override protected def nullSafeEval(e: Any, bucket: Any): Any =
+    VectorNativeImpl.pqCodeAt(e.asInstanceOf[ArrayData], bucket.asInstanceOf[Int],
+      centsHat, pq)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val hRef = ctx.addReferenceObj("pqCoarseHat", centsHat, "double[][]")
+    val pRef = ctx.addReferenceObj("pqCents", pq, "double[][][]")
+    defineCodeGen(ctx, ev,
+      (e, b) => s"graft.functions.VectorNativeImpl.pqCodeAt($e, $b, $hRef, $pRef)")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): PqCodeAt =
+    copy(left = newLeft, right = newRight)
+}
+
 /** e → the vector's total squared PQ quantization error as a
   * fixed-point BIGINT (r17b — the index-quality card's kernel): the
   * residual û − ĉ_b against the vector's coarse bucket is quantized per
@@ -607,9 +640,7 @@ object VectorNativeImpl {
     */
   private def dot(a: ArrayData, coefs: Array[Double]): Double = {
     val n = a.numElements()
-    if (n != coefs.length)
-      throw new IllegalArgumentException(
-        s"graft codebook kernel: embedding has $n dims, codebook expects ${coefs.length}")
+    requireCodebookDim(n, coefs)
     var s = 0.0
     var i = 0
     while (i < n) { s += a.getDouble(i) * coefs(i); i += 1 }
@@ -624,12 +655,18 @@ object VectorNativeImpl {
 
   /** See [[FpUnit]]. Null (not a throw) for the zero vector. */
   def fpUnit(e: ArrayData): ArrayData = {
-    val n = e.numElements()
+    val out = fpUnit(toDoubles(e))
+    if (out == null) null else new GenericArrayData(out)
+  }
+
+  /** [[fpUnit]] over a row already on the driver (the fit samples). */
+  private[graft] def fpUnit(x: Array[Double]): Array[Double] = {
+    val n = x.length
     val xf = new Array[Double](n)
     var n2 = 0.0 // exact: every term and partial sum is an integer < 2^53
     var i = 0
     while (i < n) {
-      val v = math.floor(e.getDouble(i) * FpScale)
+      val v = math.floor(x(i) * FpScale)
       xf(i) = v
       n2 += v * v
       i += 1
@@ -639,7 +676,7 @@ object VectorNativeImpl {
     val out = new Array[Double](n)
     i = 0
     while (i < n) { out(i) = math.floor(xf(i) * FpScale / s); i += 1 }
-    new GenericArrayData(out)
+    out
   }
 
   def planeBuckets(e: ArrayData): ArrayData = {
@@ -658,21 +695,86 @@ object VectorNativeImpl {
     new GenericArrayData(out)
   }
 
-  /** All centroid cosines for one vector, in centroid order. */
-  private def centroidCos(e: ArrayData, cents: Array[Array[Double]],
-                          cnorms: Array[Double]): Array[Double] = {
-    val nrm = norm(e)
-    val cc = new Array[Double](cents.length)
+  /** The row's components as a primitive array, read once with
+    * getDouble — the read every kernel here makes, so a null element is
+    * the same 0.0 — and then folded from the array.
+    */
+  private def toDoubles(e: ArrayData): Array[Double] = {
+    val n = e.numElements()
+    val x = new Array[Double](n)
+    var i = 0
+    while (i < n) { x(i) = e.getDouble(i); i += 1 }
+    x
+  }
+
+  private def norm(x: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < x.length) { s += x(i) * x(i); i += 1 }
+    math.sqrt(s)
+  }
+
+  private def requireCodebookDim(n: Int, coefs: Array[Double]): Unit =
+    if (n != coefs.length)
+      throw new IllegalArgumentException(
+        s"graft codebook kernel: embedding has $n dims, codebook expects ${coefs.length}")
+
+  /** All centroid cosines for one vector, in centroid order. Register-
+    * blocked: four centroids per pass over x, each with its own
+    * accumulator, so every dot is still the index-order left fold of
+    * [[dot]] and every cosine is bit-identical to the one-centroid-at-
+    * a-time loop (JVM double arithmetic is strict; the four folds never
+    * mix). A dimension mismatch names the first mismatched centroid
+    * in index order.
+    */
+  private[graft] def centroidCos(x: Array[Double], cents: Array[Array[Double]],
+                                 cnorms: Array[Double]): Array[Double] = {
+    val n = x.length
+    val nrm = norm(x)
+    val k = cents.length
+    val cc = new Array[Double](k)
     var c = 0
-    while (c < cents.length) {
-      cc(c) = dot(e, cents(c)) / (nrm * cnorms(c))
+    while (c + 4 <= k) {
+      val c0 = cents(c); val c1 = cents(c + 1); val c2 = cents(c + 2); val c3 = cents(c + 3)
+      requireCodebookDim(n, c0); requireCodebookDim(n, c1)
+      requireCodebookDim(n, c2); requireCodebookDim(n, c3)
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      var i = 0
+      while (i < n) {
+        val xi = x(i)
+        s0 += xi * c0(i); s1 += xi * c1(i); s2 += xi * c2(i); s3 += xi * c3(i)
+        i += 1
+      }
+      cc(c) = s0 / (nrm * cnorms(c))
+      cc(c + 1) = s1 / (nrm * cnorms(c + 1))
+      cc(c + 2) = s2 / (nrm * cnorms(c + 2))
+      cc(c + 3) = s3 / (nrm * cnorms(c + 3))
+      c += 4
+    }
+    while (c < k) {
+      val c0 = cents(c)
+      requireCodebookDim(n, c0)
+      var s0 = 0.0
+      var i = 0
+      while (i < n) { s0 += x(i) * c0(i); i += 1 }
+      cc(c) = s0 / (nrm * cnorms(c))
       c += 1
     }
     cc
   }
 
+  private[graft] def centroidCos(e: ArrayData, cents: Array[Array[Double]],
+                                 cnorms: Array[Double]): Array[Double] =
+    centroidCos(toDoubles(e), cents, cnorms)
+
   def ivfBucket(e: ArrayData, cents: Array[Array[Double]], cnorms: Array[Double]): Int =
-    firstMaxPos(centroidCos(e, cents, cnorms))
+    ivfBucket(toDoubles(e), cents, cnorms)
+
+  /** [[ivfBucket]] over a row already on the driver as a primitive array
+    * (the local k-means and the PQ fit's sample assignment). */
+  private[graft] def ivfBucket(x: Array[Double], cents: Array[Array[Double]],
+                               cnorms: Array[Double]): Int =
+    firstMaxPos(centroidCos(x, cents, cnorms))
 
   /** Spark SQL's double ordering (SQLOrderingUtil.compareDoubles): IEEE
     * comparisons first — so -0.0 == 0.0, unlike java.lang.Double.compare —
@@ -715,13 +817,36 @@ object VectorNativeImpl {
 
   def pqCode(e: ArrayData, cents: Array[Array[Double]], cnorms: Array[Double],
              centsHat: Array[Array[Double]], pq: Array[Array[Array[Double]]]): ArrayData = {
+    requirePqDim(e.numElements(), pq.length, pq(0)(0).length, "graft_pq_code")
+    val x = toDoubles(e)
+    pqCodeOf(x, ivfBucket(x, cents, cnorms), centsHat, pq)
+  }
+
+  /** [[pqCode]] for a vector whose 1-based coarse `bucket` is already
+    * known (see [[PqCodeAt]]) — the codes are those pqCode computes
+    * after its own argmax. */
+  def pqCodeAt(e: ArrayData, bucket: Int, centsHat: Array[Array[Double]],
+               pq: Array[Array[Array[Double]]]): ArrayData = {
+    requirePqDim(e.numElements(), pq.length, pq(0)(0).length, "graft_pq_code_at")
+    pqCodeOf(toDoubles(e), bucket, centsHat, pq)
+  }
+
+  /** The residual r_i = x_i/‖x‖ − ĉ_b,i, computed once per row and
+    * read by every (subspace, code) fold. */
+  private def residual(x: Array[Double], ch: Array[Double]): Array[Double] = {
+    val nrm = norm(x)
+    val r = new Array[Double](x.length)
+    var i = 0
+    while (i < x.length) { r(i) = x(i) / nrm - ch(i); i += 1 }
+    r
+  }
+
+  private def pqCodeOf(x: Array[Double], bucket: Int, centsHat: Array[Array[Double]],
+                       pq: Array[Array[Array[Double]]]): ArrayData = {
     val pqM = pq.length
     val pqK = pq(0).length
     val pqSub = pq(0)(0).length
-    requirePqDim(e.numElements(), pqM, pqSub, "graft_pq_code")
-    val nrm = norm(e)
-    val b = ivfBucket(e, cents, cnorms) - 1
-    val ch = centsHat(b)
+    val r = residual(x, centsHat(bucket - 1))
     val out = new Array[Int](pqM)
     var m = 0
     while (m < pqM) {
@@ -733,9 +858,7 @@ object VectorNativeImpl {
         var d = 0
         var s = 0.0
         while (d < pqSub) {
-          val i = m * pqSub + d
-          val r = e.getDouble(i) / nrm - ch(i)
-          val diff = r - c(d)
+          val diff = r(m * pqSub + d) - c(d)
           s += diff * diff
           d += 1
         }
@@ -767,9 +890,8 @@ object VectorNativeImpl {
     val pqK = pq(0).length
     val pqSub = pq(0)(0).length
     requirePqDim(e.numElements(), pqM, pqSub, "graft_pq_error")
-    val nrm = norm(e)
-    val b = ivfBucket(e, cents, cnorms) - 1
-    val ch = centsHat(b)
+    val x = toDoubles(e)
+    val r = residual(x, centsHat(ivfBucket(x, cents, cnorms) - 1))
     var total = 0.0
     var m = 0
     while (m < pqM) {
@@ -780,9 +902,7 @@ object VectorNativeImpl {
         var s = 0.0
         var d = 0
         while (d < pqSub) {
-          val i = m * pqSub + d
-          val r = e.getDouble(i) / nrm - ch(i)
-          val diff = r - c(d)
+          val diff = r(m * pqSub + d) - c(d)
           s += diff * diff
           d += 1
         }

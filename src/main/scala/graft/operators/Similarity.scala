@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Codebooks
+import graft.functions.{Codebooks, VectorNativeImpl}
 import graft.functions.Codebooks.PqBook
 import graft.functions.VectorFunctions._
+import graft.sources.Tables
 
 /** Embedding similarity operators (SURVEY.md §2c): exact cosine top-k as
   * the baseline, random-hyperplane LSH, IVF coarse quantization and
@@ -76,11 +77,13 @@ object Similarity {
   def vectors(emb: DataFrame): DataFrame = {
     graft.functions.NativeHash.register(emb.sparkSession)
     // NOTE (r17, measured): a spreadScan here was tried and REVERTED —
-    // the FIT paths re-evaluate this projection once per k-means round,
-    // so the repair exchange re-shipped the fat embedding column every
-    // round and the fitted serving rows regressed (+0.25..0.74 s at
-    // sf0.1) while the serving-only rows were neutral. The single-split
-    // scan cost is fit-bound, not serving-bound; left as-is.
+    // the fitted serving rows regressed (+0.25..0.74 s at sf0.1) while
+    // the serving-only rows were neutral. The cause then was that the
+    // fits re-read this projection once per k-means round, so the
+    // exchange re-shipped the fat embedding column every round. Since
+    // r18 a fit reads it once (one collect, rounds on the driver), so
+    // that cause is gone; the spread has not been re-measured since and
+    // is left out.
     emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
       .withColumn("nrm", expr("graft_norm(e)"))
   }
@@ -348,7 +351,7 @@ object Similarity {
     * ladder.
     */
   def knnJoinIvfSized(emb: DataFrame, k: Int = 5, probes: Int = 2): DataFrame = {
-    val n = emb.count()
+    val n = Tables.rowCount(emb)
     knnJoinIvf(emb, k, sizedProbes(probes, n), sizedNlist(n), sizedCandWidth(n, emb))
   }
 
@@ -366,7 +369,7 @@ object Similarity {
     */
   def knnJoinIvfFittedSized(emb: DataFrame, k: Int = 5, probes: Int = 2,
                             iters: Int = 3): DataFrame = {
-    val n = emb.count()
+    val n = Tables.rowCount(emb)
     val nlist = sizedNlist(n)
     val cents = fitCentroidsWithModulus(emb, nlist, iters, sizedKmFitModulus(n))
     val cnorms = rowNorms(cents)
@@ -406,12 +409,13 @@ object Similarity {
     * mipsIvfTopK precedent, r15 ADVICE adjudication): it is the one
     * job that keeps the ladder a pure function of the CURRENT corpus —
     * a cached count would silently serve a stale nlist after an
-    * append — and it prices at a metadata-only parquet count next to
-    * the probe join it sizes.
+    * append. On a bare Parquet scan [[Tables.rowCount]] reads it from
+    * the footers on the driver (no job); any other frame pays one count
+    * job next to the probe join it sizes.
     */
   def ivfTopKSized(emb: DataFrame, isQuery: Column, k: Int = 10,
                    probes: Int = 8): DataFrame = {
-    val n = emb.count()
+    val n = Tables.rowCount(emb)
     ivfTopK(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n))
   }
 
@@ -507,7 +511,7 @@ object Similarity {
     */
   def fitCentroids(emb: DataFrame, k: Int = NCentroids,
                    iters: Int = 3): Array[Array[Double]] =
-    fitCentroidsWithModulus(emb, k, iters, sizedKmFitModulus(emb.count()))
+    fitCentroidsWithModulus(emb, k, iters, sizedKmFitModulus(Tables.rowCount(emb)))
 
   /** [[fitCentroids]] with an EXPLICIT fit modulus. The laddered
     * serving paths pass [[sizedKmFitModulus]] of the count they already
@@ -517,14 +521,6 @@ object Similarity {
     */
   private[graft] def fitCentroidsWithModulus(emb: DataFrame, k: Int,
                                              iters: Int, m: Long): Array[Array[Double]] = {
-    // seeds come from the LADDERED LCG row regions (r16 — the fitted
-    // serving ladder needs √N books): fpCentroidsFor == seedCentroidsFp
-    // bit-for-bit at k <= 200 (same rows, same fp normalize), and the
-    // fresh 10000.. region beyond — so every previously-gated fit is
-    // unchanged and big fits never share generator rows with small ones
-    require(k >= 1 && k <= 2048,
-      s"k=$k out of range: the LCG seed ladder provides 1..2048 centroids")
-    require(m >= 1L, s"fit modulus must be >= 1, got $m")
     // NOTE (r18, measured): spreading/repartitioning this fit frame was
     // tried and REJECTED — the per-round cost is ~0.3 s of JOB overhead
     // at any partition count (1/2/4/8/32 all ~0.3 s/round warm in a
@@ -533,15 +529,86 @@ object Similarity {
     // the sample is ≤ KmFitCap rows BY DESIGN, so the recurrence runs
     // DRIVER-LOCAL on one collected sample (the tokenizer_fit
     // fitLocal / fitPqCodebooks precedent) — 1 job instead of 1+iters.
-    val base = vectors(emb)
-    // x̂ computed ONCE — the loop's 64 element_at references (in the
-    // distributed spec twin) read a stored array, never re-evaluate
-    // the kernel (the HOF-inlining landmine, SURVEY §5)
-    val v = (if (m > 1L) base.filter(kmFitFilter(m)) else base)
-      .withColumn("xh", expr("graft_fp_unit(e)"))
-      .filter(col("xh").isNotNull)
-      .select(col("xh"))
-    fitLoopLocal(v, Codebooks.fpCentroidsFor(k), Dim, iters)
+    requireKmFit(k, m)
+    fitLoopRows(collectFitRows(kmFitSample(emb, m)).map(_.xh),
+      Codebooks.fpCentroidsFor(k), Dim, iters)
+  }
+
+  private def requireKmFit(k: Int, m: Long): Unit = {
+    // seeds come from the LADDERED LCG row regions (r16 — the fitted
+    // serving ladder needs √N books): fpCentroidsFor == seedCentroidsFp
+    // bit-for-bit at k <= 200 (same rows, same fp normalize), and the
+    // fresh 10000.. region beyond — so every previously-gated fit is
+    // unchanged and big fits never share generator rows with small ones
+    require(k >= 1 && k <= 2048,
+      s"k=$k out of range: the LCG seed ladder provides 1..2048 centroids")
+    require(m >= 1L, s"fit modulus must be >= 1, got $m")
+  }
+
+  /** The k-means fit sample: every vector at m = 1, the minstd-id
+    * sample beyond ([[kmFitFilter]]). */
+  private def kmFitSample(emb: DataFrame, m: Long): DataFrame = {
+    val base = vectors(emb).filter(col("e").isNotNull)
+    if (m > 1L) base.filter(kmFitFilter(m)) else base
+  }
+
+  /** A fit-sample row on the driver: its id, its components `e` and its
+    * fixed-point unit vector `xh` (never null). A null id sorts first,
+    * as in Spark's ascending order. */
+  private final class FitRow(val idNull: Boolean, val id: Long,
+                             val e: Array[Double], val xh: Array[Double])
+
+  /** Collects (vec_id, e) of a [[vectors]] frame with no null `e` in one
+    * job and keeps the rows with a non-null x̂. x̂ is computed on the
+    * driver by the kernel graft_fp_unit runs
+    * ([[VectorNativeImpl.fpUnit]]), so the rows are
+    * exactly those an executor-side `graft_fp_unit(e) IS NOT NULL` keeps.
+    * The collect holds 64 doubles per row, as the x̂ collect it replaces
+    * did; the sample is ≤ [[KmFitCap]] rows by construction.
+    */
+  private def collectFitRows(v: DataFrame): Array[FitRow] =
+    v.select(col("vec_id").cast("long"), col("e"))
+      .collect()
+      .flatMap { r =>
+        val e = r.getSeq[Double](1).toArray
+        val xh = VectorNativeImpl.fpUnit(e)
+        if (xh == null) None
+        else Some(new FitRow(r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0), e, xh))
+      }
+
+  /** The first `n` rows by vec_id — the PQ fit sample taken from rows
+    * already collected. */
+  private def firstByVecId(rows: Array[FitRow], n: Int): Array[FitRow] =
+    rows.sortBy(r => (!r.idNull, r.id)).take(n)
+
+  /** The PQ fit sample read on its own: the first `n` vec_ids whose x̂ is
+    * non-null, one bounded collect. */
+  private def collectPqSample(emb: DataFrame, n: Int): Array[FitRow] =
+    collectFitRows(vectors(emb)
+      .filter(expr("graft_fp_unit(e)").isNotNull)
+      .orderBy(col("vec_id")).limit(n))
+
+  /** The fitted index's books from ONE collect: the laddered coarse
+    * k-means (3 rounds over the `m` fit sample) and a residual book per
+    * entry of `books`, fitted against it. At m = 1 the k-means sample is
+    * the whole corpus, so each PQ sample (the first `fitSample` vec_ids
+    * with a non-null x̂) is taken from the same rows; beyond, each book
+    * reads its sample with one bounded collect. Bit-identical to
+    * [[fitCentroidsWithModulus]] + [[fitPqCodebooks]] (SimilaritySpec).
+    */
+  private[graft] def fitIndex(emb: DataFrame, nlist: Int, m: Long, books: Seq[PqBook])
+      : (Array[Array[Double]], Array[Double], Seq[Array[Array[Array[Double]]]]) = {
+    requireKmFit(nlist, m)
+    val km = collectFitRows(kmFitSample(emb, m))
+    val cents = fitLoopRows(km.map(_.xh), Codebooks.fpCentroidsFor(nlist), Dim, 3)
+    val cnorms = rowNorms(cents)
+    val pqs = books.map { book =>
+      val sample =
+        if (m == 1L) firstByVecId(km, book.fitSample)
+        else collectPqSample(emb, book.fitSample)
+      fitPqRows(sample, cents, cnorms, cents, book, 5)
+    }
+    (cents, cnorms, pqs)
   }
 
   /** DRIVER-LOCAL twin of [[fitLoopDistributed]] (r18, guide §1.2 —
@@ -557,23 +624,22 @@ object Similarity {
     *
     * Bit-equality with the distributed form (spec'd in SimilaritySpec):
     * assignment calls the IDENTICAL [[graft.functions.VectorNativeImpl.ivfBucket]]
-    * kernel over UnsafeArrayData-wrapped rows; per-bucket count/sum are
-    * exact longs (order-free under any threading), and the truncating
+    * kernel (its primitive-row entry: the same centroid folds); per-bucket
+    * count/sum are exact longs (order-free under any threading), and the truncating
     * division + fpNormalize are shared verbatim. Thread partials merge
     * in fixed (thread, bucket, dim) order — determinism does not depend
     * on scheduling.
     */
   private[graft] def fitLoopLocal(v: DataFrame, seeds: Array[Array[Double]],
-                                  dim: Int, iters: Int): Array[Array[Double]] = {
-    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    val rows: Array[org.apache.spark.sql.catalyst.util.ArrayData] =
-      v.collect().map { r =>
-        val a = r.getSeq[Double](0).toArray
-        // fail on the driver, naming the width, before any worker runs
-        require(a.length == dim,
-          s"fitLoopLocal: a fit row has ${a.length} components, expected $dim")
-        UnsafeArrayData.fromPrimitiveArray(a)
-      }
+                                  dim: Int, iters: Int): Array[Array[Double]] =
+    fitLoopRows(v.collect().map(_.getSeq[Double](0).toArray), seeds, dim, iters)
+
+  /** [[fitLoopLocal]] over rows already on the driver. */
+  private def fitLoopRows(rows: Array[Array[Double]], seeds: Array[Array[Double]],
+                          dim: Int, iters: Int): Array[Array[Double]] = {
+    // fail on the driver, naming the width, before any worker runs
+    rows.foreach(a => require(a.length == dim,
+      s"fitLoopLocal: a fit row has ${a.length} components, expected $dim"))
     var cents = seeds
     val k = seeds.length
     val ones = Array.fill(k)(1.0)
@@ -592,14 +658,14 @@ object Similarity {
           var i = t // strided split — balanced, no chunk arithmetic
           while (i < rows.length) {
             val row = rows(i)
-            val b = graft.functions.VectorNativeImpl.ivfBucket(row, cur, ones) - 1
+            val b = VectorNativeImpl.ivfBucket(row, cur, ones) - 1
             if (b >= 0 && b < k) {
               cnt(b) += 1
               val s = sm(b)
               var d = 0
               // fixed-point doubles hold exact integer values; toLong
               // truncates exactly like the distributed cast("long")
-              while (d < dim) { s(d) += row.getDouble(d).toLong; d += 1 }
+              while (d < dim) { s(d) += row(d).toLong; d += 1 }
             }
             i += nThreads
           }
@@ -732,7 +798,7 @@ object Similarity {
     */
   def mipsIvfTopKFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
                         probes: Int = 8, iters: Int = 3): DataFrame =
-    mipsIvfFitted(emb, isQuery, k, probes, NCentroids, iters, emb.count())
+    mipsIvfFitted(emb, isQuery, k, probes, NCentroids, iters, Tables.rowCount(emb))
 
   /** [[mipsIvfTopKFitted]] on the CORPUS LADDERS (r16 — the MIPS face
     * of the fitted serving ladder): the augmented-space k-means fits
@@ -744,7 +810,7 @@ object Similarity {
     */
   def mipsIvfTopKFittedSized(emb: DataFrame, isQuery: Column, k: Int = 10,
                              probes: Int = 8, iters: Int = 3): DataFrame = {
-    val n = emb.count()
+    val n = Tables.rowCount(emb)
     mipsIvfFitted(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n), iters, n)
   }
 
@@ -864,7 +930,9 @@ object Similarity {
     * `index` at an explicit nlist — the ONE place the compact index's
     * kernels are built, shared by batch ([[ivfPqTopKSized]]), the
     * streaming twin (SimilarityStream.ivfPqTopKStream) and the CLI query
-    * verb, so every face encodes AND scores identically.
+    * verb, so every face encodes AND scores identically. The code column
+    * reads the corpus row's `bucket` (graft_pq_code_at), so the corpus
+    * side is built by [[pqCorpusIndex]] and the argmax runs once per row.
     *
     * Formula: the fixed fused kernels at the serving default (every gated
     * plan shape), once-per-session name-keyed kernels per nlist beyond —
@@ -876,8 +944,9 @@ object Similarity {
     * ([[Codebooks.fpCentroidsFor]], the fp twin of the value book).
     * Fitted: every kernel over the laddered coarse k-means (3 rounds on
     * the `fitModulus` sample — the caller's one count sizes it) and the
-    * `book` residual fit. Both fits are DETERMINISTIC (integer
-    * arithmetic over a first-rows sample), so every face calling this
+    * `book` residual fit, both from one collect ([[fitIndex]]). Both
+    * fits are DETERMINISTIC (integer arithmetic over a first-rows
+    * sample), so every face calling this
     * builder derives bit-identical books — the guarantee the fixed-book
     * rows get from registerOnce. Fitted books register under fresh
     * per-fit names (their builders close over this fit's arrays).
@@ -888,29 +957,28 @@ object Similarity {
                         cnorms: Array[Double], pq: Array[Array[Array[Double]]]): (Column, Column) = {
       val hat = unitRows(cents, cnorms)
       val codeName = registerFitFunction(emb, codeBase)(
-        exprs => graft.functions.PqCode(exprs.head, cents, cnorms, hat, pq))
+        exprs => graft.functions.PqCodeAt(exprs(0), exprs(1), hat, pq))
       val scoreName = registerFitFunction(emb, scoreBase)(
         exprs => graft.functions.PqScore(exprs(0), exprs(1), exprs(2), hat, pq))
-      (call_function(codeName, col("e")),
+      (call_function(codeName, col("e"), col("bucket")),
         call_function(scoreName, col("eq"), col("bucket"), col("codes")))
     }
     index match {
       case PqIndex.Formula =>
         val (bucketCol, probesCol) = ivfServingExprs(emb, probes, nlist)
         if (nlist == NCentroids)
-          (bucketCol, probesCol, expr("graft_pq_code(e)"),
+          (bucketCol, probesCol, expr("graft_pq_code_at(e, bucket)"),
             expr("graft_pq_score(eq, bucket, codes)"))
         else {
           val (cents, cnorms) = formulaCoarse(nlist)
           val centsHat = unitRows(cents, cnorms)
-          registerOnce(emb, s"graft_pq_code_$nlist")(exprs =>
-            graft.functions.PqCode(exprs.head, cents, cnorms, centsHat,
-              Codebooks.pqCents))
+          registerOnce(emb, s"graft_pq_code_at_$nlist")(exprs =>
+            graft.functions.PqCodeAt(exprs(0), exprs(1), centsHat, Codebooks.pqCents))
           registerOnce(emb, s"graft_pq_score_$nlist")(exprs =>
             graft.functions.PqScore(exprs(0), exprs(1), exprs(2), centsHat,
               Codebooks.pqCents))
           (bucketCol, probesCol,
-            call_function(s"graft_pq_code_$nlist", col("e")),
+            call_function(s"graft_pq_code_at_$nlist", col("e"), col("bucket")),
             call_function(s"graft_pq_score_$nlist",
               col("eq"), col("bucket"), col("codes")))
         }
@@ -919,22 +987,46 @@ object Similarity {
         val (cents, cnorms) = formulaCoarse(nlist)
         val pq = fitPqCodebooks(emb, cents, cnorms,
           fpRef = Codebooks.fpCentroidsFor(nlist))
-        val (codeCol, scoreCol) = fittedCodeScore(s"graft_pq_code_resfit_$nlist",
+        val (codeCol, scoreCol) = fittedCodeScore(s"graft_pq_code_at_resfit_$nlist",
           s"graft_pq_score_resfit_$nlist", cents, cnorms, pq)
         (bucketCol, probesCol, codeCol, scoreCol)
       case PqIndex.Fitted(book) =>
-        val cents = fitCentroidsWithModulus(emb, nlist, 3, fitModulus)
-        val cnorms = rowNorms(cents)
-        val pq = fitPqCodebooks(emb, cents, cnorms, book = book)
+        val (cents, cnorms, pqs) = fitIndex(emb, nlist, fitModulus, Seq(book))
+        val pq = pqs.head
         val bucketName = registerFitFunction(emb, "graft_ivf_bucket_pqfit")(
           exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
         val probesName = registerFitFunction(emb, "graft_ivf_probes_pqfit")(
           exprs => graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
-        val (codeCol, scoreCol) = fittedCodeScore("graft_pq_code_fitted",
+        val (codeCol, scoreCol) = fittedCodeScore("graft_pq_code_at_fitted",
           "graft_pq_score_fitted", cents, cnorms, pq)
         (call_function(bucketName, col("e")), call_function(probesName, col("e")),
           codeCol, scoreCol)
     }
+  }
+
+  /** The compact index's corpus rows (corpus_id, bucket, codes) over a
+    * [[vectors]] frame of corpus vectors, for [[pqServing]]'s bucket and
+    * code columns (the code column reads `e` and `bucket`). The coarse
+    * argmax runs once per row: the bucket is its own column, fed to the
+    * code kernel, and it is declared non-null (it is, once `e` is — the
+    * explicit filter) so Catalyst infers no `isnotnull(bucket)` filter
+    * from the bucket join key. Without the declaration that inferred
+    * filter is pushed below the projection as
+    * `isnotnull(graft_ivf_bucket(e))`, a second argmax per row (the
+    * join-key form of the inferred-filter landmine, CLAUDE.md). Rows
+    * with a null `e` have a null bucket, which the bucket join drops, so
+    * the filter removes no answer.
+    */
+  private[graft] def pqCorpusIndex(v: DataFrame, bucketCol: Column,
+                                   codeCol: Column): DataFrame = {
+    // Catalyst's KnownNotNull tag, reached through the registry (the
+    // kernels' own route from Column to a catalyst expression)
+    registerOnce(v, "graft_known_not_null")(exprs =>
+      org.apache.spark.sql.catalyst.expressions.KnownNotNull(exprs.head))
+    v.filter(col("e").isNotNull)
+      .select(col("vec_id").as("corpus_id"), col("e"),
+        call_function("graft_known_not_null", bucketCol).as("bucket"))
+      .select(col("corpus_id"), col("bucket"), codeCol.as("codes"))
   }
 
   /** The laddered IVF-PQ serving path — every registered PQ serving row
@@ -954,7 +1046,7 @@ object Similarity {
   def ivfPqTopKSized(emb: DataFrame, isQuery: Column, k: Int = 10,
                      probes: Int = 8, index: PqIndex = PqIndex.Formula,
                      refineMul: Int = 1): DataFrame = {
-    val n = emb.count()
+    val n = Tables.rowCount(emb)
     val (bucketCol, probesCol, codeCol, scoreCol) =
       pqServing(emb, index, sizedProbes(probes, n), sizedNlist(n), sizedKmFitModulus(n))
     ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n) * refineMul,
@@ -986,7 +1078,7 @@ object Similarity {
                       probes: Int = 8, refine: Int = 4): DataFrame = {
     val (bucketCol, probesCol, codeCol, scoreCol) =
       pqServing(emb, PqIndex.Fitted(PqBook.Narrow), probes, NCentroids,
-        sizedKmFitModulus(emb.count()))
+        sizedKmFitModulus(Tables.rowCount(emb)))
     ivfPqPlan(vectors(emb), isQuery, k, refine, bucketCol, probesCol,
       codeCol, scoreCol)
   }
@@ -996,15 +1088,13 @@ object Similarity {
     ivfPqPlan(vectors(emb), isQuery, k, refine,
       expr("graft_ivf_bucket(e)"),
       expr(s"graft_ivf_probes(e, $probes)"),
-      expr("graft_pq_code(e)"),
+      expr("graft_pq_code_at(e, bucket)"),
       expr("graft_pq_score(eq, bucket, codes)"))
 
   private def ivfPqPlan(v: DataFrame, isQuery: Column, k: Int, refine: Int,
                         bucketCol: Column, probesCol: Column,
                         codeCol: Column, scoreCol: Column): DataFrame = {
-    val corpusIdx = v.filter(!isQuery)
-      .select(col("vec_id").as("corpus_id"),
-        bucketCol.as("bucket"), codeCol.as("codes"))
+    val corpusIdx = pqCorpusIndex(v.filter(!isQuery), bucketCol, codeCol)
     val queries = v.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("e").as("eq"),
         explode(probesCol).as("bucket"))
@@ -1050,23 +1140,23 @@ object Similarity {
   def fitPqCodebooks(emb: DataFrame, cents: Array[Array[Double]],
                      cnorms: Array[Double], iters: Int = 5,
                      fpRef: Array[Array[Double]] = null,
-                     book: PqBook = PqBook.Narrow): Array[Array[Array[Double]]] = {
-    val S = graft.functions.VectorNativeImpl.FpScale
-    val ref = if (fpRef == null) cents else fpRef
-    val bucketName = registerFitFunction(emb, "graft_pqfit_assign")(
-      exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
+                     book: PqBook = PqBook.Narrow): Array[Array[Array[Double]]] =
     // NOTE (r18, measured): a spread here was tried and REJECTED with
     // the fitCentroids layout variants (a partition-count sweep: the
     // sample stage is job-overhead-bound at these row counts — an
     // exchange only adds)
-    val sample = vectors(emb)
-      .withColumn("xh", expr("graft_fp_unit(e)"))
-      .filter(col("xh").isNotNull)
-      .select(col("vec_id"), col("xh"),
-        call_function(bucketName, col("e")).as("b"))
-      .orderBy(col("vec_id")).limit(book.fitSample)
-      .collect()
-      .map(r => (r.getSeq[Double](1).toArray, r.getInt(2) - 1))
+    fitPqRows(collectPqSample(emb, book.fitSample), cents, cnorms,
+      if (fpRef == null) cents else fpRef, book, iters)
+
+  /** [[fitPqCodebooks]] over a sample already on the driver. Each row's
+    * coarse bucket is assigned here, by the kernel the serving
+    * IvfBucket runs over the same `e` and codebook — so only the sample
+    * rows pay the nlist-centroid argmax, never the whole corpus. */
+  private def fitPqRows(rows: Array[FitRow], cents: Array[Array[Double]],
+                        cnorms: Array[Double], ref: Array[Array[Double]],
+                        book: PqBook, iters: Int): Array[Array[Array[Double]]] = {
+    val S = VectorNativeImpl.FpScale
+    val sample = rows.map(r => (r.xh, VectorNativeImpl.ivfBucket(r.e, cents, cnorms) - 1))
     // integer residuals per sample vector: x̂ − ĉfp_b, componentwise
     val residuals = sample.map { case (xh, b) =>
       Array.tabulate(xh.length)(i => xh(i).toLong - ref(b)(i).toLong)
@@ -1126,12 +1216,11 @@ object Similarity {
     * beyond the one regroup.
     */
   def pqErrorCard(emb: DataFrame): DataFrame = {
-    val n = emb.count()
-    val cents = fitCentroidsWithModulus(emb, sizedNlist(n), 3, sizedKmFitModulus(n))
-    val cnorms = rowNorms(cents)
+    val n = Tables.rowCount(emb)
+    val books = Seq(PqBook.Narrow, PqBook.M16)
+    val (cents, cnorms, pqs) = fitIndex(emb, sizedNlist(n), sizedKmFitModulus(n), books)
     val hat = unitRows(cents, cnorms)
-    def bookRow(book: PqBook): DataFrame = {
-      val pq = fitPqCodebooks(emb, cents, cnorms, book = book)
+    def bookRow(book: PqBook, pq: Array[Array[Array[Double]]]): DataFrame = {
       val errName = registerFitFunction(emb, s"graft_pq_error_${book.label}")(
         exprs => graft.functions.PqError(exprs.head, cents, cnorms, hat, pq))
       vectors(emb)
@@ -1147,7 +1236,7 @@ object Similarity {
         .select(lit(book.label).as("book"), col("n_vecs"), col("sum_err_fp"),
           col("max_err_fp"), col("n_err_lo"), col("n_err_mid"), col("n_err_hi"))
     }
-    Seq(PqBook.Narrow, PqBook.M16).map(bookRow).reduce(_ unionAll _)
+    books.zip(pqs).map { case (b, pq) => bookRow(b, pq) }.reduce(_ unionAll _)
       .orderBy(col("book"))
   }
 
@@ -1434,7 +1523,7 @@ object Similarity {
     // mirrored by the oracle's `FROM embeddings` in mnlsizing); probes
     // ride the sizedProbes ladder with nlist so the probed fraction —
     // and the recall ceiling RecallSweep tracks — holds with scale
-    val n = emb.count()
+    val n = Tables.rowCount(emb)
     mipsIvfTopKNlist(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n))
   }
 
@@ -1532,7 +1621,7 @@ object Similarity {
     * (one count) — the registered `sim_topk_mips_ivf_pq` path. */
   def mipsIvfPqTopKSized(emb: DataFrame, isQuery: Column, k: Int = 10,
                          probes: Int = 8): DataFrame =
-    mipsIvfPqTopK(emb, isQuery, k, probes, sizedRefine(emb.count()))
+    mipsIvfPqTopK(emb, isQuery, k, probes, sizedRefine(Tables.rowCount(emb)))
 
   def mipsIvfPqTopK(emb: DataFrame, isQuery: Column, k: Int = 10,
                     probes: Int = 8, refine: Int = 4): DataFrame = {

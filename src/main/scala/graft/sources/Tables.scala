@@ -28,6 +28,52 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     normalize(spark.read.parquet(s"$dir/$name.parquet"))
 
+  /** Row count of `df` for the N-adaptive ladders, without a Spark job
+    * when the answer is in the files' footers: when the analyzed plan is
+    * a bare, non-partitioned Parquet scan (what `spark.read.parquet` and
+    * [[load]] return), the footer row counts of the scan's listed files
+    * are summed on the driver. Any other plan — a filter, a projection
+    * over a join, a partitioned or bucketed table, a stream — runs
+    * `df.count()`. The file list is the relation's own (listed when the
+    * frame was built), the same files `count()` would scan, so the two
+    * agree. A footer that cannot be read falls back to `count()`, which
+    * reports the real error if there is one. Past [[FooterCountMaxFiles]]
+    * files a distributed count is the cheaper way to read the footers.
+    */
+  def rowCount(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation if !l.isStreaming => l.relation match {
+        case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            r.partitionSchema.isEmpty && r.bucketSpec.isEmpty =>
+          val files = r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
+          if (files.length > FooterCountMaxFiles) df.count()
+          else {
+            val conf = df.sparkSession.sessionState.newHadoopConf()
+            try footerRowCount(files, conf)
+            catch { case scala.util.control.NonFatal(_) => df.count() }
+          }
+        case _ => df.count()
+      }
+      case _ => df.count()
+    }
+  }
+
+  /** Files past which [[rowCount]] counts with a job: the footers are
+    * read one after another on the driver, ~1 ms each from local disk
+    * and a round trip each from an object store. */
+  val FooterCountMaxFiles = 64
+
+  /** Sum of the row counts in the Parquet footers of `files`. */
+  def footerRowCount(files: Seq[org.apache.hadoop.fs.FileStatus],
+                     conf: org.apache.hadoop.conf.Configuration): Long =
+    files.map { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+
   /** Normalizes timestamp storage variants across test-data generations to
     * session-zone TIMESTAMP, the type watermarks and the typed topic
     * encoders require: a raw nanos long is floored to micros with integer

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.Similarity
-import graft.sources.Bucketing
+import graft.sources.{Bucketing, Tables}
 
 /** Streaming ANN serving: query vectors arrive as a stream and probe the
   * static IVF index — the online face of [[Similarity.ivfTopK]].
@@ -49,7 +49,7 @@ object SimilarityStream {
     val isQuery = col("vec_id") < 8
     // the batch face's sizing count is the WHOLE table — same here, so
     // stream and batch derive the identical ladder step
-    val n = corpus.count()
+    val n = Tables.rowCount(corpus)
     val (bucketCol, probesCol) = Similarity.ivfServingExprs(
       corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n))
 
@@ -129,7 +129,7 @@ object SimilarityStream {
     // with identical kernel constructions; every fit is deterministic, so
     // this face's books are bit-identical to the batch operator's). One
     // count sizes the ladders and the fitted index's sample.
-    val n = corpus.count()
+    val n = Tables.rowCount(corpus)
     // refineMul (r17b): the shortlist-boost dial the hq/m16 serving
     // points ride — multiplies the N-adaptive width, exactly as the
     // batch rows multiply sizedRefine
@@ -147,10 +147,8 @@ object SimilarityStream {
       vecsTable, IndexBuckets, "corpus_id")
     val idxTable = s"${tablePrefix}_idx"
     Bucketing.writeBucketed(
-      Similarity.vectors(corpus.filter(!isQuery))
-        .select(col("vec_id").as("corpus_id"),
-          bucketCol.as("bucket"),
-          codeCol.as("codes")),
+      Similarity.pqCorpusIndex(Similarity.vectors(corpus.filter(!isQuery)),
+        bucketCol, codeCol),
       idxTable, IndexBuckets, "bucket")
     val corpusVecs = spark.table(vecsTable)
     val pqIndex = spark.table(idxTable)
@@ -218,7 +216,7 @@ object SimilarityStream {
     val corpus = spark.read.parquet(embPath)
     // refine <= 0 derives the N-adaptive shortlist width (r14)
     val refineEff =
-      if (refine > 0) refine else Similarity.sizedRefine(corpus.count())
+      if (refine > 0) refine else Similarity.sizedRefine(Tables.rowCount(corpus))
     val isQuery = col("vec_id") < 8
     Similarity.registerMipsServing(corpus, probes)
 

@@ -229,6 +229,27 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("IVF-PQ corpus side: one coarse argmax per row — no inferred kernel Filter, " +
+      "the code kernel reads the bucket column") {
+    import org.apache.spark.sql.functions.col
+    val emb = graft.sources.Tables.load(spark, sf, "embeddings")
+    val isQuery = col("vec_id") < 8
+    for ((name, df) <- Seq(
+        "fitted" -> graft.operators.Similarity.ivfPqTopKFittedSized(emb, isQuery),
+        "formula" -> graft.operators.Similarity.ivfPqTopK(emb, isQuery))) {
+      val p = df.queryExecution.executedPlan.toString
+      // the join-key form of the inferred-filter landmine: an
+      // isnotnull(graft_ivf_bucket(...)) Filter below the projection
+      val kernelFilters = p.linesIterator
+        .filter(l => l.contains("Filter") && l.contains("graft_ivf_bucket"))
+      assert(kernelFilters.isEmpty, s"$name: a Filter evaluates the bucket kernel:\n$p")
+      assert("graft_ivf_bucket\\(".r.findAllIn(p).length === 1,
+        s"$name: the corpus side must evaluate the bucket kernel exactly once:\n$p")
+      assert(p.contains("graft_pq_code_at(") && !p.contains("graft_pq_code("),
+        s"$name: codes must come from the bucket column, not a second argmax:\n$p")
+    }
+  }
+
   test("whiten runs the fused PcaWhiten kernel: no transform lambda, no " +
       "inlined projection dots under it (the r13 HOF-inlining landmine)") {
     val p = graft.queries.PipelineQueries.queries("embedding_pca_whiten")(spark, sf)

@@ -456,6 +456,104 @@ class SimilaritySpec extends SparkSpec {
     assert(w.getMessage.contains(s"expected ${Similarity.Dim + 1}"), w.getMessage)
   }
 
+  test("register-blocked centroid cosines are bit-identical to the one-centroid " +
+      "fold: k in {1,3,4,5,64,128,130}, boxed and unsafe rows, signed zeros, NaN, " +
+      "a null element; the dimension-mismatch message is unchanged") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+    import graft.functions.VectorNativeImpl
+    val dim = Similarity.Dim
+    // the sequential reference: one index-order fold per centroid
+    def reference(e: ArrayData, cents: Array[Array[Double]], cnorms: Array[Double]) = {
+      var s2 = 0.0
+      for (i <- 0 until e.numElements()) s2 += e.getDouble(i) * e.getDouble(i)
+      val nrm = math.sqrt(s2)
+      cents.indices.map { c =>
+        var s = 0.0
+        for (i <- 0 until e.numElements()) s += e.getDouble(i) * cents(c)(i)
+        s / (nrm * cnorms(c))
+      }
+    }
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    val toUnsafe = UnsafeProjection.create(Array[DataType](ArrayType(DoubleType, true)))
+    def unsafe(a: GenericArrayData): ArrayData =
+      toUnsafe(InternalRow(a)).getArray(0).copy()
+    val rnd = new scala.util.Random(7)
+    def gauss(n: Int) = Array.fill(n)(rnd.nextGaussian())
+    val rows: Seq[Array[Any]] = Seq(
+      gauss(dim).map(x => x: Any),
+      // signed zeros in the vector: -0.0 products and sums
+      gauss(dim).zipWithIndex.map { case (x, i) =>
+        (if (i % 3 == 0) -0.0 else if (i % 3 == 1) 0.0 else x): Any },
+      Array.fill[Any](dim)(-0.0),
+      Array.fill[Any](dim)(0.0),
+      gauss(dim).updated(17, Double.NaN).map(x => x: Any),
+      gauss(dim).map(x => x: Any).updated(5, null))
+    for (k <- Seq(1, 3, 4, 5, 64, 128, 130)) {
+      val cents = Array.tabulate(k)(c =>
+        if (c % 7 == 3) Array.tabulate(dim)(i => if (i % 2 == 0) -0.0 else 0.0)
+        else gauss(dim))
+      val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+      for (r <- rows; e <- Seq(new GenericArrayData(r), unsafe(new GenericArrayData(r)))) {
+        val want = reference(e, cents, cnorms)
+        val got = VectorNativeImpl.centroidCos(e, cents, cnorms).toSeq
+        assert(bits(got) === bits(want), s"k=$k ${e.getClass.getSimpleName}")
+        // the argmax the bucket kernel takes from them
+        assert(VectorNativeImpl.ivfBucket(e, cents, cnorms) ===
+          VectorNativeImpl.ivfBucket(UnsafeArrayData.fromPrimitiveArray(
+            (0 until dim).map(e.getDouble).toArray), cents, cnorms))
+      }
+    }
+    // a short vector, and a ragged codebook whose 6th row is short: the
+    // message names the first mismatched row, as the sequential loop did
+    val cents8 = Array.fill(8)(gauss(dim))
+    val short = intercept[IllegalArgumentException] {
+      VectorNativeImpl.centroidCos(new GenericArrayData(gauss(dim - 1)), cents8, Array.fill(8)(1.0))
+    }
+    assert(short.getMessage ===
+      s"graft codebook kernel: embedding has ${dim - 1} dims, codebook expects $dim")
+    val ragged = cents8.clone()
+    ragged(5) = gauss(dim - 2)
+    ragged(6) = gauss(dim + 1)
+    val bad = intercept[IllegalArgumentException] {
+      VectorNativeImpl.centroidCos(new GenericArrayData(gauss(dim)), ragged, Array.fill(8)(1.0))
+    }
+    assert(bad.getMessage ===
+      s"graft codebook kernel: embedding has $dim dims, codebook expects ${dim - 2}")
+  }
+
+  test("fused index fit == fitCentroidsWithModulus + fitPqCodebooks, at m = 1 " +
+      "(PQ samples from the k-means rows) and at a forced m = 4 (own collects)") {
+    import Similarity.fitCentroidsWithModulus
+    // six rescaled copies with interleaved ids, so the narrow book's
+    // 2048-row sample is a strict prefix by vec_id; plus a null id (sorts
+    // first) and a zero vector at the smallest id (no x̂, never sampled)
+    val copies = (0 until 6).map(j => emb
+      .withColumn("vec_id", col("vec_id") * 6 + j)
+      .withColumn("embedding", transform(col("embedding"), x => x * lit(1.0 + 0.01 * j))))
+    val big = copies.reduce(_ unionByName _)
+      .unionByName(emb.limit(1).withColumn("vec_id", lit(null).cast("long")))
+      .unionByName(emb.limit(1).withColumn("vec_id", lit(-5L))
+        .withColumn("embedding", transform(col("embedding"), x => x * lit(0.0))))
+      .cache()
+    assert(big.count() > PqBook.Narrow.fitSample)
+    val books = Seq(PqBook.Narrow, PqBook.M16)
+    for (m <- Seq(1L, 4L)) {
+      val (cents, cnorms, pqs) = Similarity.fitIndex(big, 16, m, books)
+      val refCents = fitCentroidsWithModulus(big, 16, 3, m)
+      assert(cents.map(_.toSeq).toSeq === refCents.map(_.toSeq).toSeq, s"m=$m coarse book")
+      assert(cnorms.toSeq === refCents.map(c => math.sqrt(c.map(x => x * x).sum)).toSeq)
+      for ((book, pq) <- books.zip(pqs)) {
+        val ref = Similarity.fitPqCodebooks(big, refCents, cnorms, book = book)
+        val same = pq.map(_.map(_.toSeq).toSeq).toSeq == ref.map(_.map(_.toSeq).toSeq).toSeq
+        assert(same, s"m=$m ${book.label} residual book differs from fitPqCodebooks'")
+      }
+    }
+    big.unpersist()
+  }
+
   test("LCG seed-region ledger: every PQ book's raw generator positions are " +
       "disjoint from the other books, the reserved 16x16 region, the planes, " +
       "the coarse regions and the stride-65 MIPS regions") {
