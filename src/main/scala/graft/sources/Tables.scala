@@ -63,7 +63,7 @@ object Tables {
   /** Files past which [[rowCount]] counts with a job: the footers are
     * read one after another on the driver, ~1 ms each from local disk
     * and a round trip each from an object store. */
-  val FooterCountMaxFiles = 64
+  private val FooterCountMaxFiles = 64
 
   /** Sum of the row counts in the Parquet footers of `files`. */
   def footerRowCount(files: Seq[org.apache.hadoop.fs.FileStatus],
