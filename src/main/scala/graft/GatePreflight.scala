@@ -24,27 +24,20 @@ object GatePreflight {
   val Sf10Vectors = 200000L
   val Sf10FreeGb = 60L
 
-  /** Usable disk a gate over `nVectors` embeddings demands: the kNN
-    * candidate sort dominates the spill, and the candidate count grows as
-    * N^1.5 with the √N nlist ladder (sf10's kNN build measured 25× sf1's
-    * time at 10× the vectors), so the sf10 figure scales by
-    * (nVectors / Sf10Vectors)^1.5, rounded up, never below 1 GB.
+  /** Usable disk a gate over `nVectors` embeddings demands: the sf10
+    * figure scaled linearly with the vector count, rounded up, never
+    * below 1 GB (sf1's 20,000 vectors ask for 6 GB). Only the sf10 spill
+    * was measured; if the kNN candidate sort spills faster than linearly
+    * in N, a linear scale overstates the need below sf10, which is the
+    * safe side for a preflight.
     */
   def requiredFreeGb(nVectors: Long): Long =
-    math.max(1L,
-      math.ceil(Sf10FreeGb * math.pow(nVectors.toDouble / Sf10Vectors, 1.5)).toLong)
+    math.max(1L, (Sf10FreeGb * nVectors + Sf10Vectors - 1) / Sf10Vectors)
 
   /** Rows of `sfDir`'s embeddings table, from its Parquet footers (no
     * SparkSession needed). */
-  def embeddingRows(sfDir: String): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val path = new org.apache.hadoop.fs.Path(s"$sfDir/embeddings.parquet")
-    val it = path.getFileSystem(conf).listFiles(path, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
-      .toSeq
-    graft.sources.Tables.footerRowCount(files, conf)
-  }
+  def embeddingRows(sfDir: String): Long =
+    graft.sources.Tables.footerRowCount(s"$sfDir/embeddings.parquet")
 
   /** Wipe stale per-run scratch, assert the usable space a gate over
     * `sfDir` needs ([[requiredFreeGb]] of its embeddings row count) on

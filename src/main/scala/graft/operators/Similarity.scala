@@ -1154,9 +1154,16 @@ object Similarity {
     * rows pay the nlist-centroid argmax, never the whole corpus. */
   private def fitPqRows(rows: Array[FitRow], cents: Array[Array[Double]],
                         cnorms: Array[Double], ref: Array[Array[Double]],
-                        book: PqBook, iters: Int): Array[Array[Array[Double]]] = {
+                        book: PqBook, iters: Int): Array[Array[Array[Double]]] =
+    fitPqSample(rows.map(r => (r.xh, VectorNativeImpl.ivfBucket(r.e, cents, cnorms) - 1)),
+      ref, book, iters)
+
+  /** The residual book's Lloyd rounds over `(x̂, 0-based coarse bucket)`
+    * sample pairs, with `ref` the fp-scale residual reference. */
+  private[graft] def fitPqSample(sample: Array[(Array[Double], Int)],
+                                 ref: Array[Array[Double]], book: PqBook,
+                                 iters: Int): Array[Array[Array[Double]]] = {
     val S = VectorNativeImpl.FpScale
-    val sample = rows.map(r => (r.xh, VectorNativeImpl.ivfBucket(r.e, cents, cnorms) - 1))
     // integer residuals per sample vector: x̂ − ĉfp_b, componentwise
     val residuals = sample.map { case (xh, b) =>
       Array.tabulate(xh.length)(i => xh(i).toLong - ref(b)(i).toLong)

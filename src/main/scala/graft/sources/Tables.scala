@@ -37,8 +37,7 @@ object Tables {
     * `df.count()`. The file list is the relation's own (listed when the
     * frame was built), the same files `count()` would scan, so the two
     * agree. A footer that cannot be read falls back to `count()`, which
-    * reports the real error if there is one. Past [[FooterCountMaxFiles]]
-    * files a distributed count is the cheaper way to read the footers.
+    * reports the real error if there is one.
     */
   def rowCount(df: DataFrame): Long = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -48,26 +47,34 @@ object Tables {
         case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] &&
             r.partitionSchema.isEmpty && r.bucketSpec.isEmpty =>
           val files = r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
-          if (files.length > FooterCountMaxFiles) df.count()
-          else {
-            val conf = df.sparkSession.sessionState.newHadoopConf()
-            try footerRowCount(files, conf)
-            catch { case scala.util.control.NonFatal(_) => df.count() }
-          }
+          val conf = df.sparkSession.sessionState.newHadoopConf()
+          try footerRowCount(files, conf)
+          catch { case scala.util.control.NonFatal(_) => df.count() }
         case _ => df.count()
       }
       case _ => df.count()
     }
   }
 
-  /** Files past which [[rowCount]] counts with a job: the footers are
-    * read one after another on the driver, ~1 ms each from local disk
-    * and a round trip each from an object store. */
-  private val FooterCountMaxFiles = 64
+  /** Rows of the Parquet table at `path` (a file or a directory), from
+    * its footers, with no SparkSession: the data files under `path`,
+    * skipping the names a Spark scan skips as metadata (`_SUCCESS`,
+    * `_metadata`, `.crc` and other `_`/`.`-prefixed names). */
+  def footerRowCount(path: String): Long = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(conf).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filterNot { f =>
+        val name = f.getPath.getName
+        name.startsWith("_") || name.startsWith(".")
+      }.toSeq
+    footerRowCount(files, conf)
+  }
 
   /** Sum of the row counts in the Parquet footers of `files`. */
-  def footerRowCount(files: Seq[org.apache.hadoop.fs.FileStatus],
-                     conf: org.apache.hadoop.conf.Configuration): Long =
+  private def footerRowCount(files: Seq[org.apache.hadoop.fs.FileStatus],
+                             conf: org.apache.hadoop.conf.Configuration): Long =
     files.map { st =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))

@@ -5,13 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The gate preflight's disk demand scales with the input it gates. */
 class GatePreflightSpec extends AnyFunSuite {
 
-  test("disk demand: 60 GB at the sf10 calibration point, N^1.5 scaling, 1 GB floor") {
+  test("disk demand: 60 GB at the sf10 calibration point, linear in N, 1 GB floor") {
     import GatePreflight.requiredFreeGb
     assert(requiredFreeGb(200000L) === 60L)
-    // 4x the vectors: 8x the candidates
-    assert(requiredFreeGb(800000L) === 480L)
-    // sf1 scale: 60 * 0.1^1.5 = 1.897... rounds up
-    assert(requiredFreeGb(20000L) === 2L)
+    assert(requiredFreeGb(800000L) === 240L)
+    // sf1 scale: 60 * 0.1
+    assert(requiredFreeGb(20000L) === 6L)
+    // rounded up
+    assert(requiredFreeGb(20001L) === 7L)
     assert(requiredFreeGb(2000L) === 1L)
     assert(requiredFreeGb(0L) === 1L)
     val ns = Seq(0L, 500L, 2000L, 20000L, 65536L, 200000L, 1000000L, 10000000L)

@@ -524,8 +524,9 @@ class SimilaritySpec extends SparkSpec {
       s"graft codebook kernel: embedding has $dim dims, codebook expects ${dim - 2}")
   }
 
-  test("fused index fit == fitCentroidsWithModulus + fitPqCodebooks, at m = 1 " +
-      "(PQ samples from the k-means rows) and at a forced m = 4 (own collects)") {
+  test("fused index fit == fitCentroidsWithModulus + a residual book fitted on a " +
+      "Spark-side sample, at m = 1 (PQ samples from the k-means rows) and at a " +
+      "forced m = 4 (own collects)") {
     import Similarity.fitCentroidsWithModulus
     // six rescaled copies with interleaved ids, so the narrow book's
     // 2048-row sample is a strict prefix by vec_id; plus a null id (sorts
@@ -545,10 +546,28 @@ class SimilaritySpec extends SparkSpec {
       val refCents = fitCentroidsWithModulus(big, 16, 3, m)
       assert(cents.map(_.toSeq).toSeq === refCents.map(_.toSeq).toSeq, s"m=$m coarse book")
       assert(cnorms.toSeq === refCents.map(c => math.sqrt(c.map(x => x * x).sum)).toSeq)
+      // the reference PQ sample is taken on the executors, independent of
+      // the driver-side sample and bucket assignment: the fitted coarse
+      // argmax as a Spark column over the x̂-non-null rows, first by vec_id
+      val bucketFn = s"spec_fused_fit_bucket_$m"
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(bucketFn,
+        exprs => graft.functions.IvfBucket(exprs.head, refCents, cnorms), "built-in")
       for ((book, pq) <- books.zip(pqs)) {
-        val ref = Similarity.fitPqCodebooks(big, refCents, cnorms, book = book)
-        val same = pq.map(_.map(_.toSeq).toSeq).toSeq == ref.map(_.map(_.toSeq).toSeq).toSeq
-        assert(same, s"m=$m ${book.label} residual book differs from fitPqCodebooks'")
+        val sample = Similarity.vectors(big)
+          .withColumn("xh", expr("graft_fp_unit(e)"))
+          .filter(col("xh").isNotNull)
+          .select(col("vec_id"), col("xh"), call_function(bucketFn, col("e")).as("b"))
+          .orderBy(col("vec_id")).limit(book.fitSample)
+          .collect()
+          .map(r => (r.getSeq[Double](1).toArray, r.getInt(2) - 1))
+        // every row but the zero vector has an x̂
+        assert(sample.length === math.min(book.fitSample.toLong, big.count() - 1))
+        def flat(b: Array[Array[Array[Double]]]) = b.map(_.map(_.toSeq).toSeq).toSeq
+        val ref = flat(Similarity.fitPqSample(sample, refCents, book, 5))
+        val fused = flat(pq) == ref
+        assert(fused, s"m=$m ${book.label}: fitIndex's residual book differs from the Spark-side sample's")
+        val pub = flat(Similarity.fitPqCodebooks(big, refCents, cnorms, book = book)) == ref
+        assert(pub, s"m=$m ${book.label}: fitPqCodebooks' residual book differs from the Spark-side sample's")
       }
     }
     big.unpersist()
