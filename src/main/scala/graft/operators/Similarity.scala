@@ -129,10 +129,16 @@ object Similarity {
     * plan: 2 candidate-sized Exchanges → 1). ONLY correct when
     * duplicates are exact copies — a caller with same-(q,c)
     * different-cos rows must keep its own semantics.
+    *
+    * `carry` names extra columns of `scored` kept on the output after
+    * `rnk` — a shortlist that ranks by an approximate `cos` carries the
+    * scalars its exact rescoring needs (the IVF-PQ refine), never a
+    * vector. Every other column of `scored` is dropped.
     */
   private[graft] def rerankTopKTwoPhase(scored: DataFrame, k: Int,
                                         saltBuckets: Int = 32,
-                                        dedupInWindow: Boolean = false): DataFrame = {
+                                        dedupInWindow: Boolean = false,
+                                        carry: Seq[String] = Nil): DataFrame = {
     val salted = scored.withColumn("salt", pmod(hash(col("corpus_id")), lit(saltBuckets)))
     val wLocal = Window.partitionBy(col("query_id"), col("salt"))
       .orderBy(col("cos").desc, col("corpus_id"))
@@ -154,7 +160,7 @@ object Similarity {
       .filter(col("lrnk") <= k)
       .withColumn("rnk", row_number().over(wGlobal))
       .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk"))
+      .select((Seq("query_id", "corpus_id", "cos", "rnk") ++ carry).map(col): _*)
   }
 
   /** Exact-cosine scoring of a candidate list against the vector table:
@@ -771,8 +777,7 @@ object Similarity {
     val base = if (fitModulus > 1L) v0.filter(kmFitFilter(fitModulus)) else v0
     val va = base.withColumn("ea",
         when(isQuery, concat(col("e"), array(lit(0.0))))
-          .otherwise(concat(col("e"),
-            array(sqrt(lit(maxNorm) * lit(maxNorm) - col("nrm") * col("nrm"))))))
+          .otherwise(mipsAugmented(maxNorm)))
       .withColumn("xh", expr("graft_fp_unit(ea)"))
       .filter(col("xh").isNotNull)
       .select(col("xh"))
@@ -781,6 +786,11 @@ object Similarity {
     // region beyond — laddered fits without touching gated small fits
     fitLoopLocal(va, Codebooks.fpMipsCentroidsFor(k), Dim + 1, iters)
   }
+
+  /** A corpus vector in the augmented space: `e` with sqrt(M²−‖x‖²)
+    * appended, M = `maxNorm`. */
+  private def mipsAugmented(maxNorm: Double): Column =
+    concat(col("e"), array(sqrt(lit(maxNorm) * lit(maxNorm) - col("nrm") * col("nrm"))))
 
   /** The corpus max norm M of the Bachrach augmentation — a one-row
     * driver maximum (the sanctioned one-row-collect category). */
@@ -871,15 +881,22 @@ object Similarity {
     else if (n <= 1048576) 16 else 32
 
   /** IVF-PQ ANN — the compact-index 100-TB refinement of [[ivfTopK]]:
-    * corpus vectors live in the index as (coarse bucket, M PQ residual
-    * codes) — ~12 bytes instead of 64 doubles — so candidate generation
-    * AND approximate scoring never touch full vectors. Per query:
-    * (1) probe the top-`probes` coarse buckets; (2) score every candidate
-    * by the PQ approximation q̂·(ĉ_b + Σ_m pq_m[code_m]) from the codes
-    * alone; (3) keep the top k·`refine` by approximate score (two-phase —
-    * probed population grows with the corpus); (4) fetch full vectors for
-    * ONLY that shortlist and rerank exactly. At 100 TB step 4 is the only
-    * stage that reads the fat vector table, k·refine rows per query.
+    * corpus vectors are indexed as (coarse bucket, M PQ residual codes)
+    * and RANKED by the codes. Per query: (1) probe the top-`probes`
+    * coarse buckets; (2) score every candidate by the PQ approximation
+    * q̂·(ĉ_b + Σ_m pq_m[code_m]) from the codes; (3) keep the top
+    * k·`refine` by approximate score (two-phase — probed population
+    * grows with the corpus); (4) rerank that shortlist by exact cosine.
+    *
+    * The batch plan scores step 4 AT GENERATION ([[ivfPqPlan]]): the
+    * corpus rows that compute their bucket and codes already hold their
+    * vector, so the probe join also yields each candidate's exact dot
+    * and norm product, and only those two doubles ride the shortlist
+    * windows. The corpus is read once per side and nothing corpus-sized
+    * is broadcast. The persisted-index twins (SimilarityStream's IVF-PQ
+    * server, the CLI query verb) store codes only, so they still fetch
+    * the shortlist's vectors with a corpus_id join — at 100 TB that join
+    * is the only stage there that reads the fat vector table.
     *
     * WHICH codebooks an index serves from is a value, not an entry point
     * (the adaptive-index view: parameters picked per workload over ONE
@@ -1016,17 +1033,26 @@ object Similarity {
     * join-key form of the inferred-filter landmine, CLAUDE.md). Rows
     * with a null `e` have a null bucket, which the bucket join drops, so
     * the filter removes no answer.
+    *
+    * `carry` adds columns over `v` to each index row — the batch plans'
+    * `ec`/`nc` for the exact refine at generation; a persisted index
+    * carries none. The MIPS index ([[mipsPqCorpusIndex]]) passes its
+    * augmented-space kernels over an `ea` column of `v`.
     */
-  private[graft] def pqCorpusIndex(v: DataFrame, bucketCol: Column,
-                                   codeCol: Column): DataFrame = {
-    // Catalyst's KnownNotNull tag, reached through the registry (the
-    // kernels' own route from Column to a catalyst expression)
-    registerOnce(v, "graft_known_not_null")(exprs =>
-      org.apache.spark.sql.catalyst.expressions.KnownNotNull(exprs.head))
+  private[graft] def pqCorpusIndex(v: DataFrame, bucketCol: Column, codeCol: Column,
+                                   carry: Seq[Column] = Nil): DataFrame =
     v.filter(col("e").isNotNull)
-      .select(col("vec_id").as("corpus_id"), col("e"),
-        call_function("graft_known_not_null", bucketCol).as("bucket"))
-      .select(col("corpus_id"), col("bucket"), codeCol.as("codes"))
+      .withColumn("bucket", knownNotNull(v, bucketCol))
+      .select(Seq(col("vec_id").as("corpus_id"), col("bucket"), codeCol.as("codes")) ++
+        carry: _*)
+
+  /** `c` declared non-null to Catalyst: its KnownNotNull tag, reached
+    * through the registry (the kernels' own route from Column to a
+    * catalyst expression). Only for a column that cannot be null. */
+  private def knownNotNull(df: DataFrame, c: Column): Column = {
+    registerOnce(df, "graft_known_not_null")(exprs =>
+      org.apache.spark.sql.catalyst.expressions.KnownNotNull(exprs.head))
+    call_function("graft_known_not_null", c)
   }
 
   /** The laddered IVF-PQ serving path — every registered PQ serving row
@@ -1094,20 +1120,38 @@ object Similarity {
   private def ivfPqPlan(v: DataFrame, isQuery: Column, k: Int, refine: Int,
                         bucketCol: Column, probesCol: Column,
                         codeCol: Column, scoreCol: Column): DataFrame = {
-    val corpusIdx = pqCorpusIndex(v.filter(!isQuery), bucketCol, codeCol)
+    val corpusIdx = pqCorpusIndex(v.filter(!isQuery), bucketCol, codeCol,
+      Seq(col("e").as("ec"), col("nrm").as("nc")))
     val queries = v.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("e").as("eq"),
+      .select(col("vec_id").as("query_id"), col("e").as("eq"), col("nrm").as("nq"),
         explode(probesCol).as("bucket"))
     // a corpus vector has exactly one bucket and a query's probes are
     // distinct, so the probe join yields each (query, candidate) once
     val approx = corpusIdx.join(broadcast(queries), "bucket")
-      .select(col("query_id"), col("corpus_id"), scoreCol.as("cos"))
-    val shortlist = rerankTopKTwoPhase(approx, k * refine)
-      .select(col("query_id"), col("corpus_id"))
-    // only the shortlist (k·refine rows/query — bounded by construction,
-    // so the final rerank is legitimately single-phase) reads full vectors
-    rerankTopK(scoreCandidates(shortlist, v), k)
+      .select(col("query_id"), col("corpus_id"), scoreCol.as("cos"),
+        expr("graft_dot(eq, ec)").as("dot"), (col("nq") * col("nc")).as("den"))
+    refineAtGeneration(approx, k, refine, Seq("dot", "den"), col("dot") / col("den"))
   }
+
+  /** The exact refine of a PQ shortlist, scored at generation: `approx`
+    * ranks candidates by the approximate `cos` and carries the `carry`
+    * scalars of the exact score; the two-phase windows keep the top
+    * k·`refine` per query with those scalars, and `exact` (over them)
+    * ranks the final top k — single-phase, the shortlist is bounded.
+    * The same doubles and the same expression as fetching the
+    * shortlist's vectors by a corpus_id join, so the answers are
+    * bit-identical, and `exact` is evaluated on the shortlist rows only:
+    * a division there throws (ANSI DIVIDE_BY_ZERO on a zero-norm
+    * vector) exactly when the join form's did. The join form dropped
+    * rows with a null id (an equi-join key), and so does the filter.
+    */
+  private def refineAtGeneration(approx: DataFrame, k: Int, refine: Int,
+                                 carry: Seq[String], exact: Column): DataFrame =
+    rerankTopK(
+      rerankTopKTwoPhase(approx, k * refine, carry = carry)
+        .filter(col("query_id").isNotNull && col("corpus_id").isNotNull)
+        .select(col("query_id"), col("corpus_id"), exact.as("cos")),
+      k)
 
   /** Offline PQ residual sub-codebook fit — the data-derived twin of the
     * LCG [[graft.functions.Codebooks.pqCents]] (round-4 VERDICT #6), in
@@ -1567,13 +1611,12 @@ object Similarity {
     * fitted books): both kernels read `ea`, the corpus row with
     * sqrt(M²−‖x‖²) appended or the query with a 0; candidates score the
     * exact RAW inner product at generation, and only (query, corpus, ip)
-    * rows reach the distinct and the two-phase salted rerank.
+    * rows reach the two-phase salted rerank (which drops exact copies).
     */
   private def mipsIvfPlan(v: DataFrame, isQuery: Column, k: Int, bucketCol: Column,
                           probesCol: Column, maxNorm: Double): DataFrame = {
     val corpus = v.filter(!isQuery)
-      .withColumn("ea", concat(col("e"),
-        array(sqrt(lit(maxNorm) * lit(maxNorm) - col("nrm") * col("nrm")))))
+      .withColumn("ea", mipsAugmented(maxNorm))
       .select(col("vec_id").as("corpus_id"), bucketCol.as("bucket"), col("e").as("ec"))
     val queries = v.filter(isQuery)
       .withColumn("ea", concat(col("e"), array(lit(0.0))))
@@ -1582,31 +1625,20 @@ object Similarity {
     val scored = corpus.join(broadcast(queries), "bucket")
       .select(col("query_id"), col("corpus_id"),
         expr("graft_dot(eq, ec)").as("cos"))
-      .distinct()
-    rerankTopKTwoPhase(scored, k).withColumnRenamed("cos", "ip")
+    // a candidate met twice (a probe list repeating a tied bucket, or a
+    // duplicated input row) scores to the same double both times; the
+    // copies drop inside the rerank's salt exchange, as in
+    // knnJoinIvfPlan — set-identical to a .distinct(), one
+    // candidate-sized exchange instead of two
+    rerankTopKTwoPhase(scored, k, dedupInWindow = true).withColumnRenamed("cos", "ip")
   }
 
-  /** PQ-COMPACT MIPS serving (r14, round-13 VERDICT #8): the
-    * codes-resident/shortlist-rerank form of [[mipsIvfTopK]] — the same
-    * Bachrach norm-augmentation reduction, but the candidate index
-    * stores 5 small ints per vector (PQ codes over the AUGMENTED 65-dim
-    * space, which factors as 5 subspaces × 13 dims) instead of 65
-    * doubles, so candidate generation + approximate scoring never touch
-    * the full vectors — the [[ivfPqTopK]] plan shape over the
-    * augmented space. The approximate stage ranks augmented-space
-    * cosines q̂a·(ĉ_b + Σ pq codes) — exactly IP order up to the PQ
-    * approximation — into a k·refine shortlist; the FINAL scores are
-    * the exact RAW inner products of the ORIGINAL vectors, so the
-    * output hash-gates while recall vs exact [[mipsTopK]] is swept in
-    * SimilaritySpec. Codebooks are the serving defaults (the fixed
-    * 64-bucket MIPS coarse book + the fresh rows-700 MIPS-PQ book —
-    * the sim_topk_ivf_pq parity; the nlist ladder lives on the
-    * full-vector [[mipsIvfTopK]] row).
-    */
   /** Session registration of the MIPS serving kernels at their serving
     * defaults — shared by [[mipsIvfPqTopK]] and the streaming twin
     * (SimilarityStream.mipsIvfPqTopKStream), so the two surfaces can
-    * never drift on codebooks.
+    * never drift on codebooks. The code kernel reads the corpus row's
+    * bucket (graft_mips_pq_code_at), so the index is built by
+    * [[mipsPqCorpusIndex]] and the augmented argmax runs once per row.
     */
   private[graft] def registerMipsServing(df: DataFrame, probes: Int): Unit = {
     registerOnce(df, "graft_mips_bucket")(exprs =>
@@ -1615,14 +1647,25 @@ object Similarity {
     registerOnce(df, s"graft_mips_probes_$probes")(exprs =>
       graft.functions.IvfProbes(exprs.head, probes,
         Codebooks.mipsCentroidsArr, Codebooks.mipsCentroidNorms))
-    registerOnce(df, "graft_mips_pq_code")(exprs =>
-      graft.functions.PqCode(exprs.head,
-        Codebooks.mipsCentroidsArr, Codebooks.mipsCentroidNorms,
+    registerOnce(df, "graft_mips_pq_code_at")(exprs =>
+      graft.functions.PqCodeAt(exprs(0), exprs(1),
         Codebooks.mipsCentroidsHat, Codebooks.mipsPqCents))
     registerOnce(df, "graft_mips_pq_score")(exprs =>
       graft.functions.PqScore(exprs.head, exprs(1), exprs(2),
         Codebooks.mipsCentroidsHat, Codebooks.mipsPqCents))
   }
+
+  /** The augmented-space compact index (corpus_id, bucket, codes) over a
+    * [[vectors]] frame of corpus vectors, M = `maxNorm`: [[pqCorpusIndex]]
+    * with the MIPS kernels of [[registerMipsServing]] over the augmented
+    * vector, so the coarse argmax runs once per row and no kernel lands
+    * in an inferred Filter. `carry` as in [[pqCorpusIndex]].
+    */
+  private[graft] def mipsPqCorpusIndex(v: DataFrame, maxNorm: Double,
+                                       carry: Seq[Column] = Nil): DataFrame =
+    pqCorpusIndex(v.withColumn("ea", mipsAugmented(maxNorm)),
+      call_function("graft_mips_bucket", col("ea")),
+      call_function("graft_mips_pq_code_at", col("ea"), col("bucket")), carry)
 
   /** [[mipsIvfPqTopK]] with the shortlist width derived from the corpus
     * (one count) — the registered `sim_topk_mips_ivf_pq` path. */
@@ -1630,39 +1673,44 @@ object Similarity {
                          probes: Int = 8): DataFrame =
     mipsIvfPqTopK(emb, isQuery, k, probes, sizedRefine(Tables.rowCount(emb)))
 
+  /** PQ-COMPACT MIPS serving (r14, round-13 VERDICT #8): the
+    * codes-ranked/shortlist-rerank form of [[mipsIvfTopK]] — the same
+    * Bachrach norm-augmentation reduction, with candidates ranked by PQ
+    * codes over the AUGMENTED 65-dim space (5 subspaces × 13 dims) —
+    * the [[ivfPqTopK]] plan shape over the augmented space. The
+    * approximate stage ranks augmented-space cosines q̂a·(ĉ_b + Σ pq
+    * codes) — exactly IP order up to the PQ approximation — into a
+    * k·refine shortlist; the FINAL scores are the exact RAW inner
+    * products of the ORIGINAL vectors, so the output hash-gates while
+    * recall vs exact [[mipsTopK]] is swept in SimilaritySpec. The exact
+    * score is taken AT GENERATION, as in [[ivfPqPlan]]: the corpus rows
+    * carry `ec`, the broadcast queries `eq`, and only the raw dot rides
+    * the shortlist windows (no division, so nothing can throw). The
+    * streaming twin stores codes only and joins its shortlist to the
+    * vectors. Codebooks are the serving defaults (the fixed 64-bucket
+    * MIPS coarse book + the fresh rows-700 MIPS-PQ book — the
+    * sim_topk_ivf_pq parity; the nlist ladder lives on the full-vector
+    * [[mipsIvfTopK]] row).
+    */
   def mipsIvfPqTopK(emb: DataFrame, isQuery: Column, k: Int = 10,
                     probes: Int = 8, refine: Int = 4): DataFrame = {
     val v = vectors(emb)
     val m = corpusMaxNorm(v, isQuery)
     registerMipsServing(emb, probes)
-    // codes-resident corpus index: bucket + 5 ints per vector, no ec
-    val corpusIdx = v.filter(!isQuery)
-      .withColumn("ea",
-        concat(col("e"), array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm")))))
-      .select(col("vec_id").as("corpus_id"),
-        call_function("graft_mips_bucket", col("ea")).as("bucket"),
-        call_function("graft_mips_pq_code", col("ea")).as("codes"))
+    val corpusIdx = mipsPqCorpusIndex(v.filter(!isQuery), m, Seq(col("e").as("ec")))
     val queries = v.filter(isQuery)
       .withColumn("eqa", concat(col("e"), array(lit(0.0))))
-      .select(col("vec_id").as("query_id"), col("eqa"),
+      .select(col("vec_id").as("query_id"), col("e").as("eq"), col("eqa"),
         explode(call_function(s"graft_mips_probes_$probes", col("eqa"))).as("bucket"))
     // a corpus vector has exactly one bucket and a query's probes are
     // distinct, so the probe join yields each (query, candidate) once
     val approx = corpusIdx.join(broadcast(queries), "bucket")
       .select(col("query_id"), col("corpus_id"),
         call_function("graft_mips_pq_score",
-          col("eqa"), col("bucket"), col("codes")).as("cos"))
-    val shortlist = rerankTopKTwoPhase(approx, k * refine)
-      .select(col("query_id"), col("corpus_id"))
-    // only the shortlist (k·refine rows/query — bounded) reads full
-    // vectors; final scores are the exact RAW inner products
-    val exact = shortlist
-      .join(v.select(col("vec_id").as("corpus_id"), col("e").as("ec")), "corpus_id")
-      .join(broadcast(v.filter(isQuery)
-        .select(col("vec_id").as("query_id"), col("e").as("eq"))), "query_id")
-      .select(col("query_id"), col("corpus_id"),
-        expr("graft_dot(eq, ec)").as("cos"))
-    rerankTopK(exact, k).withColumnRenamed("cos", "ip")
+          col("eqa"), col("bucket"), col("codes")).as("cos"),
+        expr("graft_dot(eq, ec)").as("ip"))
+    refineAtGeneration(approx, k, refine, Seq("ip"), col("ip"))
+      .withColumnRenamed("cos", "ip")
   }
 
   /** QUANTIZATION-COLLISION dedup (r15): vectors whose PQ encodings
@@ -1681,10 +1729,14 @@ object Similarity {
     * (array_join == array_to_string, the §6 rule).
     */
   def pqCodeDedup(emb: DataFrame): DataFrame = {
-    val v = vectors(emb).filter(col("nrm") > 0)
-    val coded = v.select(col("vec_id"),
-      expr("graft_ivf_bucket(e)").as("bucket"),
-      expr("graft_pq_code(e)").as("codes"))
+    // one coarse argmax per row on each read of `coded`: the bucket is
+    // its own column fed to the code kernel, and both join keys are
+    // declared non-null (they are, once `e` is) so Catalyst pushes no
+    // isnotnull(kernel) Filter below the projection ([[pqCorpusIndex]])
+    val coded = vectors(emb).filter(col("e").isNotNull && col("nrm") > 0)
+      .withColumn("bucket", knownNotNull(emb, expr("graft_ivf_bucket(e)")))
+      .select(col("vec_id"), col("bucket"),
+        knownNotNull(emb, expr("graft_pq_code_at(e, bucket)")).as("codes"))
     val groups = coded.groupBy(col("bucket"), col("codes"))
       .agg(count(lit(1)).as("n_same"), min(col("vec_id")).as("rep_id"))
     coded.join(groups, Seq("bucket", "codes"))

@@ -1,8 +1,15 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{FooterSchema, ParquetFileFormat}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -25,8 +32,38 @@ object Tables {
     * predicate pushdown on those columns. [[normalize]] still casts any
     * NTZ column that slips through a foreign session's inference.
     */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalize(spark.read.parquet(s"$dir/$name.parquet"))
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val reader = footerSchema(spark, path).fold(spark.read)(spark.read.schema(_))
+    normalize(reader.parquet(path))
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver:
+    * Spark infers it from the footer of the first data file by path,
+    * which it reads in a one-task job; this reads the same footer here
+    * and converts it with Spark's own conversion ([[FooterSchema]])
+    * under the session's settings, so a load runs no job. None — Spark
+    * infers — for a table this does not mirror (summary files, nested or
+    * partitioned directories, schema merging on) and when a footer
+    * cannot be read, so the plain read reports the real error.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      val p = new Path(path)
+      val root = p.getFileSystem(conf).makeQualified(p)
+      val (meta, data) = leafFiles(path, conf).partition(f => hidden(f.getPath.getName))
+      val summaries = meta.exists(f => Seq("_metadata", "_common_metadata")
+        .exists(f.getPath.getName.startsWith))
+      val flat = data.forall(f => f.getPath == root || f.getPath.getParent == root)
+      if (summaries || !flat) None
+      else data.sortBy(_.getPath.toString).headOption.flatMap { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val footer = try reader.getFooter finally reader.close()
+        FooterSchema.read(Seq(new Footer(st.getPath, footer)), spark)
+      }
+    } catch { case NonFatal(_) => None }
 
   /** Row count of `df` for the N-adaptive ladders, without a Spark job
     * when the answer is in the files' footers: when the analyzed plan is
@@ -41,7 +78,6 @@ object Tables {
     */
   def rowCount(df: DataFrame): Long = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     df.queryExecution.analyzed match {
       case l: LogicalRelation if !l.isStreaming => l.relation match {
         case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] &&
@@ -49,7 +85,7 @@ object Tables {
           val files = r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
           val conf = df.sparkSession.sessionState.newHadoopConf()
           try footerRowCount(files, conf)
-          catch { case scala.util.control.NonFatal(_) => df.count() }
+          catch { case NonFatal(_) => df.count() }
         case _ => df.count()
       }
       case _ => df.count()
@@ -61,23 +97,24 @@ object Tables {
     * skipping the names a Spark scan skips as metadata (`_SUCCESS`,
     * `_metadata`, `.crc` and other `_`/`.`-prefixed names). */
   def footerRowCount(path: String): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val it = p.getFileSystem(conf).listFiles(p, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .filterNot { f =>
-        val name = f.getPath.getName
-        name.startsWith("_") || name.startsWith(".")
-      }.toSeq
-    footerRowCount(files, conf)
+    val conf = new Configuration()
+    footerRowCount(leafFiles(path, conf).filterNot(f => hidden(f.getPath.getName)), conf)
   }
 
+  /** Every file under `path` (a file or a directory), recursively. */
+  private def leafFiles(path: String, conf: Configuration): Seq[FileStatus] = {
+    val p = new Path(path)
+    val it = p.getFileSystem(conf).listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+  }
+
+  /** A name a Spark scan skips as metadata. */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
   /** Sum of the row counts in the Parquet footers of `files`. */
-  private def footerRowCount(files: Seq[org.apache.hadoop.fs.FileStatus],
-                             conf: org.apache.hadoop.conf.Configuration): Long =
+  private def footerRowCount(files: Seq[FileStatus], conf: Configuration): Long =
     files.map { st =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try reader.getRecordCount finally reader.close()
     }.sum
 

@@ -225,8 +225,6 @@ object SimilarityStream {
     // deployment contract (a served index is built against ITS corpus)
     val m = Similarity.vectors(corpus.filter(!isQuery))
       .agg(max(col("nrm"))).head().getDouble(0)
-    val aug = concat(col("e"),
-      array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm"))))
 
     val vecsTable = s"${tablePrefix}_vecs"
     Bucketing.writeBucketed(
@@ -235,11 +233,7 @@ object SimilarityStream {
       vecsTable, IndexBuckets, "corpus_id")
     val idxTable = s"${tablePrefix}_idx"
     Bucketing.writeBucketed(
-      Similarity.vectors(corpus.filter(!isQuery))
-        .withColumn("ea", aug)
-        .select(col("vec_id").as("corpus_id"),
-          call_function("graft_mips_bucket", col("ea")).as("bucket"),
-          call_function("graft_mips_pq_code", col("ea")).as("codes")),
+      Similarity.mipsPqCorpusIndex(Similarity.vectors(corpus.filter(!isQuery)), m),
       idxTable, IndexBuckets, "bucket")
     val corpusVecs = spark.table(vecsTable)
     val pqIndex = spark.table(idxTable)
@@ -273,7 +267,8 @@ object SimilarityStream {
         // partial first() — the exchange carries one row per query per
         // map partition, never the candidate set) so the shortlist
         // window shuffles eq-free rows; eq re-joins post-shortlist as
-        // a broadcast, the batch twin's plan shape.
+        // a broadcast. (The batch twin's index carries the vectors and
+        // scores at generation; this persisted index holds codes only.)
         val queryVecs = batch.select(col("query_id"), col("eq"))
           .dropDuplicates("query_id")
         val wa = Window.partitionBy(col("query_id"))

@@ -13,7 +13,8 @@ import graft.sources.{Tables, Topics}
   * serving call and the topic-drain verbs. Each count covers building the
   * frame (counts, fit collects) and running it to the no-op sink, so a
   * call that gains a job fails here by name. Inputs are loaded before the
-  * count starts: `spark.read.parquet` runs its own schema job.
+  * count starts (a bare `spark.read.parquet` runs its own schema job;
+  * `Tables.load` runs none, pinned below).
   */
 class JobBudgetSpec extends SparkSpec {
 
@@ -43,11 +44,29 @@ class JobBudgetSpec extends SparkSpec {
   private def jobsOf(body: => DataFrame): Int =
     jobsDuring(body.write.format("noop").mode("overwrite").save())
 
-  test("fitted IVF-PQ serving runs in at most 7 jobs: no count job, one fit collect") {
+  test("fitted IVF-PQ serving runs in at most 5 jobs: no count job, one fit " +
+      "collect, the refine scored at generation (no shortlist-join broadcasts)") {
     val emb = Tables.load(spark, sf, "embeddings")
     val jobs = jobsOf(Similarity.ivfPqTopKFittedSized(emb, col("vec_id") < 8, k = 10))
     info(s"ivfPqTopKFittedSized: $jobs jobs")
-    assert(jobs <= 7, s"ivfPqTopKFittedSized ran $jobs jobs (budget 7)")
+    assert(jobs <= 5, s"ivfPqTopKFittedSized ran $jobs jobs (budget 5)")
+  }
+
+  test("PQ-compact MIPS serving runs in at most 6 jobs: one max-norm job, " +
+      "the refine scored at generation") {
+    val emb = Tables.load(spark, sf, "embeddings")
+    val jobs = jobsOf(Similarity.mipsIvfPqTopK(emb, col("vec_id") < 8, k = 10))
+    info(s"mipsIvfPqTopK: $jobs jobs")
+    assert(jobs <= 6, s"mipsIvfPqTopK ran $jobs jobs (budget 6)")
+  }
+
+  test("Tables.load runs no job: the schema is read from a footer on the driver") {
+    for (name <- Tables.names) {
+      val jobs = jobsDuring { Tables.load(spark, sf, name) }
+      assert(jobs === 0, s"Tables.load($name) ran $jobs jobs")
+    }
+    assert(jobsDuring { spark.read.parquet(s"$sf/embeddings.parquet") } > 0,
+      "a bare spark.read.parquet infers its schema in a job")
   }
 
   test("topic-drain verbs hold their job counts: routeWithDecisions, compact, " +

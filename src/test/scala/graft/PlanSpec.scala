@@ -247,7 +247,36 @@ class PlanSpec extends SparkSpec {
         s"$name: the corpus side must evaluate the bucket kernel exactly once:\n$p")
       assert(p.contains("graft_pq_code_at(") && !p.contains("graft_pq_code("),
         s"$name: codes must come from the bucket column, not a second argmax:\n$p")
+      // the refine is scored at generation: the query rows are the only
+      // broadcast, and the corpus is read once per side
+      assert("BroadcastExchange".r.findAllIn(p).length === 1,
+        s"$name: only the query rows may be broadcast:\n$p")
+      assert("FileScan parquet".r.findAllIn(p).length <= 2,
+        s"$name: at most two embedding scans (corpus side, query side):\n$p")
     }
+  }
+
+  test("PQ-MIPS and the PQ-code dedup: one coarse argmax per corpus row, no " +
+      "kernel inside a Filter") {
+    for (name <- Seq("sim_topk_mips_ivf_pq", "dedup_pq_codes")) {
+      val p = graft.queries.PipelineQueries.queries(name)(spark, sf)
+        .queryExecution.executedPlan.toString
+      // the inferred isnotnull(kernel) Filters on join keys; the dedup's
+      // own zero-vector filter (graft_norm(e) > 0) is its semantics
+      val kernelFilters = p.linesIterator.filter(l => l.contains("Filter") &&
+        (l.contains("graft_ivf_bucket") || l.contains("graft_pq_code")))
+      assert(kernelFilters.isEmpty, s"$name: a Filter evaluates a codebook kernel:\n$p")
+      assert(p.contains("graft_pq_code_at(") && !p.contains("graft_pq_code("),
+        s"$name: codes must come from the bucket column, not a second argmax:\n$p")
+    }
+    // the dedup reads its coded frame twice (group side, join side): one
+    // bucket kernel per read; the PQ-MIPS corpus side once, plus the
+    // query side's probes (graft_ivf_probes)
+    def buckets(name: String) = "graft_ivf_bucket\\(".r.findAllIn(
+      graft.queries.PipelineQueries.queries(name)(spark, sf)
+        .queryExecution.executedPlan.toString).length
+    assert(buckets("dedup_pq_codes") === 2)
+    assert(buckets("sim_topk_mips_ivf_pq") === 1)
   }
 
   test("whiten runs the fused PcaWhiten kernel: no transform lambda, no " +

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Codebooks
 import graft.functions.Codebooks.PqBook
 import graft.operators.Similarity
 import graft.sources.Tables
@@ -676,6 +678,120 @@ class SimilaritySpec extends SparkSpec {
     assert(fitPq >= lcgPq,
       s"fitted IVF-PQ recall ($fitPq) must be >= LCG IVF-PQ recall ($lcgPq)")
     bf10.unpersist(); fitted.unpersist()
+  }
+
+  /** The refine the IVF-PQ plans ran before scoring it at generation:
+    * the k·refine shortlist joined back to the whole vector table
+    * (queries broadcast) and scored there by `score` over eq/nq/ec/nc —
+    * the reference the fused refine must equal row for row. */
+  private def joinRefine(v: DataFrame, approx: DataFrame, k: Int, refine: Int,
+                         score: Column): DataFrame = {
+    val shortlist = Similarity.rerankTopKTwoPhase(approx, k * refine)
+      .select(col("query_id"), col("corpus_id"))
+    val vq = v.select(col("vec_id").as("query_id"), col("e").as("eq"), col("nrm").as("nq"))
+    val vc = v.select(col("vec_id").as("corpus_id"), col("e").as("ec"), col("nrm").as("nc"))
+    Similarity.rerankTopK(shortlist.join(broadcast(vq), "query_id").join(vc, "corpus_id")
+      .withColumn("cos", score), k)
+  }
+
+  /** The formula IVF-PQ index's approximate candidates (query_id,
+    * corpus_id, cos) at `probes`. */
+  private def pqApprox(v: DataFrame, isQ: Column, probes: Int): DataFrame = {
+    val corpus = Similarity.pqCorpusIndex(v.filter(!isQ), expr("graft_ivf_bucket(e)"),
+      expr("graft_pq_code_at(e, bucket)"))
+    val queries = v.filter(isQ).select(col("vec_id").as("query_id"), col("e").as("eq"),
+      explode(expr(s"graft_ivf_probes(e, $probes)")).as("bucket"))
+    corpus.join(broadcast(queries), "bucket").select(col("query_id"), col("corpus_id"),
+      expr("graft_pq_score(eq, bucket, codes)").as("cos"))
+  }
+
+  private def sameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val order = Seq(col("query_id"), col("rnk"))
+    val g = got.orderBy(order: _*).collect().toSeq
+    val w = want.orderBy(order: _*).collect().toSeq
+    assert(g.nonEmpty, s"$what: empty answer")
+    assert(g === w, s"$what: the fused refine differs from the shortlist join")
+  }
+
+  private def divideByZero(df: DataFrame): Boolean =
+    try { df.collect(); false }
+    catch {
+      case e: Exception =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")) ||
+          (throw e)
+    }
+
+  test("IVF-PQ refine at generation == the shortlist join, row for row: " +
+      "null embeddings, a zero-norm corpus vector shortlisted (both throw) " +
+      "and a candidate but not shortlisted (neither throws), PQ-MIPS too") {
+    val nullId = 900001L
+    val zeroId = 900002L
+    val nullQueryId = 900003L
+    val fx = emb.select(col("vec_id"), col("embedding"))
+      .union(spark.range(1).select(lit(nullId).as("vec_id"),
+        lit(null).cast("array<float>").as("embedding")))
+      .union(spark.range(1).select(lit(zeroId).as("vec_id"),
+        array_repeat(lit(0.0f), Similarity.Dim).as("embedding")))
+      .union(spark.range(1).select(lit(nullQueryId).as("vec_id"),
+        lit(null).cast("array<float>").as("embedding")))
+      .cache()
+    val v = Similarity.vectors(fx)
+    val cosScore = expr("graft_dot(eq, ec)") / (col("nq") * col("nc"))
+
+    // the default serving shape: the zero vector is not probed
+    val q8 = col("vec_id") < 8 || col("vec_id") === nullQueryId
+    sameRows(Similarity.ivfPqTopK(fx, q8, k = 10),
+      joinRefine(v, pqApprox(v, q8, 8), 10, 4, cosScore), "probes 8")
+
+    // every bucket probed, so the zero vector is every query's candidate;
+    // queries that rank it below the top 10 by PQ score (ranked against
+    // a smaller corpus, so a larger one can only push it further down)
+    val wRank = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("corpus_id"))
+    val zeroRanks = pqApprox(v, col("vec_id") < 50, Similarity.NCentroids)
+      .withColumn("r", row_number().over(wRank))
+      .filter(col("corpus_id") === zeroId)
+      .select(col("query_id"), col("r")).collect()
+    assert(zeroRanks.length === 50, "the zero vector is a candidate of every query")
+    val unlisted = zeroRanks.filter(_.getInt(1) > 10).map(_.getLong(0)).toSeq
+    assert(unlisted.length >= 4, s"fixture: too few queries rank the zero vector low")
+    val qLow = col("vec_id").isin(unlisted :+ nullQueryId: _*)
+    sameRows(Similarity.ivfPqTopK(fx, qLow, k = 5, probes = Similarity.NCentroids, refine = 2),
+      joinRefine(v, pqApprox(v, qLow, Similarity.NCentroids), 5, 2, cosScore),
+      "zero vector a candidate, not shortlisted")
+
+    // a shortlist wider than the corpus holds the zero vector: 0.0 / 0.0
+    // under ANSI, in both forms
+    assert(divideByZero(Similarity.ivfPqTopK(fx, q8, k = 10,
+      probes = Similarity.NCentroids, refine = 100)), "fused form")
+    assert(divideByZero(joinRefine(v, pqApprox(v, q8, Similarity.NCentroids), 10, 100,
+      cosScore)), "shortlist join")
+
+    // PQ-MIPS: the reference also keeps the argmax-repeating code kernel
+    val probes = 8
+    Similarity.registerMipsServing(fx, probes)
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction("spec_mips_pq_code",
+      exprs => graft.functions.PqCode(exprs.head, Codebooks.mipsCentroidsArr,
+        Codebooks.mipsCentroidNorms, Codebooks.mipsCentroidsHat, Codebooks.mipsPqCents),
+      "built-in")
+    val m = v.filter(!q8).agg(max(col("nrm"))).head().getDouble(0)
+    val mipsCorpus = v.filter(!q8)
+      .withColumn("ea", concat(col("e"), array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm")))))
+      .select(col("vec_id").as("corpus_id"),
+        call_function("graft_mips_bucket", col("ea")).as("bucket"),
+        call_function("spec_mips_pq_code", col("ea")).as("codes"))
+    val mipsQueries = v.filter(q8)
+      .withColumn("eqa", concat(col("e"), array(lit(0.0))))
+      .select(col("vec_id").as("query_id"), col("eqa"),
+        explode(call_function(s"graft_mips_probes_$probes", col("eqa"))).as("bucket"))
+    val mipsApprox = mipsCorpus.join(broadcast(mipsQueries), "bucket")
+      .select(col("query_id"), col("corpus_id"), call_function("graft_mips_pq_score",
+        col("eqa"), col("bucket"), col("codes")).as("cos"))
+    sameRows(Similarity.mipsIvfPqTopK(fx, q8, k = 10, probes = probes),
+      joinRefine(v, mipsApprox, 10, 4, expr("graft_dot(eq, ec)"))
+        .withColumnRenamed("cos", "ip"), "PQ-MIPS")
+    fx.unpersist()
   }
 
   test("r17b m16 fitted serving: the registered m16 point (16x64 book, " +
