@@ -189,9 +189,9 @@ object PipelineQueries {
     "sim_topk_mips_ivf" -> ((s, dir) =>
       Similarity.mipsIvfTopK(Tables.load(s, dir, "embeddings"), queryPred, TopK)
         .orderBy(col("query_id"), col("rnk"))),
-    // PQ-compact MIPS serving (r14): codes-resident augmented-space
-    // index (5×13 PQ over the 65-dim reduction), shortlist by the
-    // approximate augmented cosine, exact raw-ip rerank.
+    // PQ-compact MIPS serving (r14): augmented-space PQ codes (5×13
+    // over the 65-dim reduction), shortlist by the approximate augmented
+    // cosine, exact raw-ip rerank scored at generation.
     "sim_topk_mips_ivf_pq" -> ((s, dir) =>
       Similarity.mipsIvfPqTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK)
         .orderBy(col("query_id"), col("rnk"))),
@@ -310,9 +310,9 @@ object PipelineQueries {
     "knn_consumer_card" -> ((s, dir) =>
       graft.operators.Graph.knnConsumerCard(Tables.load(s, dir, "embeddings"),
         k = KnnK, probes = KnnProbes, tau = CosTau)),
-    // IVF-PQ: compact-index ANN — candidates scored from (bucket, 8 PQ
-    // residual codes) alone; full vectors only for the exact rerank of
-    // the top k·refine shortlist (round-3 §7 stretch).
+    // IVF-PQ: compact-index ANN — candidates ranked by (bucket, 8 PQ
+    // residual codes); the exact rerank of the top k·refine shortlist is
+    // scored at generation (round-3 §7 stretch).
     "sim_topk_ivf_pq" -> ((s, dir) =>
       Similarity.ivfPqTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK)
         .orderBy(col("query_id"), col("rnk"))),

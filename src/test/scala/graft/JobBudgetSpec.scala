@@ -44,8 +44,8 @@ class JobBudgetSpec extends SparkSpec {
   private def jobsOf(body: => DataFrame): Int =
     jobsDuring(body.write.format("noop").mode("overwrite").save())
 
-  test("fitted IVF-PQ serving runs in at most 5 jobs: no count job, one fit " +
-      "collect, the refine scored at generation (no shortlist-join broadcasts)") {
+  // the refine is scored at generation: no shortlist-join broadcasts
+  test("fitted IVF-PQ serving runs in at most 5 jobs: no count job, one fit collect") {
     val emb = Tables.load(spark, sf, "embeddings")
     val jobs = jobsOf(Similarity.ivfPqTopKFittedSized(emb, col("vec_id") < 8, k = 10))
     info(s"ivfPqTopKFittedSized: $jobs jobs")
