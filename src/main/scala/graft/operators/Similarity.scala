@@ -1615,9 +1615,12 @@ object Similarity {
     */
   private def mipsIvfPlan(v: DataFrame, isQuery: Column, k: Int, bucketCol: Column,
                           probesCol: Column, maxNorm: Double): DataFrame = {
-    val corpus = v.filter(!isQuery)
+    // the bucket is declared non-null (e is) so the bucket join infers
+    // no isnotnull(kernel) Filter — one argmax per row ([[pqCorpusIndex]])
+    val corpus = v.filter(!isQuery && col("e").isNotNull)
       .withColumn("ea", mipsAugmented(maxNorm))
-      .select(col("vec_id").as("corpus_id"), bucketCol.as("bucket"), col("e").as("ec"))
+      .select(col("vec_id").as("corpus_id"), knownNotNull(v, bucketCol).as("bucket"),
+        col("e").as("ec"))
     val queries = v.filter(isQuery)
       .withColumn("ea", concat(col("e"), array(lit(0.0))))
       .select(col("vec_id").as("query_id"), explode(probesCol).as("bucket"),

@@ -256,9 +256,10 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("PQ-MIPS and the PQ-code dedup: one coarse argmax per corpus row, no " +
-      "kernel inside a Filter") {
-    for (name <- Seq("sim_topk_mips_ivf_pq", "dedup_pq_codes")) {
+  test("PQ-MIPS, MIPS-IVF and the PQ-code dedup: one coarse argmax per corpus " +
+      "row, no kernel inside a Filter") {
+    for (name <- Seq("sim_topk_mips_ivf_pq", "dedup_pq_codes", "sim_topk_mips_ivf",
+        "sim_topk_mips_ivf_fitted")) {
       val p = graft.queries.PipelineQueries.queries(name)(spark, sf)
         .queryExecution.executedPlan.toString
       // the inferred isnotnull(kernel) Filters on join keys; the dedup's
@@ -266,17 +267,19 @@ class PlanSpec extends SparkSpec {
       val kernelFilters = p.linesIterator.filter(l => l.contains("Filter") &&
         (l.contains("graft_ivf_bucket") || l.contains("graft_pq_code")))
       assert(kernelFilters.isEmpty, s"$name: a Filter evaluates a codebook kernel:\n$p")
-      assert(p.contains("graft_pq_code_at(") && !p.contains("graft_pq_code("),
-        s"$name: codes must come from the bucket column, not a second argmax:\n$p")
+      if (name != "sim_topk_mips_ivf" && name != "sim_topk_mips_ivf_fitted")
+        assert(p.contains("graft_pq_code_at(") && !p.contains("graft_pq_code("),
+          s"$name: codes must come from the bucket column, not a second argmax:\n$p")
     }
     // the dedup reads its coded frame twice (group side, join side): one
-    // bucket kernel per read; the PQ-MIPS corpus side once, plus the
+    // bucket kernel per read; each MIPS corpus side once, plus the
     // query side's probes (graft_ivf_probes)
     def buckets(name: String) = "graft_ivf_bucket\\(".r.findAllIn(
       graft.queries.PipelineQueries.queries(name)(spark, sf)
         .queryExecution.executedPlan.toString).length
     assert(buckets("dedup_pq_codes") === 2)
-    assert(buckets("sim_topk_mips_ivf_pq") === 1)
+    for (name <- Seq("sim_topk_mips_ivf_pq", "sim_topk_mips_ivf", "sim_topk_mips_ivf_fitted"))
+      assert(buckets(name) === 1, name)
   }
 
   test("whiten runs the fused PcaWhiten kernel: no transform lambda, no " +
