@@ -713,13 +713,13 @@ class SimilaritySpec extends SparkSpec {
     assert(g === w, s"$what: the fused refine differs from the shortlist join")
   }
 
+  /** Whether running `df` fails with ANSI DIVIDE_BY_ZERO; any other
+    * failure propagates. */
   private def divideByZero(df: DataFrame): Boolean =
     try { df.collect(); false }
     catch {
-      case e: Exception =>
-        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-          .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")) ||
-          (throw e)
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")) => true
     }
 
   test("IVF-PQ refine at generation == the shortlist join, row for row: " +
