@@ -529,7 +529,6 @@ object Cli {
     TopicStream.deleteRecursively(java.nio.file.Paths.get(ckpt))
     sub match {
       case "merge-all" =>
-        TopicStream.deleteRecursively(java.nio.file.Paths.get(s"${o.out}/produced"))
         TopicStream.mergeAllStream(spark, srcPath, dest, s"${o.out}/produced", ckpt,
           o.maxFiles, o.mergeTombstones)
         val (m, p) = produceCounters(spark, o.out)

@@ -40,7 +40,7 @@ object PlanDump {
           else if (streaming.TopicStream.lastBatchPlan.nonEmpty)
             streaming.TopicStream.lastBatchPlan
           else throw new IllegalStateException(
-            "stream row captured no micro-batch plan (TopicStream.awaitAndCapturePlan)")
+            "stream row captured no micro-batch plan (TopicStream.replay)")
         Files.write(outDir.resolve(s"${name}_$tag.txt"),
           plan.getBytes("UTF-8"),
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.queries.AnalyticsQueries
 import graft.sources.Tables
@@ -28,9 +25,6 @@ object AnomalyStream {
                     outDir: String, checkpointDir: String,
                     maxFilesPerTrigger: Option[Int] = None,
                     eventsPath: Option[String] = None): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
-
     // fit the constant-size stats dim from history, once, outside the
     // stream; persist it as a plain local value via the micro-batch plan
     val stats = AnalyticsQueries.typeStats(
@@ -40,18 +34,7 @@ object AnomalyStream {
         eventsPath.getOrElse(s"$dir/events.parquet"), maxFilesPerTrigger)
       .filter(col("value").isNotNull)
 
-    val flagged = AnalyticsQueries.flagAnomalies(arriving, stats)
-
-    val q = flagged.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TopicStream.writeBatchIdempotent(batch, batchId, outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, AnalyticsQueries.flagAnomalies(arriving, stats),
+      outDir, checkpointDir)((batch, _) => batch)
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.sources.{Bucketing, Tables}
 
@@ -46,9 +43,6 @@ object AsOfStream {
                  outDir: String, checkpointDir: String,
                  maxFilesPerTrigger: Option[Int] = None,
                  tablePrefix: String = "graft_asof"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
-
     val clicksTable = s"${tablePrefix}_clicks"
     Bucketing.writeBucketed(
       Tables.load(spark, dir, "events")
@@ -77,27 +71,18 @@ object AsOfStream {
         when(col("click_ts") <= col("ts"),
           struct(col("click_ts"), col("click_id"), col("click_value"))).as("m"))
 
-    val q = candidates.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a purchase's full candidate history lands in its arrival batch
-        // → the batch-local max(struct) reduction is the complete as-of
-        // answer: latest click_ts wins, click_id breaks ties, all-null
-        // candidates reduce to a null match
-        val out = batch
-          .groupBy(col("event_id"), col("user_id"), col("ts"), col("value"))
-          .agg(max(col("m")).as("m"))
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-            col("m.click_id").as("click_id"), col("m.click_ts").as("click_ts"),
-            col("m.click_value").as("click_value"))
-        TopicStream.writeBatchIdempotent(out, batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, candidates, outDir, checkpointDir) { (batch, _) =>
+      // a purchase's full candidate history lands in its arrival batch
+      // → the batch-local max(struct) reduction is the complete as-of
+      // answer: latest click_ts wins, click_id breaks ties, all-null
+      // candidates reduce to a null match
+      batch
+        .groupBy(col("event_id"), col("user_id"), col("ts"), col("value"))
+        .agg(max(col("m")).as("m"))
+        .select(col("event_id"), col("user_id"), col("ts"), col("value"),
+          col("m.click_id").as("click_id"), col("m.click_ts").as("click_ts"),
+          col("m.click_value").as("click_value"))
+    }
   }
 
   /** Streaming funnel resolution — the online face of events_funnel:
@@ -116,8 +101,6 @@ object AsOfStream {
                    outDir: String, checkpointDir: String,
                    maxFilesPerTrigger: Option[Int] = None,
                    tablePrefix: String = "graft_funnel"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     val e = Tables.load(spark, dir, "events")
     val clicksTable = s"${tablePrefix}_clicks"
     Bucketing.writeBucketed(
@@ -141,22 +124,14 @@ object AsOfStream {
         when(col("click_ts") <= col("ts"),
           struct(col("click_ts"), col("click_id"))).as("m"))
 
-    val q = candidates.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s1 = batch
-          .groupBy(col("event_id"), col("user_id"), col("ts"), col("value"))
-          .agg(max(col("m")).as("m"))
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-            col("m.click_id").as("click_id"), col("m.click_ts").as("click_ts"))
-        TopicStream.writeBatchIdempotent(resolveViews(s1, views), batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, candidates, outDir, checkpointDir) { (batch, _) =>
+      val s1 = batch
+        .groupBy(col("event_id"), col("user_id"), col("ts"), col("value"))
+        .agg(max(col("m")).as("m"))
+        .select(col("event_id"), col("user_id"), col("ts"), col("value"),
+          col("m.click_id").as("click_id"), col("m.click_ts").as("click_ts"))
+      resolveViews(s1, views)
+    }
   }
 
   /** Stage 2 of the streaming funnel: the reduced (one-click) batch rows

@@ -51,8 +51,7 @@ object CorpusStream {
                   outDir: String, checkpointDir: String, cap: Int = 10,
                   maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-    TopicStream.deleteRecursively(java.nio.file.Paths.get(outDir))
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val admitted = TopicStream.fileStream(spark, docsPath, maxFilesPerTrigger)
       .select(col("doc_id"), col("source")).as[QuotaDoc]
       .groupByKey(_.source)
@@ -69,17 +68,7 @@ object CorpusStream {
           state.update(n)
           out.iterator
       }
-    val q = admitted.toDF().writeStream
-      .outputMode(OutputMode.Update)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TopicStream.writeBatchIdempotent(
-          batch.withColumn("batch_id", lit(batchId)), batchId, outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, admitted.toDF(), outDir, checkpointDir,
+      OutputMode.Update)(TopicStream.withBatchId)
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.Dedup
 import graft.sources.Bucketing
@@ -180,8 +177,6 @@ object DedupStream {
                               dedupHorizon: Option[String],
                               tablePrefix: String): DataFrame = {
     import graft.operators.TextOps
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    java.nio.file.Files.createDirectories(Paths.get(outDir))
     val afterExact = TextOps.qualityExactSurvivors(spark.read.parquet(docsPath), minQuality)
     // static probe indexes, bucketed by their join keys (one-time write)
     val shingleTable = s"${tablePrefix}_shingles"
@@ -216,26 +211,19 @@ object DedupStream {
           .dropDuplicatesWithinWatermark("content_hash")
           .drop("ingest_ts")
     }
-    val q = deduped.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    TopicStream.runBatches(spark, deduped, outDir, checkpointDir)(
+      { (batch, _) =>
+        // the batch is read twice (probe side and survivors), so it is
+        // persisted until the write has landed
         val b = batch.persist()
         // EXACT inverted-index probe, not the banded one: the batch
         // pipeline removes every Jaccard >= tau pair, and a lossy
         // candidate stage here would keep docs the batch drops
         val losers = exactJaccardProbeIndexed(corpusEx, Dedup.shingleHashes(b), tau)
           .select(col("doc_b").as("doc_id")).distinct()
-        TopicStream.writeBatchIdempotent(
-          b.join(losers, Seq("doc_id"), "left_anti").select("doc_id", "quality"),
-          batchId, outDir)
-        b.unpersist()
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+        b.join(losers, Seq("doc_id"), "left_anti").select("doc_id", "quality")
+      },
+      after = (batch, _) => batch.unpersist())
   }
 
   /** Exact Jaccard pairs between an incoming (doc_id, hs, n_sh) frame and
@@ -286,27 +274,15 @@ object DedupStream {
                           outDir: String, checkpointDir: String,
                           maxFilesPerTrigger: Option[Int] = None,
                           tablePrefix: String = "graft_neardup"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    java.nio.file.Files.createDirectories(Paths.get(outDir))
     val corpusHashes = Dedup.shingleHashes(spark.read.parquet(docsPath))
     val (bandTable, setsTable) = writeNearDupIndex(corpusHashes, tablePrefix)
     val incoming = TopicStream.fileStream(spark, docsPath, maxFilesPerTrigger)
     val pairs = nearDupIngestIndexed(spark.table(bandTable), spark.table(setsTable),
       incoming, pairFilter = col("corpus_id") < col("new_id"))
-    val q = pairs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // multi-band hits duplicate within the batch; distinct here is
-        // complete because one doc's bands never span batches
-        TopicStream.writeBatchIdempotent(
-          batch.dropDuplicates("doc_a", "doc_b"), batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    // multi-band hits duplicate within the batch; distinct here is
+    // complete because one doc's bands never span batches
+    TopicStream.runBatches(spark, pairs, outDir, checkpointDir)(
+      (batch, _) => batch.dropDuplicates("doc_a", "doc_b"))
   }
 
   /** ONLINE snapshot delta — the streaming twin of
@@ -327,9 +303,6 @@ object DedupStream {
                           splits: Int = 4,
                           tau: Double = 0.5,
                           tablePrefix: String = "graft_delta"): DataFrame = {
-    import graft.streaming.TopicStream
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    java.nio.file.Files.createDirectories(Paths.get(outDir))
     graft.functions.NativeHash.register(spark)
     val isNew = col("doc_id") % 5 === 4
     val docs = spark.read.parquet(docsPath)
@@ -340,19 +313,8 @@ object DedupStream {
       s"$outDir-input", idCol = "doc_id")
     val incoming = TopicStream.fileStream(spark, splitDir,
       maxFilesPerTrigger = Some(1))
-    val q = incoming.filter(isNew).writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TopicStream.writeBatchIdempotent(
-          classifyDeltaBatch(spark, batch, kEst, minMatches, tau, tablePrefix),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, incoming.filter(isNew), outDir, checkpointDir)(
+      (batch, _) => classifyDeltaBatch(spark, batch, kEst, minMatches, tau, tablePrefix))
   }
 
   /** Materializes the four snapshot-delta probe indexes for a BASE
@@ -438,9 +400,6 @@ object DedupStream {
                                    splits: Int = 3,
                                    tau: Double = 0.5,
                                    tablePrefix: String = "graft_delta_adv"): DataFrame = {
-    import graft.streaming.TopicStream
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    java.nio.file.Files.createDirectories(Paths.get(outDir))
     graft.functions.NativeHash.register(spark)
     val isNew = col("doc_id") % 5 === 4
     val docs = spark.read.parquet(docsPath)
@@ -452,11 +411,9 @@ object DedupStream {
       s"$outDir-input", idCol = "doc_id")
     val incoming = TopicStream.fileStream(spark, splitDir,
       maxFilesPerTrigger = Some(1))
-    val q = incoming.filter(isNew).writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    TopicStream.runBatches(spark, incoming.filter(isNew), outDir, checkpointDir)(
+      { (batch, _) =>
+        // persisted until the advance below has read it again
         val b = batch.persist()
         // refresh on THIS session: the foreachBatch frames live in a
         // micro-batch session clone with its own relation cache, so the
@@ -466,23 +423,19 @@ object DedupStream {
         // advance silently never lands
         Seq("_hashes", "_bands", "_sigs", "_sets")
           .foreach(sfx => spark.catalog.refreshTable(s"$tablePrefix$sfx"))
-        TopicStream.writeBatchIdempotent(
-          classifyDeltaBatch(spark, b, kEst, minMatches, tau, tablePrefix)
-            .withColumn("shard", expr(s"doc_id DIV $chunk")),
-          batchId, outDir)
+        classifyDeltaBatch(spark, b, kEst, minMatches, tau, tablePrefix)
+          .withColumn("shard", expr(s"doc_id DIV $chunk"))
+      },
+      after = { (batch, batchId) =>
         // advance off the WRITTEN classification (one evaluation, no
         // re-probe of tables that are about to change)
-        val novel = b.join(
+        val novel = batch.join(
           spark.read.parquet(s"$outDir/batch_$batchId")
             .filter(col("status") === "novel").select(col("doc_id")),
           "doc_id")
         appendDeltaIndexes(novel, kEst, tablePrefix)
-        b.unpersist()
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+        batch.unpersist()
+      })
   }
 
   /** One micro-batch of the delta classification: the batch-side shingle/

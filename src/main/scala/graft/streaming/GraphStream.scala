@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.Graph
 import graft.sources.Bucketing
@@ -73,8 +70,6 @@ object GraphStream {
                       maxFilesPerTrigger: Option[Int] = None,
                       splits: Int = 3,
                       tablePrefix: String = "graft_mis_stream"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
 
     // offline fit: edge index (bucketed by src) + the MIS selected set,
@@ -93,19 +88,8 @@ object GraphStream {
       s"$outDir-input", idCol = "vec_id")
     val incoming = TopicStream.fileStream(spark, splitDir,
       maxFilesPerTrigger = maxFilesPerTrigger.orElse(Some(1)))
-
-    val q = incoming.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TopicStream.writeBatchIdempotent(
-          assignBatch(spark, batch, idxTable, selTable), batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, incoming, outDir, checkpointDir)(
+      (batch, _) => assignBatch(spark, batch, idxTable, selTable))
   }
 
   /** Streaming cluster card (`stream_mis_cluster_stats`, r14) — the

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.TextOps
 import graft.sources.{Bucketing, Tables}
@@ -55,27 +52,13 @@ object ImportanceStream {
                        outDir: String, checkpointDir: String,
                        maxFilesPerTrigger: Option[Int] = None,
                        docsPath: Option[String] = None): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
-
     val weights = spark.table(writeWeightIndex(spark, dir)).hint("merge")
 
     val arriving = TopicStream.fileStream(spark,
         docsPath.getOrElse(s"$dir/documents.parquet"), maxFilesPerTrigger)
       .filter(col("doc_id") % 97 =!= 0)
     val joined = TextOps.explodeJoinWeights(TextOps.importanceHashes(arriving), weights)
-
-    val q = joined.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TopicStream.writeBatchIdempotent(
-          TextOps.reduceImportance(batch, Scale), batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, joined, outDir, checkpointDir)(
+      (batch, _) => TextOps.reduceImportance(batch, Scale))
   }
 }

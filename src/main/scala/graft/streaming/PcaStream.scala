@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.Pca
 import graft.sources.Tables
@@ -29,8 +26,6 @@ object PcaStream {
                      outDir: String, checkpointDir: String,
                      maxFilesPerTrigger: Option[Int] = None,
                      embPath: Option[String] = None): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     graft.functions.NativeHash.register(spark)
 
     // offline fit on the historical corpus (the replay-parity contract:
@@ -46,17 +41,6 @@ object PcaStream {
       .withColumn("xh", expr("graft_fp_unit(e)"))
       .select(col("vec_id"),
         call_function("graft_dot", col("xh"), axisCol).cast("long").as("proj_fp"))
-
-    val q = scored.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TopicStream.writeBatchIdempotent(batch, batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, scored, outDir, checkpointDir)((batch, _) => batch)
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.sources.{Bucketing, Tables}
 
@@ -34,9 +31,6 @@ object RangeJoinStream {
                        maxFilesPerTrigger: Option[Int] = None,
                        tablePrefix: String = "graft_range"): DataFrame = {
     require(widthUs > 0, s"rangeCountStream: widthUs must be positive, got $widthUs")
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
-
     val clicksTable = s"${tablePrefix}_clicks"
     Bucketing.writeBucketed(
       Tables.load(spark, dir, "events")
@@ -58,22 +52,10 @@ object RangeJoinStream {
       .filter(col("__rt").isNull ||
         abs(unix_micros(col("ts")) - unix_micros(col("__rt"))) <= widthUs)
 
-    val q = candidates.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // count(__rt) skips the null carriers, so a zero-match purchase
-        // reduces to n_in_window = 0 instead of disappearing
-        TopicStream.writeBatchIdempotent(
-          batch
-            .groupBy(col("event_id"), col("user_id"), col("ts"), col("value"))
-            .agg(count(col("__rt")).as("n_in_window")),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    // count(__rt) skips the null carriers, so a zero-match purchase
+    // reduces to n_in_window = 0 instead of disappearing
+    TopicStream.runBatches(spark, candidates, outDir, checkpointDir)((batch, _) => batch
+      .groupBy(col("event_id"), col("user_id"), col("ts"), col("value"))
+      .agg(count(col("__rt")).as("n_in_window")))
   }
 }

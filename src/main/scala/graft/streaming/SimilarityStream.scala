@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.Similarity
 import graft.sources.{Bucketing, Tables}
@@ -43,8 +40,6 @@ object SimilarityStream {
                     maxFilesPerTrigger: Option[Int] = None,
                     probes: Int = 8,
                     tablePrefix: String = "graft_ivf_stream"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
     val isQuery = col("vec_id") < 8
     // the batch face's sizing count is the WHOLE table — same here, so
@@ -78,24 +73,13 @@ object SimilarityStream {
         expr("graft_dot(eq, ec)") / (col("nq") * col("nc")))
       .select(col("query_id"), col("corpus_id"), col("cos"))
 
-    val q = scored.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a query's candidates all land in its arrival batch → batch-local
-        // dedup + rerank is the complete per-query top-k
-        val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("corpus_id"))
-        TopicStream.writeBatchIdempotent(
-          batch.dropDuplicates("query_id", "corpus_id")
-            .withColumn("rnk", row_number().over(w))
-            .filter(col("rnk") <= k),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    // a query's candidates all land in its arrival batch → batch-local
+    // dedup + rerank is the complete per-query top-k
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("corpus_id"))
+    TopicStream.runBatches(spark, scored, outDir, checkpointDir)((batch, _) => batch
+      .dropDuplicates("query_id", "corpus_id")
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k))
   }
 
   /** Streaming ANN serving over the COMPACT IVF-PQ index — the online
@@ -119,8 +103,6 @@ object SimilarityStream {
                       tablePrefix: String = "graft_pq_stream",
                       index: Similarity.PqIndex = Similarity.PqIndex.Formula,
                       refineMul: Int = 1): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
     // refine <= 0 derives the N-adaptive shortlist width (r14) — the
     // batch Sized row's ladder, so replay == batch at every scale; the
@@ -162,34 +144,24 @@ object SimilarityStream {
       .select(col("query_id"), col("eq"), col("nq"), col("corpus_id"),
         scoreCol.as("acos"))
 
-    val q = approx.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a query's candidates all arrive in its batch: shortlist the
-        // top k·refine by PQ score, then exact-rerank ONLY those
-        // against the full vectors — batch-local, complete per query
-        val wa = Window.partitionBy(col("query_id"))
-          .orderBy(col("acos").desc, col("corpus_id"))
-        val short = batch
-          .withColumn("srnk", row_number().over(wa))
-          .filter(col("srnk") <= k * refineEff)
-          .drop("srnk", "acos")
-        val wr = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("corpus_id"))
-        TopicStream.writeBatchIdempotent(
-          short.join(corpusVecs, "corpus_id")
-            .withColumn("cos", expr("graft_dot(eq, ec)") / (col("nq") * col("nc")))
-            .withColumn("rnk", row_number().over(wr))
-            .filter(col("rnk") <= k)
-            .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk")),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, approx, outDir, checkpointDir) { (batch, _) =>
+      // a query's candidates all arrive in its batch: shortlist the
+      // top k·refine by PQ score, then exact-rerank ONLY those
+      // against the full vectors — batch-local, complete per query
+      val wa = Window.partitionBy(col("query_id"))
+        .orderBy(col("acos").desc, col("corpus_id"))
+      val short = batch
+        .withColumn("srnk", row_number().over(wa))
+        .filter(col("srnk") <= k * refineEff)
+        .drop("srnk", "acos")
+      val wr = Window.partitionBy(col("query_id"))
+        .orderBy(col("cos").desc, col("corpus_id"))
+      short.join(corpusVecs, "corpus_id")
+        .withColumn("cos", expr("graft_dot(eq, ec)") / (col("nq") * col("nc")))
+        .withColumn("rnk", row_number().over(wr))
+        .filter(col("rnk") <= k)
+        .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk"))
+    }
   }
 
   /** Streaming PQ-compact MIPS serving (r14) — the online face of
@@ -211,8 +183,6 @@ object SimilarityStream {
                           maxFilesPerTrigger: Option[Int] = None,
                           probes: Int = 8, refine: Int = 0,
                           tablePrefix: String = "graft_mips_pq_stream"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
     // refine <= 0 derives the N-adaptive shortlist width (r14)
     val refineEff =
@@ -256,42 +226,32 @@ object SimilarityStream {
         call_function("graft_mips_pq_score",
           col("eqa"), col("bucket"), col("codes")).as("acos"))
 
-    val q = approx.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a query's candidates all arrive in its batch: PQ shortlist,
-        // then the exact RAW-ip rerank of only the shortlist. The
-        // per-batch query-vector table is distilled FIRST (map-side
-        // partial first() — the exchange carries one row per query per
-        // map partition, never the candidate set) so the shortlist
-        // window shuffles eq-free rows; eq re-joins post-shortlist as
-        // a broadcast. (The batch twin's index carries the vectors and
-        // scores at generation; this persisted index holds codes only.)
-        val queryVecs = batch.select(col("query_id"), col("eq"))
-          .dropDuplicates("query_id")
-        val wa = Window.partitionBy(col("query_id"))
-          .orderBy(col("acos").desc, col("corpus_id"))
-        val short = batch.drop("eq")
-          .withColumn("srnk", row_number().over(wa))
-          .filter(col("srnk") <= k * refineEff)
-          .drop("srnk", "acos")
-        val wr = Window.partitionBy(col("query_id"))
-          .orderBy(col("ip").desc, col("corpus_id"))
-        TopicStream.writeBatchIdempotent(
-          short.join(corpusVecs, "corpus_id")
-            .join(broadcast(queryVecs), "query_id")
-            .withColumn("ip", expr("graft_dot(eq, ec)"))
-            .withColumn("rnk", row_number().over(wr))
-            .filter(col("rnk") <= k)
-            .select(col("query_id"), col("corpus_id"), col("ip"), col("rnk")),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, approx, outDir, checkpointDir) { (batch, _) =>
+      // a query's candidates all arrive in its batch: PQ shortlist,
+      // then the exact RAW-ip rerank of only the shortlist. The
+      // per-batch query-vector table is distilled FIRST (map-side
+      // partial first() — the exchange carries one row per query per
+      // map partition, never the candidate set) so the shortlist
+      // window shuffles eq-free rows; eq re-joins post-shortlist as
+      // a broadcast. (The batch twin's index carries the vectors and
+      // scores at generation; this persisted index holds codes only.)
+      val queryVecs = batch.select(col("query_id"), col("eq"))
+        .dropDuplicates("query_id")
+      val wa = Window.partitionBy(col("query_id"))
+        .orderBy(col("acos").desc, col("corpus_id"))
+      val short = batch.drop("eq")
+        .withColumn("srnk", row_number().over(wa))
+        .filter(col("srnk") <= k * refineEff)
+        .drop("srnk", "acos")
+      val wr = Window.partitionBy(col("query_id"))
+        .orderBy(col("ip").desc, col("corpus_id"))
+      short.join(corpusVecs, "corpus_id")
+        .join(broadcast(queryVecs), "query_id")
+        .withColumn("ip", expr("graft_dot(eq, ec)"))
+        .withColumn("rnk", row_number().over(wr))
+        .filter(col("rnk") <= k)
+        .select(col("query_id"), col("corpus_id"), col("ip"), col("rnk"))
+    }
   }
 
   /** ONLINE semantic snapshot delta — the streaming twin of
@@ -325,8 +285,6 @@ object SimilarityStream {
                         maxFilesPerTrigger: Option[Int] = None,
                         splits: Int = 3,
                         tablePrefix: String = "graft_pq_dedup_stream"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
     val groupsTable = s"${tablePrefix}_groups"
     Bucketing.writeBucketed(
@@ -342,29 +300,19 @@ object SimilarityStream {
       s"$outDir-input", idCol = "vec_id")
     val incoming = TopicStream.fileStream(spark, splitDir,
       maxFilesPerTrigger = maxFilesPerTrigger.orElse(Some(1)))
-    val q = incoming.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val coded = Similarity.vectors(batch).filter(col("nrm") > 0)
-          .select(col("vec_id"),
-            expr("graft_ivf_bucket(e)").as("bucket"),
-            expr("graft_pq_code(e)").as("codes"))
-        // the group row always exists (the batch's vectors are corpus
-        // members whose codes the fit saw) — an inner join by identity
-        TopicStream.writeBatchIdempotent(
-          coded.join(spark.table(groupsTable), Seq("bucket", "codes"))
-            .select(col("vec_id"), col("bucket"),
-              array_join(col("codes"), ",").as("codes_str"),
-              col("n_same"), col("rep_id"),
-              (col("vec_id") === col("rep_id")).as("keep")),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, incoming, outDir, checkpointDir) { (batch, _) =>
+      val coded = Similarity.vectors(batch).filter(col("nrm") > 0)
+        .select(col("vec_id"),
+          expr("graft_ivf_bucket(e)").as("bucket"),
+          expr("graft_pq_code(e)").as("codes"))
+      // the group row always exists (the batch's vectors are corpus
+      // members whose codes the fit saw) — an inner join by identity
+      coded.join(spark.table(groupsTable), Seq("bucket", "codes"))
+        .select(col("vec_id"), col("bucket"),
+          array_join(col("codes"), ",").as("codes_str"),
+          col("n_same"), col("rep_id"),
+          (col("vec_id") === col("rep_id")).as("keep"))
+    }
   }
 
   def semanticDeltaStream(spark: SparkSession, embPath: String,
@@ -372,8 +320,6 @@ object SimilarityStream {
                           tau: Double = 0.4,
                           maxFilesPerTrigger: Option[Int] = None,
                           tablePrefix: String = "graft_semdelta"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
     val isNew = col("vec_id") % 5 === 4
 
@@ -396,28 +342,15 @@ object SimilarityStream {
       .withColumn("cos", expr("graft_dot(en, eb)") / (col("nn") * col("nb")))
       .select(col("vec_id"), col("base_id"), col("cos"))
 
-    val q = scored.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val w = Window.partitionBy(col("vec_id"))
-        val wr = w.orderBy(col("cos").desc_nulls_last, col("base_id"))
-        TopicStream.writeBatchIdempotent(
-          batch
-            .withColumn("n_cand", count(col("base_id")).over(w))
-            .withColumn("rk", row_number().over(wr))
-            .filter(col("rk") === 1)
-            .select(col("vec_id"), col("n_cand"),
-              col("base_id").as("best_base"), col("cos").as("best_cos"),
-              when(col("cos") >= tau, "near_dup").otherwise("novel")
-                .as("verdict")),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+    val w = Window.partitionBy(col("vec_id"))
+    val wr = w.orderBy(col("cos").desc_nulls_last, col("base_id"))
+    TopicStream.runBatches(spark, scored, outDir, checkpointDir)((batch, _) => batch
+      .withColumn("n_cand", count(col("base_id")).over(w))
+      .withColumn("rk", row_number().over(wr))
+      .filter(col("rk") === 1)
+      .select(col("vec_id"), col("n_cand"),
+        col("base_id").as("best_base"), col("cos").as("best_cos"),
+        when(col("cos") >= tau, "near_dup").otherwise("novel").as("verdict")))
   }
 
   /** One shard's classification against the CURRENT base assignment
@@ -488,8 +421,6 @@ object SimilarityStream {
                                    splits: Int = 3,
                                    tau: Double = 0.4,
                                    tablePrefix: String = "graft_semdelta_adv"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
     val isNew = col("vec_id") % 5 === 4
     val chunk = corpus.agg(max(col("vec_id"))).head().getLong(0) / splits + 1
@@ -500,33 +431,27 @@ object SimilarityStream {
       s"$outDir-input", idCol = "vec_id")
     val incoming = TopicStream.fileStream(spark, splitDir,
       maxFilesPerTrigger = Some(1))
-    val q = incoming.filter(isNew).writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    TopicStream.runBatches(spark, incoming.filter(isNew), outDir, checkpointDir)(
+      { (batch, _) =>
+        // persisted until the advance below has read it again
         val b = batch.persist()
         // refresh on THIS session: foreachBatch frames live in a
         // micro-batch session clone with its own relation cache — the
         // append refreshed the clone's catalog, not the one
         // classifySemanticBatch reads through (the text-advance rule)
         spark.catalog.refreshTable(idxTable)
-        TopicStream.writeBatchIdempotent(
-          classifySemanticBatch(spark, b, tau, idxTable)
-            .withColumn("shard", expr(s"vec_id DIV $chunk")),
-          batchId, outDir)
+        classifySemanticBatch(spark, b, tau, idxTable)
+          .withColumn("shard", expr(s"vec_id DIV $chunk"))
+      },
+      after = { (batch, batchId) =>
         // advance off the WRITTEN classification
-        val novel = b.join(
+        val novel = batch.join(
           spark.read.parquet(s"$outDir/batch_$batchId")
             .filter(col("verdict") === "novel").select(col("vec_id")),
           "vec_id")
         Bucketing.appendBucketed(assignmentRows(novel), idxTable,
           IndexBuckets, "bucket")
-        b.unpersist()
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
+        batch.unpersist()
+      })
   }
 }

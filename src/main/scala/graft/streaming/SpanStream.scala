@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.TextOps
 import graft.sources.{Bucketing, Tables}
@@ -51,25 +48,12 @@ object SpanStream {
                       outDir: String, checkpointDir: String,
                       maxFilesPerTrigger: Option[Int] = None,
                       docsPath: Option[String] = None): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
-
     val vocab = spark.table(writeSpanVocab(spark, dir)).hint("merge")
 
     val arriving = TopicStream.fileStream(spark,
       docsPath.getOrElse(s"$dir/documents.parquet"), maxFilesPerTrigger)
 
-    val q = arriving.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TopicStream.writeBatchIdempotent(
-          TextOps.spanDedupWithVocab(batch, vocab), batchId, outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    TopicStream.readBatchedOutput(spark, outDir)
+    TopicStream.runBatches(spark, arriving, outDir, checkpointDir)(
+      (batch, _) => TextOps.spanDedupWithVocab(batch, vocab))
   }
 }

@@ -3,9 +3,10 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger}
 import org.apache.spark.sql.types.TimestampType
 
 import graft.operators.TopicOps
@@ -96,15 +97,7 @@ object TopicStream {
                      mergeTombstones: Boolean = false): DataFrame = {
     val out = TopicOps.mergeAll(topicStream(spark, eventsPath, maxFilesPerTrigger),
       dest, mergeTombstones)
-    val q = out.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    toFileSink(spark, out, outDir, checkpointDir)
   }
 
   /** Streaming compaction as a running aggregate (complete mode): each
@@ -199,22 +192,10 @@ object TopicStream {
   /** Runs [[movingAggUpdates]] to parquet and reads it back. */
   def movingAggStream(spark: SparkSession, eventsPath: String,
                       outDir: String, checkpointDir: String,
-                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    deleteRecursively(Paths.get(outDir))
-    val updates = movingAggUpdates(spark, eventsStream(spark, eventsPath, maxFilesPerTrigger))
-    val q = updates.toDF().writeStream
-      .outputMode(OutputMode.Update)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(batch.withColumn("batch_id", lit(batchId)),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    readBatchedOutput(spark, outDir)
-  }
+                      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runBatches(spark,
+      movingAggUpdates(spark, eventsStream(spark, eventsPath, maxFilesPerTrigger)).toDF(),
+      outDir, checkpointDir, OutputMode.Update)(withBatchId)
 
   /** Streaming top-k values — the custom TypedImperativeAggregate
     * ([[graft.functions.TopKLongs]]) running AS streaming state: the
@@ -260,26 +241,15 @@ object TopicStream {
         (col("value").cast("decimal(12,2)") * 100).cast("long").as("c"))
       .groupBy(col("event_type"), col("c"))
       .agg(count(lit(1)).as("cnt"))
-    val q = hist.writeStream
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val byType = Window.partitionBy(col("event_type"))
-        batch
-          .withColumn("cum", sum(col("cnt")).over(byType.orderBy(col("c"))))
-          .withColumn("n", sum(col("cnt")).over(byType))
-          .groupBy(col("event_type"))
-          .agg(max(col("n")).as("n_events"),
-            min(when(col("cum") >= expr("(50*n + 99) DIV 100"), col("c"))).as("p50_cents"),
-            min(when(col("cum") >= expr("(90*n + 99) DIV 100"), col("c"))).as("p90_cents"),
-            min(when(col("cum") >= expr("(99*n + 99) DIV 100"), col("c"))).as("p99_cents"))
-          .write.mode("overwrite").parquet(outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    val byType = Window.partitionBy(col("event_type"))
+    completeToParquet(spark, hist, outDir, checkpointDir, epilogue = batch => batch
+      .withColumn("cum", sum(col("cnt")).over(byType.orderBy(col("c"))))
+      .withColumn("n", sum(col("cnt")).over(byType))
+      .groupBy(col("event_type"))
+      .agg(max(col("n")).as("n_events"),
+        min(when(col("cum") >= expr("(50*n + 99) DIV 100"), col("c"))).as("p50_cents"),
+        min(when(col("cum") >= expr("(90*n + 99) DIV 100"), col("c"))).as("p90_cents"),
+        min(when(col("cum") >= expr("(99*n + 99) DIV 100"), col("c"))).as("p99_cents")))
   }
 
   /** Streaming A/B experiment monitoring — the live card every running
@@ -313,15 +283,7 @@ object TopicStream {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("w.start").as("hour"), col("event_type"), col("n_events"))
-    val q = agg.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    toFileSink(spark, agg, outDir, checkpointDir)
   }
 
   /** Incremental compaction changelog via flatMapGroupsWithState: per-key
@@ -413,22 +375,10 @@ object TopicStream {
     */
   def scdStream(spark: SparkSession, eventsPath: String,
                 outDir: String, checkpointDir: String,
-                maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    deleteRecursively(Paths.get(outDir))
-    val versions = scdUpdates(spark, topicStream(spark, eventsPath, maxFilesPerTrigger))
-    val q = versions.toDF().writeStream
-      .outputMode(OutputMode.Update)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(batch.withColumn("batch_id", lit(batchId)),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    readBatchedOutput(spark, outDir)
-  }
+                maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runBatches(spark,
+      scdUpdates(spark, topicStream(spark, eventsPath, maxFilesPerTrigger)).toDF(),
+      outDir, checkpointDir, OutputMode.Update)(withBatchId)
 
   /** Splits the events parquet into `n` OFFSET-RANGE chunk files with
     * strictly ascending modification times, so the file-stream source
@@ -505,22 +455,10 @@ object TopicStream {
     */
   def compactUpdatesStream(spark: SparkSession, eventsPath: String,
                            outDir: String, checkpointDir: String,
-                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    deleteRecursively(Paths.get(outDir))
-    val updates = compactUpdates(spark, topicStream(spark, eventsPath, maxFilesPerTrigger))
-    val q = updates.toDF().writeStream
-      .outputMode(OutputMode.Update)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(batch.withColumn("batch_id", lit(batchId)),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    readBatchedOutput(spark, outDir)
-  }
+                           maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runBatches(spark,
+      compactUpdates(spark, topicStream(spark, eventsPath, maxFilesPerTrigger)).toDF(),
+      outDir, checkpointDir, OutputMode.Update)(withBatchId)
 
   /** Streaming DLQ split with per-sink destinations — the reference's
     * actual production shape (merge to dest, decode failures to the DLQ
@@ -530,25 +468,18 @@ object TopicStream {
   def dlqStream(spark: SparkSession, eventsPath: String, error: org.apache.spark.sql.Column,
                 cleanDir: String, dlqDir: String, checkpointDir: String,
                 maxFilesPerTrigger: Option[Int] = None): (DataFrame, DataFrame) = {
-    deleteRecursively(Paths.get(cleanDir))
     deleteRecursively(Paths.get(dlqDir))
     val split = TopicOps.dlqSplit(topicStream(spark, eventsPath, maxFilesPerTrigger), error)
-    val q = split.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        writeBatchIdempotent(b.filter(col("sink") === "clean").drop("sink"),
-          batchId, cleanDir)
-        writeBatchIdempotent(b.filter(col("sink") === "dlq").drop("sink"),
+    // the batch is read twice (one write per sink), so it is persisted
+    // across the runner's clean write and the dlq write after it
+    val clean = runBatches(spark, split, cleanDir, checkpointDir)(
+      (batch, _) => batch.persist().filter(col("sink") === "clean").drop("sink"),
+      after = { (batch, batchId) =>
+        writeBatchIdempotent(batch.filter(col("sink") === "dlq").drop("sink"),
           batchId, dlqDir)
-        b.unpersist()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    (readBatchedOutput(spark, cleanDir), readBatchedOutput(spark, dlqDir))
+        batch.unpersist()
+      })
+    (clean, readBatchedOutput(spark, dlqDir))
   }
 
   /** DLQ replay reconciliation — a watermarked STREAM-STREAM join. The
@@ -631,18 +562,9 @@ object TopicStream {
   def askFeedStream(spark: SparkSession, eventsPath: String, feedDir: String,
                     dest: String, outDir: String, checkpointDir: String,
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    deleteRecursively(Paths.get(outDir))
     val records = topicStream(spark, eventsPath, maxFilesPerTrigger)
     val decisions = fileStream(spark, feedDir, maxFilesPerTrigger)
-    val q = askDecisionsJoin(records, decisions, dest).writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    toFileSink(spark, askDecisionsJoin(records, decisions, dest), outDir, checkpointDir)
   }
 
   /** Runs [[askDecisionsJoin]] over the events file stream, with the
@@ -654,22 +576,13 @@ object TopicStream {
   def askDecisionsStream(spark: SparkSession, eventsPath: String,
                          outDir: String, checkpointDir: String,
                          maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    deleteRecursively(Paths.get(outDir))
     val records = topicStream(spark, eventsPath, maxFilesPerTrigger)
     val decisions = topicStream(spark, eventsPath, maxFilesPerTrigger)
       .filter(col("offset") % 3 === 0)
       .select(col("topic"), col("partition"), col("offset"),
         (col("ts") + expr("INTERVAL 10 MINUTES")).as("d_ts"),
         when(col("offset") % 2 === 0, "merge").otherwise("purge").as("action"))
-    val q = askDecisionsJoin(records, decisions, "events.v2").writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    toFileSink(spark, askDecisionsJoin(records, decisions, "events.v2"), outDir, checkpointDir)
   }
 
   /** Runs [[dlqReplayJoin]] over the events file stream: the DLQ side is
@@ -681,7 +594,6 @@ object TopicStream {
                       error: org.apache.spark.sql.Column,
                       outDir: String, checkpointDir: String,
                       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    deleteRecursively(Paths.get(outDir))
     val dlq = TopicOps.dlqSplit(topicStream(spark, eventsPath, maxFilesPerTrigger), error)
       .filter(col("sink") === "dlq")
     val fixes = TopicOps.dlqSplit(topicStream(spark, eventsPath, maxFilesPerTrigger), error)
@@ -689,33 +601,7 @@ object TopicStream {
       .select(col("topic"), col("partition"), col("offset"),
         (col("ts") + expr("INTERVAL 10 MINUTES")).as("fix_ts"),
         lit("{\"k\": 1}").as("fixed_value"))
-    val q = dlqReplayJoin(dlq, fixes).writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
-  }
-
-  /** Complete-mode aggregation → overwrite parquet per micro-batch; the
-    * final batch IS the full aggregate, so batch oracles apply verbatim.
-    */
-  private[streaming] def completeToParquet(spark: SparkSession, agg: DataFrame,
-                                outDir: String, checkpointDir: String): DataFrame = {
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    toFileSink(spark, dlqReplayJoin(dlq, fixes), outDir, checkpointDir)
   }
 
   /** One user's event for sessionization. */
@@ -809,21 +695,10 @@ object TopicStream {
   /** Runs [[sessionizeUpdates]] over the events stream to parquet. */
   def sessionizeStream(spark: SparkSession, eventsPath: String,
                        outDir: String, checkpointDir: String,
-                       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    deleteRecursively(Paths.get(outDir))
-    val sessions = sessionizeUpdates(spark, eventsStream(spark, eventsPath, maxFilesPerTrigger))
-    val q = sessions.toDF().writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(batch, batchId, outDir)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    readBatchedOutput(spark, outDir)
-  }
+                       maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runBatches(spark,
+      sessionizeUpdates(spark, eventsStream(spark, eventsPath, maxFilesPerTrigger)).toDF(),
+      outDir, checkpointDir)((batch, _) => batch)
 
   /** Kafka wiring for production (the reference's native transport). The
     * connector jar isn't in this container so these paths are untested
@@ -860,24 +735,87 @@ object TopicStream {
       .option("checkpointLocation", checkpointDir)
 
   /** Physical plan of the LAST micro-batch of the most recent query run
-    * through [[awaitAndCapturePlan]] — the spec surface that pins the
-    * per-batch plan shape (e.g. zero static-side Exchange when the probe
-    * indexes are bucketed). Diagnostics only; never read by operators.
+    * through [[replay]] — the spec surface that pins the per-batch plan
+    * shape (e.g. zero static-side Exchange when the probe indexes are
+    * bucketed). Diagnostics only; never read by operators.
     */
   @volatile var lastBatchPlan: String = ""
 
-  /** Awaits termination, then captures the query's last executed
-    * micro-batch plan into [[lastBatchPlan]]. `StreamingQuery.explain`
-    * prints via Console, so the capture is a plain redirect.
+  /** The one micro-batch runner every stream twin goes through — the
+    * reference's poll loop (Pipeline.kt:29), with the checkpoint as the
+    * per-batch offset commit. Wipes and creates `outDir`, replays all
+    * available input (AvailableNow) under `checkpointDir` in `mode`,
+    * waits for the end and captures the last micro-batch plan into
+    * [[lastBatchPlan]]. `sink` says where each batch lands.
     */
-  def awaitAndCapturePlan(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def replay(stream: DataFrame, outDir: String, checkpointDir: String,
+                     mode: OutputMode)(
+                     sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    deleteRecursively(Paths.get(outDir))
+    Files.createDirectories(Paths.get(outDir))
+    val q = sink(stream.writeStream.outputMode(mode))
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
     q.awaitTermination()
+    // StreamingQuery.explain prints via Console, so the capture is a
+    // plain redirect
     val buf = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
       q.explain(extended = false)
     }
     lastBatchPlan = buf.toString("UTF-8")
   }
+
+  /** Append through the exactly-once parquet file sink (offset log + file
+    * manifest in the checkpoint = the reference's sendOffsetsToTransaction)
+    * and read the sink back.
+    */
+  private def toFileSink(spark: SparkSession, stream: DataFrame,
+                         outDir: String, checkpointDir: String): DataFrame = {
+    replay(stream, outDir, checkpointDir, OutputMode.Append)(
+      _.format("parquet").option("path", outDir))
+    spark.read.parquet(outDir)
+  }
+
+  /** Complete-mode aggregation → overwrite parquet per micro-batch; the
+    * final batch IS the full aggregate, so batch oracles apply verbatim.
+    * `epilogue` runs on each batch before the write — a batch query on
+    * the aggregate, where a second aggregation is legal.
+    */
+  private[streaming] def completeToParquet(spark: SparkSession, agg: DataFrame,
+      outDir: String, checkpointDir: String,
+      epilogue: DataFrame => DataFrame = identity): DataFrame = {
+    replay(agg, outDir, checkpointDir, OutputMode.Complete)(
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
+        epilogue(batch).write.mode("overwrite").parquet(outDir)
+      })
+    spark.read.parquet(outDir)
+  }
+
+  /** The foreachBatch form of [[replay]] for append and update mode:
+    * `body` turns each micro-batch into the rows written under
+    * `batch_<id>` ([[writeBatchIdempotent]]), `after` runs once that
+    * write has landed (a second sink, an index advance, releasing a
+    * batch `body` persisted), and the union of the batches is read back
+    * ([[readBatchedOutput]]).
+    */
+  private[graft] def runBatches(spark: SparkSession, stream: DataFrame,
+      outDir: String, checkpointDir: String,
+      mode: OutputMode = OutputMode.Append)(
+      body: (DataFrame, Long) => DataFrame,
+      after: (DataFrame, Long) => Unit = (_, _) => ()): DataFrame = {
+    replay(stream, outDir, checkpointDir, mode)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeBatchIdempotent(body(batch, batchId), batchId, outDir)
+        after(batch, batchId)
+      })
+    readBatchedOutput(spark, outDir)
+  }
+
+  /** The changelog bodies' batch provenance column. */
+  private[streaming] val withBatchId: (DataFrame, Long) => DataFrame =
+    (batch, batchId) => batch.withColumn("batch_id", lit(batchId))
 
   /** Idempotent foreachBatch parquet sink: foreachBatch is at-least-once,
     * so a task/driver retry of a batch would double-append with a plain
@@ -897,12 +835,15 @@ object TopicStream {
   def readBatchedOutput(spark: SparkSession, outDir: String): DataFrame =
     spark.read.option("recursiveFileLookup", "true").parquet(outDir)
 
-  /** Fresh scratch area per (queryName, input) under the repo's target dir;
-    * wiped on entry so reruns don't resume stale checkpoints.
+  /** Fresh scratch area per (queryName, input) under `target/stream-scratch`
+    * of the working directory (sbt's run and test JVMs start in the
+    * project base), so two checkouts never share checkpoints;
+    * `-Dgraft.stream.scratch` overrides the root. Wiped on entry so reruns
+    * don't resume stale checkpoints.
     */
   def scratchDirs(name: String, inputPath: String): (String, String) = {
     val base = Paths.get(sys.props.getOrElse("graft.stream.scratch",
-      "/root/repo/target/stream-scratch"))
+      "target/stream-scratch")).toAbsolutePath
     val leaf = base.resolve(s"$name-${math.abs(inputPath.hashCode).toString}")
     deleteRecursively(leaf)
     Files.createDirectories(leaf)

@@ -16,7 +16,7 @@ class StreamingSpec extends SparkSpec {
     * maxFilesPerTrigger=1 yields 4 micro-batches.
     */
   private lazy val splitDir: String = {
-    val dir = "/root/repo/target/stream-scratch/events-split"
+    val dir = "target/stream-scratch/events-split"
     Tables.load(spark, sf, "events").repartition(4)
       .write.mode("overwrite").parquet(dir)
     dir
@@ -41,11 +41,46 @@ class StreamingSpec extends SparkSpec {
     assert(batch.except(streamed).count() === 0)
   }
 
+  test("stream scratch dirs sit under the working directory's target/stream-scratch") {
+    val root = java.nio.file.Paths.get("target/stream-scratch").toAbsolutePath
+    val (out, ckpt) = TopicStream.scratchDirs("spec_scratch_root", splitDir)
+    for (d <- Seq(out, ckpt))
+      assert(java.nio.file.Paths.get(d).toAbsolutePath.normalize.startsWith(root), d)
+  }
+
+  test("every stream twin records its micro-batch plan: the exactly-once file sink " +
+      "(merge) and complete mode (compaction)") {
+    TopicStream.lastBatchPlan = ""
+    val (out1, ckpt1) = TopicStream.scratchDirs("spec_plan_merge", splitDir)
+    TopicStream.mergeAllStream(spark, splitDir, "events.v2", out1, ckpt1,
+      maxFilesPerTrigger = Some(2))
+    assert(TopicStream.lastBatchPlan.nonEmpty, "file-sink run captured no plan")
+    TopicStream.lastBatchPlan = ""
+    val (out2, ckpt2) = TopicStream.scratchDirs("spec_plan_compact", splitDir)
+    TopicStream.compactStream(spark, splitDir, out2, ckpt2, maxFilesPerTrigger = Some(2))
+    assert(TopicStream.lastBatchPlan.nonEmpty, "complete-mode run captured no plan")
+  }
+
+  test("the batch sink is idempotent per batch id: a rewritten id leaves one copy, " +
+      "two ids leave two") {
+    val out = TopicStream.scratchDirs("spec_idempotent_sink", splitDir)._1
+    val rows = Tables.load(spark, sf, "events").select("event_id", "value")
+      .orderBy("event_id").limit(20)
+    val n = rows.count()
+    TopicStream.writeBatchIdempotent(rows, 0L, out)
+    TopicStream.writeBatchIdempotent(rows, 0L, out)
+    val once = TopicStream.readBatchedOutput(spark, out)
+    assert(once.count() === n)
+    assert(once.exceptAll(rows).isEmpty && rows.exceptAll(once).isEmpty)
+    TopicStream.writeBatchIdempotent(rows, 1L, out)
+    assert(TopicStream.readBatchedOutput(spark, out).count() === 2 * n)
+  }
+
   test("timeOrderedSplitInput partitions the input exactly, chunks are " +
       "disjoint event-time ranges in file order, and a time-ordered " +
       "sessionize replay equals the single-batch form") {
     val split = TopicStream.timeOrderedSplitInput(spark, s"$sf/events.parquet", 3,
-      "/root/repo/target/stream-scratch/tsplit-input")
+      "target/stream-scratch/tsplit-input")
     val orig = spark.read.parquet(s"$sf/events.parquet")
     val back = spark.read.parquet(split)
     // exact partition: nothing lost, nothing duplicated
@@ -79,7 +114,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming SCD2 over an ordered multi-batch replay emits exactly the batch " +
       "history's closed versions; closures genuinely cross batches; stale drops") {
     val ordered = TopicStream.orderedSplitInput(spark, s"$sf/events.parquet", 4,
-      "/root/repo/target/stream-scratch/scd2-ordered-input")
+      "target/stream-scratch/scd2-ordered-input")
     val (out, ckpt) = TopicStream.scratchDirs("spec_scd2", ordered)
     val streamed = TopicStream.scdStream(spark, ordered, out, ckpt,
       maxFilesPerTrigger = Some(1)).cache()
@@ -106,7 +141,7 @@ class StreamingSpec extends SparkSpec {
     // 5 then 10 arrive in batch 1, a regressed 7 is redelivered in batch
     // 2 — the only emission is the 5→10 closure, 7 is dropped
     import spark.implicits._
-    val staleDir = "/root/repo/target/stream-scratch/scd2-stale-input"
+    val staleDir = "target/stream-scratch/scd2-stale-input"
     val staleRoot = new java.io.File(staleDir)
     if (staleRoot.exists()) {
       java.nio.file.Files.walk(staleRoot.toPath)
@@ -147,7 +182,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming moving aggregates continue a user's frame ACROSS batches: " +
       "running totals never reset and the 5-deque spans chunk boundaries") {
     val ordered = TopicStream.orderedSplitInput(spark, s"$sf/events.parquet", 4,
-      "/root/repo/target/stream-scratch/movagg-ordered-input")
+      "target/stream-scratch/movagg-ordered-input")
     val (out, ckpt) = TopicStream.scratchDirs("spec_movagg", ordered)
     val streamed = TopicStream.movingAggStream(spark, ordered, out, ckpt,
       maxFilesPerTrigger = Some(1)).cache()
@@ -203,7 +238,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming ingest quota: per-source cap fills ACROSS batches with one counter " +
       "of state; at-quota sources admit nothing more") {
     val ordered = TopicStream.orderedSplitInput(spark, s"$sf/documents.parquet", 4,
-      "/root/repo/target/stream-scratch/quota-ordered-input", idCol = "doc_id")
+      "target/stream-scratch/quota-ordered-input", idCol = "doc_id")
     val (out, ckpt) = TopicStream.scratchDirs("spec_quota", ordered)
     // each input chunk holds ~6 docs per source, so a cap of 20 can only
     // fill across 3+ micro-batches — the cross-batch counter is exercised
@@ -256,7 +291,7 @@ class StreamingSpec extends SparkSpec {
     */
   private lazy val advDir: String = {
     import spark.implicits._
-    val dir = "/root/repo/target/stream-scratch/events-adversarial"
+    val dir = "target/stream-scratch/events-adversarial"
     val fs = new java.io.File(dir)
     if (fs.exists()) fs.listFiles().foreach(_.delete())
     def t(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
@@ -343,7 +378,7 @@ class StreamingSpec extends SparkSpec {
     */
   private lazy val orderedSplitDir: String = {
     import org.apache.spark.sql.expressions.Window
-    val dir = "/root/repo/target/stream-scratch/events-ordered"
+    val dir = "target/stream-scratch/events-ordered"
     val fs = new java.io.File(dir)
     if (fs.exists()) fs.listFiles().foreach(_.delete())
     val e = Tables.load(spark, sf, "events")
@@ -412,7 +447,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming near-dup ingest over multi-batch replay equals batch MinHash pairs") {
-    val docsDir = "/root/repo/target/stream-scratch/docs-split"
+    val docsDir = "target/stream-scratch/docs-split"
     Tables.load(spark, sf, "documents").repartition(4)
       .write.mode("overwrite").parquet(docsDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_dedup_ingest", docsDir)
@@ -426,7 +461,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming anomaly flagging over multi-batch replay equals batch events_anomaly") {
-    val evDir = "/root/repo/target/stream-scratch/events-split-anom"
+    val evDir = "target/stream-scratch/events-split-anom"
     Tables.load(spark, sf, "events").repartition(4)
       .write.mode("overwrite").parquet(evDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_anomaly", evDir)
@@ -442,7 +477,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming span removal over multi-batch replay equals batch spanDedup; " +
       "the fitted vocabulary scans its buckets, never re-shuffled") {
-    val docsDir = "/root/repo/target/stream-scratch/docs-split-span"
+    val docsDir = "target/stream-scratch/docs-split-span"
     Tables.load(spark, sf, "documents").repartition(4)
       .write.mode("overwrite").parquet(docsDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_span_dedup", docsDir)
@@ -470,7 +505,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming PCA scoring over multi-batch replay equals batch " +
       "embedding_pca_project bit-for-bit (axis fitted once on the history, " +
       "every micro-batch scores statelessly against the fitted literal)") {
-    val embDir = "/root/repo/target/stream-scratch/emb-split-pca"
+    val embDir = "target/stream-scratch/emb-split-pca"
     Tables.load(spark, sf, "embeddings").repartition(4)
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_pca_score", embDir)
@@ -514,7 +549,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming DSIR scoring over multi-batch replay equals batch importance; " +
       "the bucketed weight index plans with zero static Exchange") {
-    val docsDir = "/root/repo/target/stream-scratch/docs-split-imp"
+    val docsDir = "target/stream-scratch/docs-split-imp"
     Tables.load(spark, sf, "documents").repartition(4)
       .write.mode("overwrite").parquet(docsDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_importance", docsDir)
@@ -537,7 +572,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming corpus card over multi-batch replay equals the batch source stats") {
-    val docsDir = "/root/repo/target/stream-scratch/docs-split-card"
+    val docsDir = "target/stream-scratch/docs-split-card"
     Tables.load(spark, sf, "documents").repartition(4)
       .write.mode("overwrite").parquet(docsDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_source_stats", docsDir)
@@ -549,7 +584,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming PQ ANN serving over multi-batch replay equals batch ivfPqTopK") {
-    val embDir = "/root/repo/target/stream-scratch/emb-split"
+    val embDir = "target/stream-scratch/emb-split"
     Tables.load(spark, sf, "embeddings").repartition(4)
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_sim_ivf_pq", embDir)
@@ -570,7 +605,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming FITTED-ladder PQ serving over multi-batch replay equals batch " +
       "ivfPqTopKFittedSized (the stream face re-derives the deterministic fit " +
       "through the shared builder — books bit-identical)") {
-    val embDir = "/root/repo/target/stream-scratch/emb-split-pqfit"
+    val embDir = "target/stream-scratch/emb-split-pqfit"
     Tables.load(spark, sf, "embeddings").repartition(4)
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_sim_ivf_pq_fitted", embDir)
@@ -591,7 +626,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming PQ-MIPS serving over multi-batch replay equals batch " +
       "mipsIvfPqTopK (codes-resident augmented index static, per-batch " +
       "shortlist + exact raw-ip rerank)") {
-    val embDir = "/root/repo/target/stream-scratch/emb-split-mipspq"
+    val embDir = "target/stream-scratch/emb-split-mipspq"
     Tables.load(spark, sf, "embeddings").repartition(4)
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_sim_mips_pq", embDir)
@@ -610,7 +645,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming pq-code dedup over multi-batch replay equals batch " +
       "pqCodeDedup (code groups fitted once, stateless per-batch encode + " +
       "bucketed group probe)") {
-    val embDir = "/root/repo/target/stream-scratch/emb-split-pqdedup"
+    val embDir = "target/stream-scratch/emb-split-pqdedup"
     Tables.load(spark, sf, "embeddings").repartition(4)
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_pq_dedup", embDir)
@@ -626,7 +661,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming clean-corpus ingest over multi-batch replay equals batch cleanCorpus") {
-    val docsDir = "/root/repo/target/stream-scratch/docs-split"
+    val docsDir = "target/stream-scratch/docs-split"
     Tables.load(spark, sf, "documents").repartition(4)
       .write.mode("overwrite").parquet(docsDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_clean_ingest", docsDir)
@@ -650,7 +685,7 @@ class StreamingSpec extends SparkSpec {
     val copies = docs.filter(col("doc_id") % 10 === 0)
       .withColumn("doc_id", col("doc_id") + lit(1000000L))
     val doctored = docs.unionByName(copies)
-    val docsDir = "/root/repo/target/stream-scratch/docs-dup-ordered"
+    val docsDir = "target/stream-scratch/docs-dup-ordered"
     val fs = new java.io.File(docsDir)
     if (fs.exists()) fs.listFiles().foreach(_.delete())
     copies.coalesce(1).write.mode("append").parquet(docsDir)
@@ -688,7 +723,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming semantic delta: a 4-batch replay equals the batch operator " +
       "row-for-row; the bucketed base assignment plans with zero static-side " +
       "Exchange (stream side only)") {
-    val embDir = "/root/repo/target/stream-scratch/emb-split-semdelta"
+    val embDir = "target/stream-scratch/emb-split-semdelta"
     Tables.load(spark, sf, "embeddings").repartition(4)
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_sem_delta", embDir)
@@ -762,7 +797,7 @@ class StreamingSpec extends SparkSpec {
       Array.tabulate(64)(i => if (i == hot) 1f else if (i == hot + 1) eps else 0f)
     val planted = ((0 until 12).filter(_ % 5 != 4).map(j => (j.toLong, unit(j % 8 + 8, 0f)))
       :+ (14L, unit(0, 0f)) :+ (44L, unit(0, 0.05f))).toDF("vec_id", "embedding")
-    val plantedPath = "/root/repo/target/stream-scratch/emb-planted-adv"
+    val plantedPath = "target/stream-scratch/emb-planted-adv"
     planted.coalesce(1).write.mode("overwrite").parquet(plantedPath)
     val (out2, ckpt2) = TopicStream.scratchDirs("spec_sem_adv_planted", plantedPath)
     val adv = graft.streaming.SimilarityStream.semanticDeltaAdvancingStream(
@@ -830,7 +865,7 @@ class StreamingSpec extends SparkSpec {
     // broadcast disabled: at 100 TB the corpus index cannot broadcast, so
     // this pins the sort-merge plan a big corpus actually gets
     withoutBroadcast {
-      val embDir = "/root/repo/target/stream-scratch/emb-split"
+      val embDir = "target/stream-scratch/emb-split"
       Tables.load(spark, sf, "embeddings").repartition(4)
         .write.mode("overwrite").parquet(embDir)
 
@@ -850,7 +885,7 @@ class StreamingSpec extends SparkSpec {
       assert(exchanges(pqPlan) === 1,
         s"PQ probe must shuffle only the micro-batch (1 Exchange), static index none:\n$pqPlan")
 
-      val docsDir = "/root/repo/target/stream-scratch/docs-split"
+      val docsDir = "target/stream-scratch/docs-split"
       Tables.load(spark, sf, "documents").repartition(4)
         .write.mode("overwrite").parquet(docsDir)
       val (out3, ckpt3) = TopicStream.scratchDirs("spec_plan_neardup", docsDir)
@@ -908,7 +943,7 @@ class StreamingSpec extends SparkSpec {
     val copies = docs.filter(col("doc_id") % 10 === 0)
       .withColumn("doc_id", col("doc_id") + lit(1000000L))
     val doctored = docs.unionByName(copies)
-    val docsDir = "/root/repo/target/stream-scratch/docs-dup-bounded"
+    val docsDir = "target/stream-scratch/docs-dup-bounded"
     val fs = new java.io.File(docsDir)
     if (fs.exists()) fs.listFiles().foreach(_.delete())
     copies.coalesce(1).write.mode("append").parquet(docsDir)
@@ -1037,7 +1072,7 @@ class StreamingSpec extends SparkSpec {
       24L -> tNovel, // another copy, two shards later
       29L -> (tNovel + " lambda") // near-dup of the shard-0 novel
     ).toDF("doc_id", "text")
-    val dir = "/root/repo/target/stream-scratch/delta-advance-fixture"
+    val dir = "target/stream-scratch/delta-advance-fixture"
     docs.coalesce(1).write.mode("overwrite").parquet(dir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_delta_advance", dir)
     val adv = DedupStream.snapshotDeltaAdvancingStream(spark, dir, out, ckpt,
