@@ -15,9 +15,9 @@ import graft.streaming.{AsOfStream, DedupStream, GraphStream, ImportanceStream, 
   * checks its batched union ROW FOR ROW against a reference: the batch
   * operator, or, for the watermarked and windowed twins, the
   * single-batch replay the DuckDB oracle gates. The oracles stop at
-  * driver scales; the gates carry "a streaming surface never changes
-  * answers" to sf1+, where the bucketed probes, the state stores and
-  * the foreachBatch paths take their at-scale plans.
+  * sf0.1; the gates carry "a streaming surface never changes answers"
+  * to sf1+, where the bucketed probes, the state stores and the
+  * foreachBatch paths take their at-scale plans.
   *
   * Usage: runMain graft.CheckStream <sfDir> [gate,…] (default: every
   * gate, in table order). Exits nonzero if any gate mismatches or
