@@ -72,7 +72,8 @@ object Bench {
   // cheap reused-shape rows (the adds cost +81 bytes; the drops return
   // 80, holding the 1,869-byte r15 line ~1,870 under the 2,000-byte
   // tail): sim_topk_bruteforce (the crossJoin+two-phase shape rides
-  // every rerank on the contract; recall baselines live in RecallSweep),
+  // every rerank on the contract; recall baselines are recorded in
+  // tools/scale_curves_r14–r17.jsonl),
   // events_session_window (events_sessionize + events_session_overlap
   // keep sessionization benched), dedup_embedding (dedup_embedding_cc
   // is the same banded pairs plus the components keeper; dedup_semantic

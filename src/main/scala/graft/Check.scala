@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,31 +11,67 @@ import graft.sources.{Tables, Topics}
 import graft.streaming.{AsOfStream, DedupStream, GraphStream, ImportanceStream, PcaStream,
   SimilarityStream, TopicStream}
 
-/** At-scale equality gates for the stream twins (r15–r16). Each gate
-  * replays one twin multi-batch through the file-stream transport and
-  * checks its batched union ROW FOR ROW against a reference: the batch
-  * operator, or, for the watermarked and windowed twins, the
-  * single-batch replay the DuckDB oracle gates. The oracles stop at
-  * sf0.1; the gates carry "a streaming surface never changes answers"
-  * to sf1+, where the bucketed probes, the state stores and the
-  * foreachBatch paths take their at-scale plans.
+/** The at-scale gates: every check that carries an oracle-gated answer
+  * past the scales the DuckDB oracles reach (they stop at sf0.1, some
+  * at sf1). Two kinds share one table and one harness:
   *
-  * Usage: runMain graft.CheckStream <sfDir> [gate,…] (default: every
-  * gate, in table order). Exits nonzero if any gate mismatches or
-  * throws. sf10: the scd2 state store carries ~25M keys — run with
-  * SPARK_DRIVER_MEM=48g.
+  *  - stream gates (r15–r16) replay one twin multi-batch through the
+  *    file-stream transport and check its batched union ROW FOR ROW
+  *    against a reference: the batch operator, or, for the watermarked
+  *    and windowed twins, the single-batch replay the DuckDB oracle
+  *    gates. They carry "a streaming surface never changes answers" to
+  *    sf1+, where the bucketed probes, the state stores and the
+  *    foreachBatch paths take their at-scale plans;
+  *  - replay gates (r12–r17b) rebuild a graph, dedup or PQ serving
+  *    answer on the driver from the collected edge, pair or vector
+  *    list the operator consumed ([[CheckReplays]]) and require
+  *    bit-equality, where the oracle's recursive closure or list folds
+  *    run out of memory.
+  *
+  * Usage: runMain graft.Check <sfDir> [gate,…] (default: every gate, in
+  * table order). Exits nonzero if any gate fails or throws. sf10: the
+  * scd2 state store carries ~25M keys and the kNN candidate sort needs
+  * the heap — run with SPARK_DRIVER_MEM=48g.
   */
-object CheckStream {
+object Check {
 
-  /** One gate: the columns compared, what equality means, and the two
-    * sides over an sf dir. The stream side runs first — the `mis`
-    * reference reads the edge index its stream side fitted.
+  /** One gate: a run over (session, sf dir) that prints what it compared
+    * and returns whether the two sides agree. A gate that builds a kNN
+    * edge index sets `buildsIndex`: the index's candidate sort is the
+    * run's disk and heap peak, so [[GatePreflight]] checks the box
+    * before the session starts.
     */
-  final case class Gate(name: String, cols: Seq[String], label: String,
-                        stream: (SparkSession, String) => DataFrame,
-                        reference: (SparkSession, String) => DataFrame)
+  final case class Gate(name: String, run: (SparkSession, String) => Boolean,
+                        buildsIndex: Boolean = false)
 
   private val Union = "stream union == batch"
+
+  /** A stream gate over the columns `cols`. The stream side runs first —
+    * the `mis` reference reads the edge index its stream side fitted.
+    * Each side is timed, counted and cached, then compared with
+    * [[GraftSession.sameRows]]; both are unpersisted even when a side
+    * throws.
+    */
+  def compare(name: String, cols: Seq[String], label: String,
+              stream: (SparkSession, String) => DataFrame,
+              reference: (SparkSession, String) => DataFrame): Gate =
+    Gate(name, (spark, sf) => {
+      val cached = ArrayBuffer.empty[DataFrame]
+      def timed(side: (SparkSession, String) => DataFrame): (DataFrame, Long, Double) = {
+        val t0 = System.nanoTime()
+        val df = side(spark, sf).select(cols.map(col): _*)
+        cached += df.cache()
+        (df, df.count(), (System.nanoTime() - t0) / 1e9)
+      }
+      val tag = s"[check] $name"
+      try {
+        val (got, nGot, tGot) = timed(stream)
+        val (want, nWant, tWant) = timed(reference)
+        println(f"$tag stream $nGot rows in $tGot%.1f s (fit included), " +
+          f"reference $nWant rows in $tWant%.1f s")
+        GraftSession.sameRows(tag, label, got, want)
+      } finally cached.foreach(_.unpersist())
+    })
 
   private def scratch(name: String, sfDir: String): (String, String) =
     TopicStream.scratchDirs(s"check_stream_$name", sfDir)
@@ -47,9 +84,9 @@ object CheckStream {
     * window and per-user frame closes on the same rows however the input
     * was cut, so the gate exercises the state carried across triggers.
     */
-  private def replayGate(name: String, cols: String*)(
+  private def splitGate(name: String, cols: String*)(
       run: (SparkSession, String, String, String, Option[Int]) => DataFrame): Gate =
-    Gate(name, cols, "multi-batch == single-batch",
+    compare(name, cols, "multi-batch == single-batch",
       (spark, sf) => {
         val (out, ckpt) = scratch(s"${name}_multi", sf)
         val split = TopicStream.timeOrderedSplitInput(spark, s"$sf/events.parquet", 3,
@@ -64,7 +101,7 @@ object CheckStream {
   val gates: Seq[Gate] = Seq(
     // the stream fits the edge index + MIS once, so comparing on the SAME
     // index isolates the per-trigger assignment path
-    Gate("mis", Seq("vec_id", "rep_id", "cos", "is_rep"), Union,
+    compare("mis", Seq("vec_id", "rep_id", "cos", "is_rep"), Union,
       (spark, sf) => {
         val (out, ckpt) = scratch("mis", sf)
         GraphStream.misAssignStream(spark, s"$sf/embeddings.parquet", out, ckpt,
@@ -73,7 +110,7 @@ object CheckStream {
       (spark, _) => Graph.misAssignFromIndex(spark, "graft_check_stream_mis_idx")),
     // a single-file sf table streams as ONE trigger; re-shard to 4 files
     // so the PQ-MIPS server replays genuinely multi-batch
-    Gate("sim", Seq("query_id", "corpus_id", "ip", "rnk"), Union,
+    compare("sim", Seq("query_id", "corpus_id", "ip", "rnk"), Union,
       (spark, sf) => {
         val (out, ckpt) = scratch("sim", sf)
         val embDir = s"$out-input"
@@ -87,7 +124,7 @@ object CheckStream {
     // the survivor/shingle indexes are fitted from the full corpus, so
     // every content hash is index-known and the replay is arrival-order
     // independent; the ascending-id split mirrors the production shape
-    Gate("clean", Seq("doc_id", "quality"), Union,
+    compare("clean", Seq("doc_id", "quality"), Union,
       (spark, sf) => {
         val (out, ckpt) = scratch("clean", sf)
         val split = TopicStream.orderedSplitInput(spark, s"$sf/documents.parquet", 3,
@@ -97,7 +134,7 @@ object CheckStream {
       },
       (spark, sf) => TextOps.cleanCorpus(spark.read.parquet(s"$sf/documents.parquet"))),
     // pqCodeDedupStream splits its own input into ordered chunks
-    Gate("pq_dedup", Seq("vec_id", "bucket", "codes_str", "n_same", "rep_id", "keep"), Union,
+    compare("pq_dedup", Seq("vec_id", "bucket", "codes_str", "n_same", "rep_id", "keep"), Union,
       (spark, sf) => {
         val (out, ckpt) = scratch("pq_dedup", sf)
         SimilarityStream.pqCodeDedupStream(spark, s"$sf/embeddings.parquet", out, ckpt,
@@ -106,7 +143,7 @@ object CheckStream {
       (spark, sf) => Similarity.pqCodeDedup(Tables.load(spark, sf, "embeddings"))),
     // the two stateless scoring twins: both fit offline from the full
     // corpus and score per trigger
-    Gate("importance", Seq("doc_id", "n_sh", "importance_num", "importance", "keep"), Union,
+    compare("importance", Seq("doc_id", "n_sh", "importance_num", "importance", "keep"), Union,
       (spark, sf) => {
         val (out, ckpt) = scratch("importance", sf)
         val split = TopicStream.orderedSplitInput(spark, s"$sf/documents.parquet", 3,
@@ -116,7 +153,7 @@ object CheckStream {
       },
       (spark, sf) => TextOps.importanceWeights(
         Tables.load(spark, sf, "documents"), col("doc_id") % 97 === 0)),
-    Gate("pca_score", Seq("vec_id", "proj_fp"), Union,
+    compare("pca_score", Seq("vec_id", "proj_fp"), Union,
       (spark, sf) => {
         val (out, ckpt) = scratch("pca_score", sf)
         val split = TopicStream.orderedSplitInput(spark, s"$sf/embeddings.parquet", 3,
@@ -125,14 +162,14 @@ object CheckStream {
           maxFilesPerTrigger = Some(1), embPath = Some(split))
       },
       (spark, sf) => Pca.project(Tables.load(spark, sf, "embeddings"))),
-    replayGate("session",
+    splitGate("session",
       "user_id", "session_start", "session_end", "n_events", "total_value") {
       (spark, path, out, ckpt, mf) => TopicStream.sessionizeStream(spark, path, out, ckpt, mf)
     },
     // an OFFSET-ordered 4-chunk replay (the Kafka per-partition ordering
     // contract on the file source) must emit exactly the batch history's
     // CLOSED live versions
-    Gate("scd2", Seq("topic", "partition", "key", "value", "seq",
+    compare("scd2", Seq("topic", "partition", "key", "value", "seq",
         "valid_from_offset", "valid_to_offset", "valid_from_ts", "valid_to_ts"),
       "stream union == batch closed versions",
       (spark, sf) => {
@@ -143,7 +180,7 @@ object CheckStream {
       },
       (spark, sf) => TopicOps.scd2(Topics.events(spark, sf))
         .filter(col("value").isNotNull && col("valid_to_offset").isNotNull)),
-    Gate("funnel", Seq("event_id", "user_id", "ts", "value",
+    compare("funnel", Seq("event_id", "user_id", "ts", "value",
         "click_id", "click_ts", "view_id", "view_ts", "funnel_depth"), Union,
       (spark, sf) => {
         val (out, ckpt) = scratch("funnel", sf)
@@ -164,7 +201,7 @@ object CheckStream {
           .withColumn("funnel_depth", lit(1L) +
             col("click_id").isNotNull.cast("long") + col("view_id").isNotNull.cast("long"))
       }),
-    Gate("asof", Seq("event_id", "user_id", "ts", "value",
+    compare("asof", Seq("event_id", "user_id", "ts", "value",
         "click_id", "click_ts", "click_value"), Union,
       (spark, sf) => {
         val (out, ckpt) = scratch("asof", sf)
@@ -175,56 +212,68 @@ object CheckStream {
         AsOf.joinAsOf(p, c, key = Seq("user_id"),
           leftTime = "ts", rightTime = "click_ts", tieBreak = Seq("click_id"))
       }),
-    replayGate("window", "hour", "event_type", "n_events", "total_value") {
+    splitGate("window", "hour", "event_type", "n_events", "total_value") {
       (spark, path, out, ckpt, mf) => TopicStream.windowStream(spark, path, out, ckpt, mf)
     },
-    replayGate("window_hopping", "w_start", "event_type", "n_events", "total_value") {
+    splitGate("window_hopping", "w_start", "event_type", "n_events", "total_value") {
       (spark, path, out, ckpt, mf) => TopicStream.hoppingStream(spark, path, out, ckpt, mf)
     },
-    replayGate("moving_agg", "event_id", "user_id", "cents", "running_cents",
+    splitGate("moving_agg", "event_id", "user_id", "cents", "running_cents",
       "trail5_cents", "n_seen") {
       (spark, path, out, ckpt, mf) => TopicStream.movingAggStream(spark, path, out, ckpt, mf)
-    })
+    },
+    // the driver replays: each rebuilds its operator's answer from a
+    // collected edge, pair or vector list (see CheckReplays)
+    Gate("knn_mis", CheckReplays.knnMis, buildsIndex = true),
+    Gate("card", CheckReplays.card, buildsIndex = true),
+    Gate("semdedup", CheckReplays.semDedup, buildsIndex = true),
+    Gate("components", CheckReplays.components),
+    Gate("pq", CheckReplays.pq),
+    Gate("triangle", CheckReplays.triangle, buildsIndex = true))
+
+  /** The gates `names` picks, comma-separated (every gate, in table
+    * order, when absent). An unknown name throws here, before any
+    * preflight or session.
+    */
+  def select(names: Option[String]): Seq[Gate] = names match {
+    case None => gates
+    case Some(list) => list.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { n =>
+      gates.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+        s"unknown gate '$n' (gates: ${gates.map(_.name).mkString(",")})"))
+    }
+  }
 
   def main(args: Array[String]): Unit = {
-    require(args.length == 1 || args.length == 2, "usage: CheckStream <sfDir> [gate,…]")
+    require(args.length == 1 || args.length == 2, "usage: Check <sfDir> [gate,…]")
     val sfDir = args(0)
-    val chosen =
-      if (args.length == 1) gates
-      else args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { n =>
-        gates.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-          s"unknown gate '$n' (gates: ${gates.map(_.name).mkString(",")})"))
-      }
+    val chosen = select(args.lift(1))
+    if (chosen.exists(_.buildsIndex)) GatePreflight.run(sfDir, main = "check")
     val spark = GraftSession.local()
-    val failed = chosen.filterNot(run(spark, sfDir, _)).map(_.name)
-    println(s"[check-stream] ${chosen.size - failed.size}/${chosen.size} gates pass" +
-      (if (failed.isEmpty) "" else s"; FAILED: ${failed.mkString(",")}"))
+    // quieter than WARN: Spark warnings would interleave with the verdicts
+    spark.sparkContext.setLogLevel("ERROR")
+    val failed = runAll(spark, sfDir, chosen)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** Times and counts each side, then compares them with
-    * [[GraftSession.sameRows]]. A side that throws fails the gate.
+  /** Runs `chosen` in order, timing each gate; a gate that throws fails
+    * and the next one still runs. Prints `N/M gates pass` and returns
+    * the names of the gates that failed.
     */
-  private def run(spark: SparkSession, sfDir: String, g: Gate): Boolean = {
-    val tag = s"[check-stream] ${g.name}"
-    def timed(side: (SparkSession, String) => DataFrame): (DataFrame, Long, Double) = {
+  def runAll(spark: SparkSession, sfDir: String, chosen: Seq[Gate]): Seq[String] = {
+    val failed = chosen.filterNot { g =>
       val t0 = System.nanoTime()
-      val df = side(spark, sfDir).select(g.cols.map(col): _*).cache()
-      val n = df.count()
-      (df, n, (System.nanoTime() - t0) / 1e9)
-    }
-    try {
-      val (got, nGot, tGot) = timed(g.stream)
-      val (want, nWant, tWant) = timed(g.reference)
-      println(f"$tag stream $nGot rows in $tGot%.1f s (fit included), " +
-        f"reference $nWant rows in $tWant%.1f s")
-      GraftSession.sameRows(tag, g.label, got, want)
-    } catch {
-      case NonFatal(e) =>
-        println(s"$tag FAILED: $e")
-        e.printStackTrace()
-        false
-    }
+      val ok = try g.run(spark, sfDir) catch {
+        case NonFatal(e) =>
+          println(s"[check] ${g.name} FAILED: $e")
+          e.printStackTrace()
+          false
+      }
+      println(f"[check] ${g.name} ${if (ok) "pass" else "FAIL"} in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      ok
+    }.map(_.name)
+    println(s"[check] ${chosen.size - failed.size}/${chosen.size} gates pass" +
+      (if (failed.isEmpty) "" else s"; FAILED: ${failed.mkString(",")}"))
+    failed
   }
 }

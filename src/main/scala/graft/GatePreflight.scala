@@ -1,7 +1,11 @@
 package graft
 
-/** Shared preflight for the heavy at-scale gate mains (r16 VERDICT #5):
-  * the sf10 CheckCard run died once on 16 GB of stale stream-scratch
+import java.nio.file.Files
+
+import graft.streaming.TopicStream
+
+/** Shared preflight for the heavy at-scale gates (r16 VERDICT #5): the
+  * sf10 consumer-card gate died once on 16 GB of stale stream-scratch
   * before it succeeded (~40 GB transient candidate-sort spill; ~60 GB
   * free needed) — and the root error of an undersized heap is a single
   * "Java heap space" line buried far above a cascade of
@@ -12,12 +16,6 @@ package graft
   * BEFORE the expensive build starts.
   */
 object GatePreflight {
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val fs = f.listFiles()
-    if (fs != null) fs.foreach(deleteRecursively)
-    f.delete(); ()
-  }
 
   /** The sf10 calibration point: 200,000 vectors needed ~60 GB free
     * (~40 GB of transient kNN candidate-sort spill plus margin). */
@@ -39,24 +37,26 @@ object GatePreflight {
   def embeddingRows(sfDir: String): Long =
     graft.sources.Tables.footerRowCount(s"$sfDir/embeddings.parquet")
 
-  /** Wipe stale per-run scratch, assert the usable space a gate over
-    * `sfDir` needs ([[requiredFreeGb]] of its embeddings row count) on
-    * the scratch filesystem, and print the JVM heap cap. Call before
-    * building the SparkSession (nothing here needs one).
+  /** Wipe the stale stream scratch ([[TopicStream.scratchRoot]], so
+    * `-Dgraft.stream.scratch` moves the wipe with it), assert the usable
+    * space a gate over `sfDir` needs ([[requiredFreeGb]] of its
+    * embeddings row count) on the scratch filesystem, and print the JVM
+    * heap cap. Call before building the SparkSession (nothing here needs
+    * one).
     */
   def run(sfDir: String, main: String): Unit = {
-    val scratch = new java.io.File("target/stream-scratch")
-    if (scratch.exists()) {
-      val sz = java.nio.file.Files.walk(scratch.toPath)
-        .mapToLong(p => p.toFile.length).sum() / (1024L * 1024 * 1024)
-      println(s"[$main] preflight: wiping stale target/stream-scratch (~$sz GB)")
-      deleteRecursively(scratch)
+    val scratch = TopicStream.scratchRoot
+    if (Files.exists(scratch)) {
+      val sz = Files.walk(scratch).mapToLong(p => p.toFile.length).sum() / (1024L * 1024 * 1024)
+      println(s"[$main] preflight: wiping stale $scratch (~$sz GB)")
+      TopicStream.deleteRecursively(scratch)
     }
+    Files.createDirectories(scratch)
     val nVectors = embeddingRows(sfDir)
     val minFreeGb = requiredFreeGb(nVectors)
-    val freeGb = new java.io.File("target").getUsableSpace / (1024L * 1024 * 1024)
+    val freeGb = scratch.toFile.getUsableSpace / (1024L * 1024 * 1024)
     require(freeGb >= minFreeGb,
-      s"[$main] preflight: only $freeGb GB usable under target/ but the " +
+      s"[$main] preflight: only $freeGb GB usable under $scratch but the " +
         s"gate needs >= $minFreeGb GB transient spill headroom for $nVectors " +
         s"vectors (r16: the sf10 kNN candidate sort spills ~40 GB) — free disk before gating")
     val heapGb = Runtime.getRuntime.maxMemory / (1024L * 1024 * 1024)

@@ -101,7 +101,8 @@ object ScaleGen {
   /** Driver-shaped event row (round-9 VERDICT #8): users number n/66 and
     * are drawn uniformly (the driver tables' own key shape — its top user
     * holds ~1.5× the mean, exactly a multinomial tail, not a planted hot
-    * key; SkewBench owns the adversarial hot-key remap), five uniform
+    * key; the adversarial hot-key remap is measured in SURVEY §5,
+    * round 9), five uniform
     * event types, timestamps uniform over the driver's 30-day January
     * window, value uniform to the driver's ~560 ceiling at 2 decimals,
     * props the driver's {"k": int} JSON. Everything regenerates from the

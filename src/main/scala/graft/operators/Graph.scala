@@ -33,11 +33,14 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   /** The fixed-point rank scale and round count every PageRank default
-    * rides — named so driver-side replays (CheckCard/CheckMis) reference
-    * the SAME values instead of duplicating literals (r16 ADVICE: a
-    * default change must desynchronize loudly AND point here). */
+    * rides, and the SemDeDup neighborhood threshold — named so the
+    * driver-side replays (the `knn_mis`, `card` and `semdedup` rows of
+    * graft.Check) reference the SAME values instead of duplicating
+    * literals (r16 ADVICE: a default change must desynchronize loudly
+    * AND point here). */
   private[graft] val DefaultRankScale = 1000000000000L
   private[graft] val DefaultPrRounds = 5
+  private[graft] val DefaultTau = 0.4
 
   /** Node budget for the per-round rank/degree broadcast in
     * [[pageRankAdjacency]]: below it the node-sized share table fits the
@@ -432,8 +435,8 @@ object Graph {
     if (t == 1) col("r")
     else ((col("id") % MisLcgMod) * 48271L + lit(t * 12345L)) % MisLcgMod
 
-  /** The driver-local twin of [[misPriority]] — the CheckCard/CheckMis
-    * replays call THIS instead of re-deriving the formula as local
+  /** The driver-local twin of [[misPriority]] — the Check gates' Luby
+    * replay calls THIS instead of re-deriving the formula as local
     * literals, so a change to the priority recurrence can never
     * silently desynchronize the at-scale gates (r16 ADVICE). */
   private[graft] def misPriorityValue(t: Int, id: Long, r: Long): Long =
@@ -875,7 +878,7 @@ object Graph {
   /** Build + dedup in one call — the registered `knn_semdedup` query. */
   def knnSemDeDup(emb: DataFrame, table: String = "graft_knn_semdedup",
                   k: Int = 5, probes: Int = 2,
-                  tau: Double = 0.4): DataFrame = {
+                  tau: Double = DefaultTau): DataFrame = {
     writeKnnEdgeIndex(emb, table, k, probes)
     semDeDupFromIndex(emb.sparkSession, emb, table, tau)
   }
@@ -923,7 +926,7 @@ object Graph {
   def knnSemDeDupQuality(docs: DataFrame, emb: DataFrame,
                          table: String = "graft_knn_semdedup_q",
                          k: Int = 5, probes: Int = 2,
-                         tau: Double = 0.4): DataFrame = {
+                         tau: Double = DefaultTau): DataFrame = {
     writeKnnEdgeIndex(emb, table, k, probes)
     semDeDupQualityFromIndex(emb.sparkSession, docs, emb, table, tau)
   }
@@ -937,7 +940,9 @@ object Graph {
     * ONE single-row card. This is the query shape a curation pipeline
     * actually runs (index once, read every signal), and registering it
     * makes the bench contract price the build-once marginal cost
-    * directly instead of via the BenchFromIndex dev tool.
+    * directly (the per-consumer marginals against a prebuilt index are
+    * recorded in tools/scale_curves_r14.jsonl and r15.jsonl: at sf1 the
+    * one-call rows are ~80% build).
     *
     * Every column is an integer or a fixed-point BIGINT, so the whole
     * card hash-gates against the composed oracle (rank chain + MIS
@@ -949,7 +954,7 @@ object Graph {
                             emb: DataFrame, table: String,
                             rounds: Int = DefaultPrRounds,
                             scale: Long = DefaultRankScale,
-                            tau: Double = 0.4): DataFrame = {
+                            tau: Double = DefaultTau): DataFrame = {
     import spark.implicits._
     val e = spark.table(table).select(col("src"), col("dst")).persist()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -985,7 +990,7 @@ object Graph {
   def knnConsumerCard(emb: DataFrame, table: String = "graft_knn_card",
                       k: Int = 5, probes: Int = 2, rounds: Int = DefaultPrRounds,
                       scale: Long = DefaultRankScale,
-                      tau: Double = 0.4): DataFrame = {
+                      tau: Double = DefaultTau): DataFrame = {
     writeKnnEdgeIndex(emb, table, k, probes)
     consumerCardFromIndex(emb.sparkSession, emb, table, rounds, scale, tau)
   }

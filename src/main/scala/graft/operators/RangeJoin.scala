@@ -89,17 +89,17 @@ object RangeJoin {
     * (key, band, salt) — per-task candidate work drops to 1/S of the
     * burst while every candidate pair still meets in exactly one salt
     * bucket (the left row's), so counts are identical to the plain plan
-    * (RangeJoinSpec asserts equality; SkewBench measures the straggler
-    * split). The cost is an S× replication of the (narrow: key + time +
-    * band) right index — pay it only when the burst is real; the plain
-    * plan stays the default.
+    * (RangeJoinSpec asserts equality; the straggler split is measured
+    * in SURVEY §5, the r10 flash burst). The cost is an S× replication
+    * of the (narrow: key + time + band) right index — pay it only when
+    * the burst is real; the plain plan stays the default.
     */
   /** N-ADAPTIVE salt count (round-10 VERDICT #6) — the sizedEstK shape
     * applied to skew: the burst bucket's candidate mass grows with the
     * replicated side's row count, so the salt count steps up one power
     * of two per data decade to keep per-task mass bounded, while the
     * replication overhead (S× the narrow index) stays proportionate.
-    * Anchored to SkewBench's measured mass curve at the sf0.1 burst
+    * Anchored to the measured mass curve at the sf0.1 burst (SURVEY §5)
     * (index ≈ 20k rows): each salt doubling up to S = 8 still cuts the
     * max in-bucket candidate mass ≥ 1.6× (4.01M plain → 726k at 8),
     * after which returns diminish against the S× index replication — so

@@ -268,7 +268,8 @@ object Similarity {
     * nlist riding √N with a FIXED probe count shrinks the probed
     * fraction a decade per decade (8/64 at gate scales → 8/512 at
     * 200k vectors), so recall decays with scale — measured in the r14
-    * RecallSweep (sf1 MIPS full-vector ceiling 0.4 vs 0.8 cosine).
+    * recall sweep (tools/scale_curves_r15.jsonl, sized_probes_ladder:
+    * sf1 MIPS full-vector ceiling 0.4 vs 0.8 cosine).
     * This holds probes/nlist roughly constant instead: identity at
     * every DuckDB-gated scale (nlist ≤ 128 — plans and oracles
     * unchanged through sf1), and base·(nlist/128) beyond, pinning the
@@ -287,9 +288,10 @@ object Similarity {
   /** Recall-target policy on the serving/graph probe knob (r16, r15
     * VERDICT #2): the base-probes value that [[sizedProbes]] pins as a
     * FRACTION of the codebook, named by the recall class it buys.
-    * Measured (RecallSweep + the KnnSkewBench hub sweep, r15 §7 (d)/(e)
-    * evidence): "standard" (8 → fraction 1/16 past the gates) is the
-    * registered rows' operating point; "high" (16 → fraction 1/8)
+    * Measured (the recall sweep + the planted-hub probes sweep, SURVEY
+    * §7 r15 (d)/(e); tools/scale_curves_r16.jsonl recall_target_policy):
+    * "standard" (8 → fraction 1/16 past the gates) is the registered
+    * rows' operating point; "high" (16 → fraction 1/8)
     * recovers the 0.8-recall ceiling class at DOUBLE the candidate
     * cost — candidates per query are (base/128)·N, so the price is
     * linear in the base and the choice is a pure cost/recall dial on
@@ -364,8 +366,10 @@ object Similarity {
   /** [[knnJoinIvfSized]] over a FITTED coarse book (r16, r15 VERDICT
     * #3): the graph's quantizer is the laddered fixed-point k-means
     * ([[fitCentroids]]) instead of the random LCG book — the
-    * KnnSkewBench side-finding was that tight clusters do NOT co-bucket
-    * under a random book (382/500 planted spokes probed the hub's
+    * planted-hub finding (SURVEY §5 kNN-edge hub skew;
+    * tools/scale_curves_r15.jsonl hub_recall_probes_sweep) was that
+    * tight clusters do NOT co-bucket under a random book (382/500
+    * planted spokes probed the hub's
     * bucket at probes=2), so graph recall on clustered corpora runs
     * silently below the isotropic measurement. Same candidate/score/
     * rerank plan; only the bucket geometry adapts to the data. OPT-IN:
@@ -865,7 +869,8 @@ object Similarity {
   }
 
   /** The PQ shortlist's N-ADAPTIVE width (r14 — measured, not assumed:
-    * the RecallSweep evidence shows recall at a FIXED k·4 shortlist
+    * the recall sweep in tools/scale_curves_r14.jsonl (N-adaptive PQ
+    * refine ladder) shows recall at a FIXED k·4 shortlist
     * falls ever further below the probe ceiling as bucket population
     * grows — sf1 cosine-PQ 0.11 vs the 0.80 ceiling, still climbing at
     * refine=16 — because the PQ approximation's rank noise scales with
@@ -1260,8 +1265,9 @@ object Similarity {
     * histogram (err < 0.1 / < 0.5 / ≥ 0.5 — integer counts, order-free).
     * The r16/r17 lesson made measurable in-engine: MSE and recall can
     * DISAGREE (the resfit book halved MSE and halved recall), so the
-    * card pairs with RecallSweep rather than replacing it — but a book
-    * whose error histogram collapses into the high band is flagged
+    * card pairs with the recall measurements (tools/scale_curves_r16–
+    * r17.jsonl) rather than replacing them — but a book whose error
+    * histogram collapses into the high band is flagged
     * before any recall sweep runs. Scan-shaped: one fused kernel call
     * per (vector, book), a single aggregate, zero joins or shuffles
     * beyond the one regroup.
@@ -1573,7 +1579,8 @@ object Similarity {
     // the sizing count is the whole table (the knnJoinIvfSized shape,
     // mirrored by the oracle's `FROM embeddings` in mnlsizing); probes
     // ride the sizedProbes ladder with nlist so the probed fraction —
-    // and the recall ceiling RecallSweep tracks — holds with scale
+    // and the recall ceiling in tools/scale_curves_r15.jsonl
+    // (sized_probes_ladder) — holds with scale
     val n = Tables.rowCount(emb)
     mipsIvfTopKNlist(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n))
   }

@@ -169,8 +169,9 @@ object PipelineQueries {
         .orderBy(col("vec_id"))),
     // PQ quantization-error decision card (r17b): both registered book
     // shapes scored against the shared laddered coarse fit — the
-    // in-engine twin of the driver-side MSE sweeps (paired with
-    // RecallSweep: MSE and recall can DISAGREE — the resfit lesson).
+    // in-engine twin of the driver-side MSE sweeps (paired with the
+    // recall sweeps: MSE and recall can DISAGREE — the resfit lesson,
+    // tools/scale_curves_r16.jsonl).
     "pq_error_card" -> ((s, dir) =>
       Similarity.pqErrorCard(Tables.load(s, dir, "embeddings"))),
     "sim_topk_bruteforce" -> ((s, dir) =>
@@ -388,7 +389,8 @@ object PipelineQueries {
     // the kNN GRAPH BUILD over the fitted laddered book (r17, r16
     // VERDICT #3): identical candidate/score/rerank plan to
     // sim_knn_join_ivf — only the bucket geometry adapts to the data.
-    // The KnnSkewBench evidence: the planted 500-spoke hub is recovered
+    // The planted-hub evidence (tools/scale_curves_r16.jsonl,
+    // knn_graph_fitted_book_hub_recall): the 500-spoke hub is recovered
     // 499/500 at probes=2 vs the LCG book's 382/500 (tight clusters do
     // NOT co-bucket under a random book).
     "sim_knn_join_ivf_fitted" -> ((s, dir) =>

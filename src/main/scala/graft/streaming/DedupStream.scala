@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import graft.sources.Bucketing
+import graft.sources.{Bucketing, Tables}
 
 /** Streaming set-similarity join: near-dup detection ON INGEST — the shape
   * a training-data pipeline actually needs ("is this newly crawled doc a
@@ -306,7 +306,7 @@ object DedupStream {
     graft.functions.NativeHash.register(spark)
     val isNew = col("doc_id") % 5 === 4
     val docs = spark.read.parquet(docsPath)
-    val kEst = Dedup.sizedEstK(docs.count())
+    val kEst = Dedup.sizedEstK(Tables.rowCount(docs))
     val minMatches = math.ceil(kEst * tau / 2).toLong
     writeDeltaIndexes(docs.filter(!isNew), kEst, tablePrefix)
     val splitDir = TopicStream.orderedSplitInput(spark, docsPath, splits,
@@ -403,7 +403,7 @@ object DedupStream {
     graft.functions.NativeHash.register(spark)
     val isNew = col("doc_id") % 5 === 4
     val docs = spark.read.parquet(docsPath)
-    val kEst = Dedup.sizedEstK(docs.count())
+    val kEst = Dedup.sizedEstK(Tables.rowCount(docs))
     val minMatches = math.ceil(kEst * tau / 2).toLong
     val chunk = docs.agg(max(col("doc_id"))).head().getLong(0) / splits + 1
     writeDeltaIndexes(docs.filter(!isNew), kEst, tablePrefix)

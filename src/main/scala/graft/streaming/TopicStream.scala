@@ -835,16 +835,19 @@ object TopicStream {
   def readBatchedOutput(spark: SparkSession, outDir: String): DataFrame =
     spark.read.option("recursiveFileLookup", "true").parquet(outDir)
 
-  /** Fresh scratch area per (queryName, input) under `target/stream-scratch`
+  /** The root every stream scratch area lives under: `target/stream-scratch`
     * of the working directory (sbt's run and test JVMs start in the
     * project base), so two checkouts never share checkpoints;
-    * `-Dgraft.stream.scratch` overrides the root. Wiped on entry so reruns
-    * don't resume stale checkpoints.
+    * `-Dgraft.stream.scratch` overrides it.
+    */
+  def scratchRoot: Path = Paths.get(sys.props.getOrElse("graft.stream.scratch",
+    "target/stream-scratch")).toAbsolutePath
+
+  /** Fresh scratch area per (queryName, input) under [[scratchRoot]].
+    * Wiped on entry so reruns don't resume stale checkpoints.
     */
   def scratchDirs(name: String, inputPath: String): (String, String) = {
-    val base = Paths.get(sys.props.getOrElse("graft.stream.scratch",
-      "target/stream-scratch")).toAbsolutePath
-    val leaf = base.resolve(s"$name-${math.abs(inputPath.hashCode).toString}")
+    val leaf = scratchRoot.resolve(s"$name-${math.abs(inputPath.hashCode).toString}")
     deleteRecursively(leaf)
     Files.createDirectories(leaf)
     (leaf.resolve("out").toString, leaf.resolve("checkpoint").toString)

@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.TopicStream
 
 /** The gate preflight's disk demand scales with the input it gates. */
 class GatePreflightSpec extends AnyFunSuite {
@@ -23,5 +27,31 @@ class GatePreflightSpec extends AnyFunSuite {
     val n = GatePreflight.embeddingRows(SparkSpec.Sf)
     assert(n === 500L)
     assert(GatePreflight.requiredFreeGb(n) === 1L)
+  }
+
+  test("the preflight wipes the scratch root -Dgraft.stream.scratch names, and nothing else") {
+    val tmp = Files.createTempDirectory("graft-preflight")
+    val stale = Files.createDirectories(tmp.resolve("scratch/old-run")).resolve("part-0")
+    Files.writeString(stale, "stale")
+    val sibling = Files.writeString(tmp.resolve("keep.txt"), "keep")
+    // the default root must survive a wipe of the overridden one
+    val marker = Files.createDirectories(Paths.get("target/stream-scratch"))
+      .resolve("gate-preflight-spec-marker")
+    Files.writeString(marker, "keep")
+    val prev = sys.props.get("graft.stream.scratch")
+    sys.props("graft.stream.scratch") = tmp.resolve("scratch").toString
+    try {
+      GatePreflight.run(SparkSpec.Sf, main = "spec")
+      assert(!Files.exists(stale), "the overridden root keeps its stale scratch")
+      assert(Files.exists(sibling))
+      assert(Files.exists(marker), "the default root was wiped instead")
+    } finally {
+      prev match {
+        case Some(v) => sys.props("graft.stream.scratch") = v
+        case None => sys.props.remove("graft.stream.scratch")
+      }
+      Files.deleteIfExists(marker)
+      TopicStream.deleteRecursively(tmp)
+    }
   }
 }

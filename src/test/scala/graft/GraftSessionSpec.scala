@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 /** The one session bootstrap: its environment parse, the guard that keeps
   * every main on it, the config the spec suite inherits from it, and the
-  * row-equality check the CheckStream gates share.
+  * row-equality check the graft.Check stream gates share.
   */
 class GraftSessionSpec extends SparkSpec {
 
